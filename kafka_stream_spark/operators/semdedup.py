@@ -227,8 +227,10 @@ def _probe_assignments(e: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
     # exchange.  struct ordering ASC over ((-rounded cosine), cid)
     # == the window's (cscore DESC, cid ASC); a NULL cscore
     # (try_divide by a 0 norm) maps to +Infinity so it still sorts
-    # LAST, matching desc NULLS LAST.  posexplode's 0-based position
-    # + 1 is exactly the window's prn.
+    # LAST, matching desc NULLS LAST, and a NaN cscore (NaN vector
+    # values; Spark orders NaN above every double) maps to -Infinity
+    # so it sorts FIRST, as under desc.  posexplode's 0-based
+    # position + 1 is exactly the window's prn.
     from ..session import default_parallelism
 
     cent_arr = F.broadcast(
@@ -241,7 +243,8 @@ def _probe_assignments(e: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
     )
     probe_expr = (
         f"transform(slice(array_sort(transform(_cents, "
-        f"c -> struct(coalesce((-round({cos}, 6)), "
+        f"c -> struct(coalesce(nanvl(-round({cos}, 6), "
+        f"CAST('-Infinity' AS DOUBLE)), "
         f"CAST('Infinity' AS DOUBLE)) AS ns, c.cid AS cid))), "
         f"1, {int(nprobe)}), s -> s.cid)"
     )

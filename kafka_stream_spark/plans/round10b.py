@@ -404,9 +404,10 @@ def q_sprt_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-linear, no state beyond two counters per arena (which is
     why it also has a streaming face, run_streaming_sprt).
 
-    The streaming twin (streaming/pipeline.run_streaming_sprt) folds
-    only NEW events per micro-batch and freezes the decision at the
-    crossing — incremental ≡ batch pinned by pytest."""
+    The streaming twin (streaming/pipeline.sprt_state_fold under
+    versioned_fold_batch_fn) folds only NEW events per micro-batch
+    and freezes the decision at the crossing — incremental ≡ batch
+    pinned by pytest."""
     e = load(spark, sf_dir, "events")
     seq = e.select(
         "event_type",

@@ -175,7 +175,7 @@ def space_saving_fold(stream, k: int, state=None):
     slot had when the new item took it — true frequency of a reported
     item lies in [count − err, count] (Metwally et al. Thm 3.1).
     Shared by the batch query, its pytest bound-check, and the
-    streaming store (streaming/pipeline.run_streaming_space_saving) —
+    streaming store (streaming/pipeline.space_saving_state_fold) —
     ``state`` resumes from prior (items, counts, errs) lists so
     incremental == batch is an identity."""
     if state is not None:

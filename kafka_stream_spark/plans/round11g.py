@@ -49,7 +49,7 @@ def bocpd_fold(xs, r: int = _BOCPD_R, h: int = _BOCPD_H, state=None):
     capped slot's own sufficient stats (the continuing-run
     hypothesis); mass from the slot below merges in.  Shared by the
     batch query, its pytest recount, and the streaming store
-    (streaming/pipeline.run_streaming_bocpd) — ``state`` resumes the
+    (streaming/pipeline.bocpd_state_fold) — ``state`` resumes the
     fold from a prior (mass, ns, ones, cp, prev_map) tuple so
     incremental == batch is an identity."""
     if state is not None:

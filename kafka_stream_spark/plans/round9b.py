@@ -603,7 +603,7 @@ _ELO_INIT = 1000000  # milli-points (1000.000)
 # applied identically on both sides, so the order-dependent fold semantics
 # under test are unchanged; the UNBOUNDED fold stays exercised by the
 # streaming-store parity tests (tests/test_streaming.py) which compare
-# run_streaming_elo against the uncapped elo_ratings_df.
+# the elo_state_fold store against the uncapped elo_ratings_df.
 _ELO_GATE_GAMES = 300
 
 _ELO_ORACLE = f"""
@@ -681,7 +681,8 @@ _ELO_ORACLE = f"""
 def elo_fold(games, r: list[int], ngames: list[int]) -> None:
     """Fold ordered games (pa, pb, s2) into milli-point ratings IN
     PLACE — exact integer arithmetic shared by the batch query and
-    the streaming store (streaming/pipeline.run_streaming_elo).
+    the streaming store (streaming/pipeline.elo_state_fold, run per
+    micro-batch by versioned_fold_batch_fn).
 
     The expected score uses the Bradley-Terry form e = ra/(ra+rb)
     (Elo IS the logistic-link BT online update; the rational link

@@ -17,6 +17,20 @@ writes (kafka_s.py:149-161,343-345) with Structured Streaming:
 Scale: state is one 16-byte key per seen record (bounded by watermark in
 event-time deployments); sinks write append-only parquet partitions; the
 enrichment itself is the same zero-shuffle broadcast plan as batch.
+
+Stream contract: every ``run_*`` stream here is exactly-once from a
+replayable source, a checkpoint and idempotent stores, spelled once:
+
+- ``_drain`` starts a query with its checkpoint under the availableNow
+  trigger (drain what the source holds, then stop); it is the only
+  ``writeStream`` site besides the never-ending ``run_cdcgen_pipeline``;
+- ``overwrite_partitions`` is the one dynamic-partition-overwrite
+  write: a replayed micro-batch rewrites its own partitions
+  (``idempotent_upsert`` keys them by batch_id);
+- ``merged_store_apply`` (mergeable partials) and
+  ``versioned_fold_batch_fn`` (order-dependent state folds) commit
+  read-modify-write stores as ``v=<batch_id>`` versions, skipping a
+  replay of a committed batch.
 """
 
 from __future__ import annotations
@@ -32,6 +46,49 @@ from ..boards import NEEQ, BoardConfig
 from ..functions import decode, keys, rules
 from ..sources import dims
 from .sources import file_cdc_stream
+
+#: read schemas of the testdata tables the streams consume
+_EVENTS_CORE_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double"
+)
+_EVENTS_SCHEMA = _EVENTS_CORE_SCHEMA + ", props string"
+_DOCS_SCHEMA = (
+    "doc_id long, text string, lang string, source string, n_chars long"
+)
+_VECS_SCHEMA = "vec_id long, embedding array<float>, label int"
+
+
+def _drain(
+    df: DataFrame, sink, checkpoint_dir: str, output_mode: str = "append"
+) -> StreamingQuery:
+    """Start ``df`` as a checkpointed availableNow query: drain what the
+    source holds now, then stop. ``sink`` is a foreachBatch body
+    ``(batch, batch_id) -> None`` or, as a string, the directory of a
+    parquet file sink."""
+    writer = df.writeStream.outputMode(output_mode)
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("parquet").option("path", sink)
+    return (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def overwrite_partitions(df: DataFrame, path: str, *cols: str) -> None:
+    """Parquet write that replaces only the ``cols`` partitions present
+    in ``df`` (dynamic partition overwrite) and leaves the rest of
+    ``path`` untouched — rewriting a partition is idempotent, so a
+    replayed micro-batch overwrites its own earlier attempt."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*cols)
+        .parquet(path)
+    )
 
 
 def store_read(
@@ -166,6 +223,29 @@ def merged_store_apply(
     merged = part if existing is None else combine(existing, part)
     merged_store_write(merged, store_dir, batch_id)
     return True
+
+
+def versioned_fold_batch_fn(store_dir: str, state_fold):
+    """foreachBatch body of an ORDER-DEPENDENT versioned store (Elo,
+    SPRT, BOCPD, Space-Saving, theta): fold the batch into the latest
+    committed state with ``state_fold(existing | None, batch) ->
+    DataFrame`` and commit the result as a new version. A replay of a
+    committed batch is a no-op (``merged_store_last_applied`` guard);
+    an uncommitted one re-folds from the prior version. Exported so
+    tests can replay a batch_id and simulate both crash windows."""
+
+    def fold(batch: DataFrame, batch_id: int) -> None:
+        if (
+            last := merged_store_last_applied(store_dir)
+        ) is not None and last >= batch_id:
+            return  # foreachBatch replay of a committed batch
+        existing = merged_store_read(batch.sparkSession, store_dir)
+        # materialize BEFORE overwriting: the fold reads the version
+        # it is about to supersede
+        new_state = state_fold(existing, batch).localCheckpoint(eager=True)
+        merged_store_write(new_state, store_dir, batch_id)
+
+    return fold
 
 
 def additive_combine(keys: list[str], sums: list[str]):
@@ -307,21 +387,20 @@ def _fan_out(sinks: SinkPaths):
         batch = batch.withColumn("__batch_id", F.lit(batch_id))
         batch.persist()
         try:
-
-            def write(df: DataFrame, path: str) -> None:
-                (
-                    df.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(path)
-                )
-
-            write(batch, sinks.announcements)
+            overwrite_partitions(batch, sinks.announcements, "__batch_id")
             # sentiment sink: same rows, reference writes a 34-col variant
             # (kafka_s.py:513-556); here the projection difference
-            write(batch.drop("url", "publish_date"), sinks.sentiment)
+            overwrite_partitions(
+                batch.drop("url", "publish_date"),
+                sinks.sentiment,
+                "__batch_id",
+            )
             # keystore sink (Mongo analog): only the dedup keys
-            write(batch.select("only_id", "yqid", "__batch_id"), sinks.keystore)
+            overwrite_partitions(
+                batch.select("only_id", "yqid", "__batch_id"),
+                sinks.keystore,
+                "__batch_id",
+            )
         finally:
             batch.unpersist()
 
@@ -348,12 +427,7 @@ def run_board_stream(
     # D1: at-least-once duplicates (and data-level replays) collapse on
     # the deterministic key; state = seen yqids, checkpoint-persisted
     deduped = enriched.dropDuplicates(["only_id"])
-    return (
-        deduped.writeStream.foreachBatch(_fan_out(sinks))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(deduped, _fan_out(sinks), checkpoint_dir)
 
 
 def run_dlq_stream(
@@ -393,20 +467,10 @@ def run_dlq_stream(
     )
 
     def write(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(dlq_dir)
-        )
+        batch = batch.withColumn("__batch_id", F.lit(batch_id))
+        overwrite_partitions(batch, dlq_dir, "__batch_id")
 
-    return (
-        dead.writeStream.foreachBatch(write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(dead, write, checkpoint_dir)
 
 
 def run_continuous_rollup(
@@ -428,12 +492,7 @@ def run_continuous_rollup(
     equals the full-history aggregate without recomputing it. On a
     MERGE-capable table format (Delta/Iceberg) the same upsert keys on
     (window, type) without one directory per pair."""
-    ev = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .parquet(input_dir)
-    )
+    ev = spark.readStream.schema(_EVENTS_CORE_SCHEMA).parquet(input_dir)
     agg = (
         ev.groupBy(F.window("ts", "1 hour"), F.col("event_type"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
@@ -447,20 +506,9 @@ def run_continuous_rollup(
     )
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("window_key", "event_type")
-            .parquet(out_dir)
-        )
+        overwrite_partitions(batch, out_dir, "window_key", "event_type")
 
-    return (
-        agg.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(agg, upsert, checkpoint_dir, "update")
 
 
 #: fixed sketch geometry for the streaming quantile store — bounds must
@@ -512,12 +560,7 @@ def run_streaming_quantile_sketch(
     always equals the full-history histogram — pytest proves
     incremental == batch after every arrival wave — which is how a
     100 TB pipeline serves percentile dashboards without rescanning."""
-    ev = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .parquet(input_dir)
-    )
+    ev = spark.readStream.schema(_EVENTS_CORE_SCHEMA).parquet(input_dir)
     agg = (
         ev.select(sketch_bucket(F.col("value")).alias("b"))
         .groupBy("b")
@@ -525,20 +568,9 @@ def run_streaming_quantile_sketch(
     )
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("b")
-            .parquet(out_dir)
-        )
+        overwrite_partitions(batch, out_dir, "b")
 
-    return (
-        agg.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(agg, upsert, checkpoint_dir, "update")
 
 
 def run_windowed_event_stream(
@@ -552,12 +584,7 @@ def run_windowed_event_stream(
     event stream with a watermark for late data. Append mode emits a
     window only once its end passes the watermark — exactly-once final
     results, bounded state."""
-    ev = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .parquet(input_dir)
-    )
+    ev = spark.readStream.schema(_EVENTS_CORE_SCHEMA).parquet(input_dir)
     agg = (
         ev.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
@@ -569,14 +596,7 @@ def run_windowed_event_stream(
             "sum_value",
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(agg, out_dir, checkpoint_dir)
 
 
 def run_stream_stream_join(
@@ -608,9 +628,8 @@ def run_stream_stream_join(
     row sits in state. Outer results are therefore watermark-delayed by
     construction, the price of exactly-once null emission.
     """
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
     clicks = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_EVENTS_CORE_SCHEMA)
         .parquet(clicks_dir)
         .withWatermark("ts", watermark)
         .select(
@@ -620,7 +639,7 @@ def run_stream_stream_join(
         )
     )
     purchases = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_EVENTS_CORE_SCHEMA)
         .parquet(purchases_dir)
         .withWatermark("ts", watermark)
         .select(
@@ -643,14 +662,7 @@ def run_stream_stream_join(
         F.col("p_user_id").alias("user_id"), "click_id", "purchase_id",
         "click_ts", "purchase_ts", "purchase_value",
     )
-    return (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(joined, out_dir, checkpoint_dir)
 
 
 def run_scd2_stream(
@@ -674,12 +686,7 @@ def run_scd2_stream(
     a few thousand buckets, maintenance cost tracks batch size, not
     dimension size. On Delta/Iceberg the same logic is a MERGE keyed on
     (user_id, event_type, valid_from)."""
-    ev = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .parquet(input_dir)
-    )
+    ev = spark.readStream.schema(_EVENTS_CORE_SCHEMA).parquet(input_dir)
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         if not batch.take(1):
@@ -723,20 +730,9 @@ def run_scd2_stream(
             "bucket",
         ).localCheckpoint(eager=True)  # materialize BEFORE overwriting the
         # same files the plan reads (read-modify-write on one path)
-        (
-            scd2.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(store_dir)
-        )
+        overwrite_partitions(scd2, store_dir, "bucket")
 
-    return (
-        ev.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(ev, upsert, checkpoint_dir)
 
 
 def run_streaming_near_dedup(
@@ -774,15 +770,12 @@ def run_streaming_near_dedup(
     replay (restart between sink write and checkpoint commit) overwrites
     its previous attempt instead of double-appending — pytest replays a
     batch and pins store and results unchanged."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(input_dir)
+    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
 
-    return (
-        docs.writeStream.foreachBatch(near_dedup_batch_fn(store_dir, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        docs,
+        near_dedup_batch_fn(store_dir, out_dir),
+        checkpoint_dir,
     )
 
 
@@ -898,9 +891,7 @@ def run_streaming_corpus_build(
         grams_of,
     )
 
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(input_dir)
+    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
 
     bench_dir = os.path.join(state_dir, "bench_grams")
     doc_grams_dir = os.path.join(state_dir, "doc_grams")
@@ -988,12 +979,7 @@ def run_streaming_corpus_build(
             "overwrite"
         ).parquet(out_dir)
 
-    return (
-        docs.writeStream.foreachBatch(build_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(docs, build_batch, checkpoint_dir)
 
 
 def run_streaming_mixture_counts(
@@ -1015,28 +1001,15 @@ def run_streaming_mixture_counts(
     pytest pins store-derived weights == the batch q_mixture_weights on
     documents-so-far after every wave (mixture_weights_from_counts is
     the shared read-side arithmetic)."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(input_dir)
+    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
     agg = docs.groupBy("source", "lang").agg(
         F.count("*").alias("n"), F.sum("n_chars").alias("chars")
     )
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("source", "lang")
-            .parquet(out_dir)
-        )
+        overwrite_partitions(batch, out_dir, "source", "lang")
 
-    return (
-        agg.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(agg, upsert, checkpoint_dir, "update")
 
 
 def mixture_weights_from_counts(counts: DataFrame) -> DataFrame:
@@ -1076,10 +1049,7 @@ def run_streaming_process_map(
     events-so-far after every wave."""
     from ..plans.round4t import dfg_edges, dfg_partials
 
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         part = dfg_partials(dfg_edges(batch))
@@ -1090,13 +1060,7 @@ def run_streaming_process_map(
             additive_combine(["src", "dst"], ["n", "dur_sum", "dur_n"]),
         )
 
-    return (
-        events.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events, upsert, checkpoint_dir)
 
 
 def run_streaming_kmv(
@@ -1134,13 +1098,7 @@ def run_streaming_kmv(
             ),
         )
 
-    return (
-        li.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(li, upsert, checkpoint_dir)
 
 
 def run_streaming_semantic_dedup(
@@ -1185,17 +1143,12 @@ def run_streaming_semantic_dedup(
     overwrite, the ``idempotent_upsert`` recipe) with reads excluding
     the in-flight batch's partition — a foreachBatch replay overwrites
     its previous attempt instead of double-appending."""
-    emb = spark.readStream.schema(
-        "vec_id long, embedding array<float>, label int"
-    ).parquet(input_dir)
+    emb = spark.readStream.schema(_VECS_SCHEMA).parquet(input_dir)
 
-    return (
-        emb.writeStream.foreachBatch(
-            semantic_dedup_batch_fn(centroids_dir, store_dir, out_dir, tau)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        emb,
+        semantic_dedup_batch_fn(centroids_dir, store_dir, out_dir, tau),
+        checkpoint_dir,
     )
 
 
@@ -1294,16 +1247,9 @@ def run_streaming_heavy_hitters(
     any batch_id at or below the last committed version — an additive
     store must never apply a replayed batch twice (pytest replays a
     batch and pins the counts unchanged)."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(input_dir)
+    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
 
-    return (
-        docs.writeStream.foreachBatch(heavy_hitters_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(docs, heavy_hitters_batch_fn(store_dir), checkpoint_dir)
 
 
 def heavy_hitters_batch_fn(store_dir: str):
@@ -1357,10 +1303,7 @@ def run_streaming_late_router(
     Deterministic for a fixed arrival-wave order (the hwm is a max —
     order-insensitive WITHIN a batch), so pytest replays waves and
     pins the exact split."""
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_CORE_SCHEMA).parquet(input_dir)
 
     def route(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession
@@ -1399,12 +1342,7 @@ def run_streaming_late_router(
             # rest or the state read degrades with stream age
             prune_batch_partitions(state_dir, batch_id)
 
-    return (
-        events.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events, route, checkpoint_dir)
 
 
 def idempotent_upsert(batch: DataFrame, batch_id: int, out_dir: str) -> None:
@@ -1417,18 +1355,9 @@ def idempotent_upsert(batch: DataFrame, batch_id: int, out_dir: str) -> None:
     an append-only file sink effectively exactly-once without a
     transactional table format; with one, the same batch_id becomes
     the transaction's idempotency key (txnAppId/txnVersion)."""
-    sess = batch.sparkSession
-    prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            batch.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-    finally:
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite_partitions(
+        batch.withColumn("batch_id", F.lit(batch_id)), out_dir, "batch_id"
+    )
 
 
 def run_streaming_idempotent_sink(
@@ -1440,10 +1369,7 @@ def run_streaming_idempotent_sink(
     """Streaming wrapper for ``idempotent_upsert``: per-event-type
     counts per micro-batch written exactly-once-per-batch. pytest
     replays a batch function call and pins zero duplication."""
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_CORE_SCHEMA).parquet(input_dir)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         agg = batch.groupBy("event_type").agg(
@@ -1452,12 +1378,7 @@ def run_streaming_idempotent_sink(
         )
         idempotent_upsert(agg, batch_id, out_dir)
 
-    return (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events, sink, checkpoint_dir)
 
 
 def run_streaming_image_dedup(
@@ -1482,9 +1403,7 @@ def run_streaming_image_dedup(
     from ..operators.jpeg import encode_jpeg
     from ..operators.multimodal import perceptual_hash
 
-    emb = spark.readStream.schema(
-        "vec_id long, embedding array<float>, label int"
-    ).parquet(input_dir)
+    emb = spark.readStream.schema(_VECS_SCHEMA).parquet(input_dir)
 
     def dedup_batch(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession
@@ -1587,12 +1506,7 @@ def run_streaming_image_dedup(
         idempotent_upsert(pairs, batch_id, out_dir)
         idempotent_upsert(bands, batch_id, store_dir)
 
-    return (
-        emb.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(emb, dedup_batch, checkpoint_dir)
 
 
 def run_streaming_dedup_within_watermark(
@@ -1616,21 +1530,11 @@ def run_streaming_dedup_within_watermark(
     At 100 TB/day the same topology holds: state is hash-partitioned
     by key across executors and each partition evicts independently on
     the global watermark."""
-    ev = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double"
-    ).parquet(input_dir)
+    ev = spark.readStream.schema(_EVENTS_CORE_SCHEMA).parquet(input_dir)
     dd = ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    return (
-        dd.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(dd, out_dir, checkpoint_dir)
 
 
 def read_stream_state(spark: SparkSession, checkpoint_dir: str):
@@ -1681,19 +1585,14 @@ def run_streaming_semantic_dedup_routed(
     (vec_id, cell, emb, nrm); store and result log are
     batch_id-partitioned (idempotent_upsert) so foreachBatch replays
     overwrite their own attempt."""
-    emb = spark.readStream.schema(
-        "vec_id long, embedding array<float>, label int"
-    ).parquet(input_dir)
+    emb = spark.readStream.schema(_VECS_SCHEMA).parquet(input_dir)
 
-    return (
-        emb.writeStream.foreachBatch(
-            semantic_dedup_routed_batch_fn(
-                centroids_dir, store_dir, out_dir, tau, nprobe
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        emb,
+        semantic_dedup_routed_batch_fn(
+            centroids_dir, store_dir, out_dir, tau, nprobe
+        ),
+        checkpoint_dir,
     )
 
 
@@ -1787,16 +1686,9 @@ def run_streaming_lm_counts(
     replay. pytest pins store counts equal
     to batch counts and store-driven scoring equal to the batch
     q_stupid_backoff on documents-so-far after every wave."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(input_dir)
+    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
 
-    return (
-        docs.writeStream.foreachBatch(lm_counts_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(docs, lm_counts_batch_fn(store_dir), checkpoint_dir)
 
 
 def lm_counts_batch_fn(store_dir: str):
@@ -1877,16 +1769,11 @@ def run_streaming_sequence_pack(
     regenerate assignments from the PRE-batch state even when its own
     crashed attempt already committed the post-batch version. The
     default keep=2 version retention exists exactly for this read."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(input_dir)
-    return (
-        docs.writeStream.foreachBatch(
-            sequence_pack_batch_fn(out_dir, state_dir, budget, n_buckets)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
+    return _drain(
+        docs,
+        sequence_pack_batch_fn(out_dir, state_dir, budget, n_buckets),
+        checkpoint_dir,
     )
 
 
@@ -2136,6 +2023,8 @@ def run_cdcgen_pipeline(
         .option("batch_size", str(batch_size))
         .load()
     )
+    # not _drain: availableNow would wait for a source that never ends,
+    # so this query runs on the default trigger until the caller stops it
     return (
         stream.writeStream.foreachBatch(
             cdcgen_batch_fn(out_dir, state_dir, fail_flag)
@@ -2163,10 +2052,7 @@ def run_streaming_grpo_moments(
     continuously, and the advantage job must not rescan the full
     reward history per batch. pytest pins store-derived advantages ==
     the batch q_grpo_advantage on events-so-far after every wave."""
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
 
     # the per-batch PARTIAL is aggregated inside foreachBatch from the
     # raw rows — NOT as a streaming groupBy upstream: update-mode
@@ -2190,12 +2076,7 @@ def run_streaming_grpo_moments(
             additive_combine(["user_id"], ["s1c", "s2c", "n"]),
         )
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events, fold, checkpoint_dir)
 
 
 def grpo_from_moments(events: DataFrame, moments: DataFrame) -> DataFrame:
@@ -2283,10 +2164,7 @@ def run_streaming_best_of_n(
     ``best_of_n_from_store`` the pair equals the batch q_best_of_n on
     events-so-far bit-for-bit: the top-2 merge compares doubles (never
     sums), and the bar divides associative integer sums."""
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         from pyspark.sql.window import Window as W
@@ -2320,12 +2198,7 @@ def run_streaming_best_of_n(
             bar, bar_dir, batch_id, additive_combine(["k"], ["s1c", "n"])
         )
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events, fold, checkpoint_dir)
 
 
 def best_of_n_from_store(top2: DataFrame, bar: DataFrame) -> DataFrame:
@@ -2367,10 +2240,7 @@ def run_streaming_pass_counts(
     Per-batch partials aggregate inside foreachBatch from raw rows
     (never an upstream update-mode streaming groupBy — that emits
     CUMULATIVE state and an additive store would double-count)."""
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         from ..plans.round9 import _PASS_THRESH
@@ -2383,12 +2253,7 @@ def run_streaming_pass_counts(
             part, store_dir, batch_id, additive_combine(["user_id"], ["n", "c"])
         )
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events, fold, checkpoint_dir)
 
 
 def pass_at_k_from_store(counts: DataFrame) -> DataFrame:
@@ -2414,10 +2279,7 @@ def run_streaming_data_map(
     training-dynamics monitor a curation service keeps warm: the
     easy/ambiguous/hard quadrants update per micro-batch without
     rescanning history."""
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         from ..plans.round9 import _DM_THRESH
@@ -2437,12 +2299,7 @@ def run_streaming_data_map(
             additive_combine(["user_id", "d"], ["n_pass", "n"]),
         )
 
-    return (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events, fold, checkpoint_dir)
 
 
 def data_map_from_store(cells: DataFrame) -> DataFrame:
@@ -2467,9 +2324,7 @@ def run_streaming_funnel(
     This is the data-quality dashboard a crawl ingester keeps warm:
     which filter is eating the feed, per micro-batch, without
     rescanning history."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(input_dir)
+    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         from ..plans.round9 import funnel_stage_counts
@@ -2482,12 +2337,7 @@ def run_streaming_funnel(
             additive_combine(["stage"], ["n_docs", "n_chars_s"]),
         )
 
-    return (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(docs, fold, checkpoint_dir)
 
 
 def funnel_from_store(cells: DataFrame) -> DataFrame:
@@ -2521,38 +2371,13 @@ def run_streaming_elo(
     Scale: state is 8 ratings + 1 carry row per arena — O(arenas),
     independent of history; each batch shuffles only its own events
     once (the cogroup), never rescans the log."""
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
 
-    return (
-        events.writeStream.foreachBatch(elo_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        events,
+        versioned_fold_batch_fn(store_dir, elo_state_fold),
+        checkpoint_dir,
     )
-
-
-def elo_batch_fn(store_dir: str):
-    """The Elo store's foreachBatch body, exported for direct replay /
-    crash-window testing (the lm_counts_batch_fn pattern): fold the
-    batch's new games from the latest committed state version, guarded
-    against committed-batch replay by merged_store_last_applied."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if (
-            last := merged_store_last_applied(store_dir)
-        ) is not None and last >= batch_id:
-            return  # foreachBatch replay of a committed batch
-        existing = merged_store_read(batch.sparkSession, store_dir)
-        new_state = elo_state_fold(existing, batch)
-        # materialize BEFORE overwriting: the fold reads the version
-        # it is about to supersede
-        new_state = new_state.localCheckpoint(eager=True)
-        merged_store_write(new_state, store_dir, batch_id)
-
-    return fold
 
 
 _ELO_STATE_SCHEMA = (
@@ -2745,12 +2570,7 @@ def run_streaming_ivm(
             db, b_dir, batch_id, additive_combine(["k", "flag"], ["nb"])
         )
 
-    return (
-        feed.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(feed, fold, checkpoint_dir)
 
 
 def ivm_view_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -2778,9 +2598,7 @@ def run_streaming_dp_ledger(
     budget dashboard that never rescans history, with the store's
     exactly-once commit protocol guarding against double-spending a
     replayed batch (the failure mode a privacy ledger cannot have)."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(input_dir)
+    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         part = batch.groupBy("source").agg(F.count("*").alias("t"))
@@ -2788,12 +2606,7 @@ def run_streaming_dp_ledger(
             part, store_dir, batch_id, additive_combine(["source"], ["t"])
         )
 
-    return (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(docs, fold, checkpoint_dir)
 
 
 def dp_ledger_from_store(cells: DataFrame) -> DataFrame:
@@ -2816,9 +2629,7 @@ def run_streaming_embedding_drift(
     (plans/round9c.embedding_drift_from_counts). This is the monitor
     an embedding service keeps warm: encoder-version drift shows up
     as a PSI step without rescanning the vector log."""
-    vecs = spark.readStream.schema(
-        "vec_id long, embedding array<float>, label int"
-    ).parquet(input_dir)
+    vecs = spark.readStream.schema(_VECS_SCHEMA).parquet(input_dir)
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         from ..plans.round9c import embedding_bin_counts
@@ -2831,12 +2642,7 @@ def run_streaming_embedding_drift(
             additive_combine(["proj", "bin", "half"], ["c"]),
         )
 
-    return (
-        vecs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(vecs, fold, checkpoint_dir)
 
 
 def embedding_drift_from_store(cells: DataFrame) -> DataFrame:
@@ -2910,23 +2716,6 @@ def sprt_state_fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
     )
 
 
-def sprt_batch_fn(store_dir: str):
-    """The SPRT store's foreachBatch body (exported for replay /
-    crash-window tests, the elo_batch_fn pattern)."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if (
-            last := merged_store_last_applied(store_dir)
-        ) is not None and last >= batch_id:
-            return  # replay of a committed batch
-        existing = merged_store_read(batch.sparkSession, store_dir)
-        new_state = sprt_state_fold(existing, batch)
-        new_state = new_state.localCheckpoint(eager=True)
-        merged_store_write(new_state, store_dir, batch_id)
-
-    return fold
-
-
 def run_streaming_sprt(
     spark: SparkSession,
     input_dir: str,
@@ -2940,16 +2729,12 @@ def run_streaming_sprt(
 
     Scale: state is 5 integers per arena — independent of history;
     each batch shuffles only its own events once (the cogroup)."""
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
 
-    return (
-        events.writeStream.foreachBatch(sprt_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        events,
+        versioned_fold_batch_fn(store_dir, sprt_state_fold),
+        checkpoint_dir,
     )
 
 
@@ -3032,10 +2817,7 @@ def run_streaming_cms(
 
     Scale: state is d·w cells regardless of history; each batch
     shuffles only its own token counts."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, "
-        "n_chars long"
-    ).parquet(input_dir)
+    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         part = cms_partial(batch)
@@ -3043,12 +2825,7 @@ def run_streaming_cms(
             part, store_dir, batch_id, additive_combine(["j", "cell"], ["cc"])
         )
 
-    return (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(docs, fold, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -3111,24 +2888,6 @@ def bocpd_state_fold(existing, batch):
     ).applyInPandas(fn, schema=_BOCPD_STATE_SCHEMA)
 
 
-def bocpd_batch_fn(store_dir: str):
-    """The BOCPD store's foreachBatch body (elo_batch_fn pattern):
-    fold the batch's observations from the latest committed state
-    version, guarded against committed-batch replay."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if (
-            last := merged_store_last_applied(store_dir)
-        ) is not None and last >= batch_id:
-            return  # foreachBatch replay of a committed batch
-        existing = merged_store_read(batch.sparkSession, store_dir)
-        new_state = bocpd_state_fold(existing, batch)
-        new_state = new_state.localCheckpoint(eager=True)
-        merged_store_write(new_state, store_dir, batch_id)
-
-    return fold
-
-
 def run_streaming_bocpd(
     spark: SparkSession,
     input_dir: str,
@@ -3147,16 +2906,12 @@ def run_streaming_bocpd(
     Scale: state is 3·R integers + 2 counters per stream, independent
     of history; each batch shuffles only its own events once (the
     cogroup)."""
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
 
-    return (
-        events.writeStream.foreachBatch(bocpd_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        events,
+        versioned_fold_batch_fn(store_dir, bocpd_state_fold),
+        checkpoint_dir,
     )
 
 
@@ -3231,23 +2986,6 @@ def space_saving_state_fold(existing, batch):
     ).applyInPandas(fn, schema=_SS_STATE_SCHEMA)
 
 
-def space_saving_batch_fn(store_dir: str):
-    """The Space-Saving store's foreachBatch body (elo_batch_fn
-    pattern), replay-guarded."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if (
-            last := merged_store_last_applied(store_dir)
-        ) is not None and last >= batch_id:
-            return
-        existing = merged_store_read(batch.sparkSession, store_dir)
-        new_state = space_saving_state_fold(existing, batch)
-        new_state = new_state.localCheckpoint(eager=True)
-        merged_store_write(new_state, store_dir, batch_id)
-
-    return fold
-
-
 def run_streaming_space_saving(
     spark: SparkSession,
     input_dir: str,
@@ -3259,16 +2997,12 @@ def run_streaming_space_saving(
     state: Space-Saving's eviction rule reads slot positions, so the
     store persists them), exactly the bounded-memory frequency summary
     a stream aggregator serves when the key space is unbounded."""
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
 
-    return (
-        events.writeStream.foreachBatch(space_saving_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        events,
+        versioned_fold_batch_fn(store_dir, space_saving_state_fold),
+        checkpoint_dir,
     )
 
 
@@ -3323,23 +3057,6 @@ def theta_state_fold(existing, batch):
     )
 
 
-def theta_batch_fn(store_dir: str):
-    """The KMV store's foreachBatch body (elo_batch_fn pattern),
-    replay-guarded."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if (
-            last := merged_store_last_applied(store_dir)
-        ) is not None and last >= batch_id:
-            return
-        existing = merged_store_read(batch.sparkSession, store_dir)
-        new_state = theta_state_fold(existing, batch)
-        new_state = new_state.localCheckpoint(eager=True)
-        merged_store_write(new_state, store_dir, batch_id)
-
-    return fold
-
-
 def run_streaming_theta(
     spark: SparkSession,
     input_dir: str,
@@ -3352,16 +3069,12 @@ def run_streaming_theta(
     per-stream, union, and intersection cardinalities at any moment
     without touching history — the streaming twin of the lakehouse
     theta-sketch column."""
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).parquet(input_dir)
+    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
 
-    return (
-        events.writeStream.foreachBatch(theta_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        events,
+        versioned_fold_batch_fn(store_dir, theta_state_fold),
+        checkpoint_dir,
     )
 
 
@@ -3512,15 +3225,10 @@ def run_streaming_dedup_clusters(
     label store equals q_dedup_clusters run over the documents seen
     so far, and both crash windows (uncommitted label version,
     replayed batch) leave the store correct."""
-    docs = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(input_dir)
+    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
 
-    return (
-        docs.writeStream.foreachBatch(
-            dedup_clusters_batch_fn(sig_store_dir, label_store_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        docs,
+        dedup_clusters_batch_fn(sig_store_dir, label_store_dir),
+        checkpoint_dir,
     )

@@ -177,9 +177,10 @@ def test_bocpd_store_crash_resume_and_parity(spark, tmp_path):
     )
     from kafka_stream_spark.sources.tables import load
     from kafka_stream_spark.streaming.pipeline import (
-        bocpd_batch_fn,
+        bocpd_state_fold,
         bocpd_from_store,
         merged_store_read,
+        versioned_fold_batch_fn,
     )
 
     events = load(spark, "/root/testdata/sf0.001", "events")
@@ -191,7 +192,7 @@ def test_bocpd_store_crash_resume_and_parity(spark, tmp_path):
     assert wave1.count() > 0 and wave2.count() > 0
 
     store = str(tmp_path / "bocpd")
-    fold = bocpd_batch_fn(store)
+    fold = versioned_fold_batch_fn(store, bocpd_state_fold)
 
     def snap():
         return sorted(
@@ -253,8 +254,9 @@ def test_space_saving_store_crash_resume_and_parity(spark, tmp_path):
     from kafka_stream_spark.sources.tables import load
     from kafka_stream_spark.streaming.pipeline import (
         merged_store_read,
-        space_saving_batch_fn,
+        space_saving_state_fold,
         space_saving_from_store,
+        versioned_fold_batch_fn,
     )
 
     events = load(spark, "/root/testdata/sf0.001", "events")
@@ -266,7 +268,7 @@ def test_space_saving_store_crash_resume_and_parity(spark, tmp_path):
     assert wave1.count() > 0 and wave2.count() > 0
 
     store = str(tmp_path / "ss")
-    fold = space_saving_batch_fn(store)
+    fold = versioned_fold_batch_fn(store, space_saving_state_fold)
 
     def snap():
         return sorted(

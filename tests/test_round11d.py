@@ -89,9 +89,10 @@ def test_theta_store_crash_resume_and_parity(spark, tmp_path):
     from kafka_stream_spark.plans.round11m import q_theta_sketch
     from kafka_stream_spark.sources.tables import load
     from kafka_stream_spark.streaming.pipeline import (
-        theta_batch_fn,
+        theta_state_fold,
         theta_from_store,
         merged_store_read,
+        versioned_fold_batch_fn,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -104,7 +105,7 @@ def test_theta_store_crash_resume_and_parity(spark, tmp_path):
     assert wave1.count() > 0 and wave2.count() > 0
 
     store = str(tmp_path / "theta")
-    fold = theta_batch_fn(store)
+    fold = versioned_fold_batch_fn(store, theta_state_fold)
 
     def snap():
         return sorted(

@@ -1358,9 +1358,10 @@ def test_elo_store_crash_resume(spark, tmp_path):
     from kafka_stream_spark.plans.round9b import elo_ratings_df
     from kafka_stream_spark.sources.tables import load
     from kafka_stream_spark.streaming.pipeline import (
-        elo_batch_fn,
+        elo_state_fold,
         elo_from_store,
         merged_store_read,
+        versioned_fold_batch_fn,
     )
 
     events = load(spark, "/root/testdata/sf0.001", "events")
@@ -1372,7 +1373,7 @@ def test_elo_store_crash_resume(spark, tmp_path):
     assert wave1.count() > 0 and wave2.count() > 0
 
     store = str(tmp_path / "elo")
-    fold = elo_batch_fn(store)
+    fold = versioned_fold_batch_fn(store, elo_state_fold)
 
     def snap():
         return sorted(
@@ -1427,8 +1428,9 @@ def test_streaming_sprt_incremental_equals_batch_and_crash(spark, tmp_path):
     from kafka_stream_spark.sources.tables import load
     from kafka_stream_spark.streaming.pipeline import (
         merged_store_read,
-        sprt_batch_fn,
+        sprt_state_fold,
         sprt_from_store,
+        versioned_fold_batch_fn,
     )
 
     events = load(spark, "/root/testdata/sf0.001", "events")
@@ -1440,7 +1442,7 @@ def test_streaming_sprt_incremental_equals_batch_and_crash(spark, tmp_path):
     assert wave1.count() > 0 and wave2.count() > 0
 
     store = str(tmp_path / "sprt")
-    fold = sprt_batch_fn(store)
+    fold = versioned_fold_batch_fn(store, sprt_state_fold)
 
     def store_out():
         return {
