@@ -80,49 +80,36 @@ def minhash_signature_sql(hashed: str) -> str:
     return f"[{slots}]"
 
 
-def band_keys(sig: Column | str) -> Column:
-    """array<string>: md5 key per LSH band. The band index is folded into
-    the hashed string so keys from different bands can never join — a
-    single equi-join on the key column is then sufficient.
-
-    String input builds the same expression as one parsed SQL string
-    (see minhash_signature)."""
-    if isinstance(sig, str):
-        bands = []
-        for band in range(MINHASH_BANDS):
-            parts = ", ".join(
-                f"CAST(element_at({sig}, {band * MINHASH_ROWS + r + 1}) "
-                f"AS STRING)"
-                for r in range(MINHASH_ROWS)
-            )
-            bands.append(f"md5(concat_ws(',', '{band}', {parts}))")
-        return F.expr(f"array({', '.join(bands)})")
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.lit(str(band)),
-                    *[
-                        F.element_at(sig, band * MINHASH_ROWS + r + 1).cast("string")
-                        for r in range(MINHASH_ROWS)
-                    ],
-                )
-            )
-            for band in range(MINHASH_BANDS)
-        ]
-    )
-
-
-def band_keys_sql(sig: str) -> str:
-    bands = []
-    for band in range(MINHASH_BANDS):
+def band_keys(
+    sig: str, bands: int = MINHASH_BANDS, rows: int = MINHASH_ROWS
+) -> Column:
+    """array<string>: md5 key per LSH band of the signature column
+    ``sig``, each band ``rows`` consecutive slots. The band index is
+    folded into the hashed string so keys from different bands can
+    never join — a single equi-join on the key column is then
+    sufficient. Built as one parsed SQL string (see
+    minhash_signature)."""
+    keys = []
+    for band in range(bands):
         parts = ", ".join(
-            f"CAST({sig}[{band * MINHASH_ROWS + r + 1}] AS VARCHAR)"
-            for r in range(MINHASH_ROWS)
+            f"CAST(element_at({sig}, {band * rows + r + 1}) AS STRING)"
+            for r in range(rows)
         )
-        bands.append(f"md5(concat_ws(',', '{band}', {parts}))")
-    return f"[{', '.join(bands)}]"
+        keys.append(f"md5(concat_ws(',', '{band}', {parts}))")
+    return F.expr(f"array({', '.join(keys)})")
+
+
+def band_keys_sql(
+    sig: str, bands: int = MINHASH_BANDS, rows: int = MINHASH_ROWS
+) -> str:
+    keys = []
+    for band in range(bands):
+        parts = ", ".join(
+            f"CAST({sig}[{band * rows + r + 1}] AS VARCHAR)"
+            for r in range(rows)
+        )
+        keys.append(f"md5(concat_ws(',', '{band}', {parts}))")
+    return f"[{', '.join(keys)}]"
 
 
 SIMHASH_BITS = 16

@@ -55,25 +55,30 @@ def deterministic_centroids(
 def _cent_array(centroids: DataFrame):
     """Codebook folded to ONE array column (c_id, c_emb structs) for the
     per-row assignment/probe expressions below — broadcast exactly like
-    the joined codebook was, same size constraint."""
+    the joined codebook was, same size constraint. An empty codebook
+    folds to zero rows, so the crossJoin yields nothing, as the joined
+    codebook did."""
     return F.broadcast(
         centroids.agg(
             F.collect_list(F.struct("c_id", "c_emb")).alias("_cents")
-        )
+        ).filter(F.size("_cents") > 0)
     )
 
 
 #: per-centroid (negated-score, c_id) struct inside a lambda over the
 #: folded codebook: struct ordering ASC == (rounded cosine DESC, c_id
 #: ASC), the exact window order the r12 form used.  nanvl maps a NaN
-#: cosine (0-norm vector, 0/0) to -Infinity so it still sorts FIRST —
+#: cosine (NaN embedding values) to -Infinity so it still sorts FIRST —
 #: Spark's desc ordering treats NaN as largest, and negation alone
-#: would leave NaN sorting last instead.
+#: would leave NaN sorting last instead.  coalesce maps a NULL cosine
+#: (NULL or ragged embedding) to +Infinity so it sorts LAST, as under
+#: desc NULLS LAST.
 def _scored_struct_sql(vec_sql: str) -> str:
     cos = vectors.cosine_spark_sql(vec_sql, "c.c_emb")
     return (
-        f"struct(nanvl((-round({cos}, 6)), "
-        f"CAST('-Infinity' AS DOUBLE)) AS ns, c.c_id AS c_id)"
+        f"struct(coalesce(nanvl((-round({cos}, 6)), "
+        f"CAST('-Infinity' AS DOUBLE)), CAST('Infinity' AS DOUBLE)) AS ns, "
+        f"c.c_id AS c_id)"
     )
 
 
@@ -358,8 +363,8 @@ def default_index_dir(sf_dir: str, table: str, n: int) -> str:
     subset name (``embeddings_side0``); the fingerprint stats the
     physical ``embeddings`` file that every subset derives from.
 
-    Indexes root under the repo-owned cache (overridable via
-    ``KSS_ANN_DIR``) instead of world-writable ``/tmp``, so no other
+    Indexes root under ``.ann_cache`` beside the package (overridable
+    via ``KSS_ANN_DIR``) instead of world-writable ``/tmp``, so no other
     local user can pre-create the prefix and plant an index."""
     import hashlib
     import os
@@ -374,7 +379,10 @@ def default_index_dir(sf_dir: str, table: str, n: int) -> str:
     tag = hashlib.md5(
         f"{sf_dir}|{table}|n={n}|fp={fp}|floorsqrt-r0".encode()
     ).hexdigest()[:12]
-    root = os.environ.get("KSS_ANN_DIR", "/root/repo/.ann_cache")
+    package = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root = os.environ.get(
+        "KSS_ANN_DIR", os.path.join(os.path.dirname(package), ".ann_cache")
+    )
     return f"{root}/ivf_{tag}"
 
 
@@ -657,60 +665,3 @@ def graph_ann_sql(
       WHERE rn <= {k})"""
     )
     return ", ".join(parts)
-
-
-def routed_candidates(
-    members: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF candidate-pair generation for threshold (not top-k) search —
-    the dedup shape: every member lives in exactly one inverted list
-    (nearest centroid of ``centroids``), every query probes its
-    ``nprobe`` nearest lists, and the output is ALL (member, query)
-    rows sharing a probed list, un-scored — callers verify with their
-    own predicate (cosine ≥ tau for SemDeDup).
-
-    The asymmetric rule — member's ASSIGNED cell ∈ query's PROBED
-    cells — is what makes a streaming store replay the batch answer
-    exactly: when ids arrive in order, the candidates a new vector sees
-    against the accumulated store are identical to the pairs the batch
-    operator generates over the full corpus (pytest-pinned in
-    tests/test_streaming.py).
-
-    Input contracts: members (n_id, emb, *extras), queries (q_id,
-    q_emb, *extras), centroids (c_id, c_emb). Output: one row per
-    candidate pair with both sides' columns."""
-    # per-row argmax over the folded codebook (round 13) — same
-    # (rounded cosine DESC, c_id ASC) assignment with no window
-    assigned = (
-        members.crossJoin(_cent_array(centroids))
-        .withColumn(
-            "centroid_id",
-            F.expr(
-                f"array_min(transform(_cents, "
-                f"c -> {_scored_struct_sql('emb')})).c_id"
-            ),
-        )
-        .drop("_cents")
-    )
-    # top-nprobe routing as a per-row expression over the folded
-    # codebook (round 13): array_sort's struct ordering reproduces the
-    # (rounded cosine DESC, c_id ASC) window order, so slice+explode
-    # yields the identical probe rows with NO window exchange.
-    probes = (
-        queries.crossJoin(_cent_array(centroids))
-        .withColumn(
-            "centroid_id",
-            F.explode(
-                F.expr(
-                    f"transform(slice(array_sort(transform(_cents, "
-                    f"c -> {_scored_struct_sql('q_emb')})), 1, {int(nprobe)}), "
-                    f"s -> s.c_id)"
-                )
-            ),
-        )
-        .drop("_cents")
-    )
-    return probes.join(assigned, "centroid_id").drop("centroid_id")

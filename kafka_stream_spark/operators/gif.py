@@ -472,55 +472,6 @@ def _interlace_order(height: int) -> list[int]:
     ]
 
 
-def encode_gif_frame(
-    width: int,
-    height: int,
-    rgb: bytes,
-    interlaced: bool = False,
-    local_palette: bool = False,
-) -> bytes:
-    """Single-frame GIF with optional INTERLACING (rows stored in the
-    4-pass 8/8/4/2 order, iflags bit 0x40) and optional LOCAL color
-    table (palette attached to the image descriptor instead of the
-    screen, iflags bit 0x80 — the multi-palette animation mechanism).
-    With both flags off this is byte-compatible with encode_gif."""
-    if len(rgb) != width * height * 3:
-        raise ValueError("rgb length mismatch")
-    pixels = [rgb[i : i + 3] for i in range(0, len(rgb), 3)]
-    palette = sorted(set(pixels))
-    if len(palette) > 256:
-        raise ValueError("GIF needs <=256 unique colors")
-    index = {c: i for i, c in enumerate(palette)}
-    k = 0
-    while (2 << k) < len(palette):
-        k += 1
-    table_len = 2 << k
-    mcs = max(2, k + 1)
-    out = bytearray(b"GIF89a")
-    screen_flags = 0x00 if local_palette else (0x80 | k)
-    out += struct.pack("<HHBBB", width, height, screen_flags, 0, 0)
-    if not local_palette:
-        out += b"".join(palette)
-        out += b"\x00\x00\x00" * (table_len - len(palette))
-    iflags = (0x40 if interlaced else 0) | (0x80 | k if local_palette else 0)
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, iflags)
-    if local_palette:
-        out += b"".join(palette)
-        out += b"\x00\x00\x00" * (table_len - len(palette))
-    out.append(mcs)
-    rows = _interlace_order(height) if interlaced else list(range(height))
-    idxs = [
-        index[pixels[y * width + x]] for y in rows for x in range(width)
-    ]
-    data = _lzw_encode(idxs, mcs)
-    for i in range(0, len(data), 255):
-        chunk = data[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
 def decode_gif_frame(payload: bytes) -> tuple[int, int, bytes]:
     """GIF87a/89a single frame → (width, height, RGB24), handling
     interlaced row order and local color tables — the full static-GIF

@@ -16,7 +16,7 @@ shuffle stage.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: (partial_agg, combine_agg) pairs per supported aggregate kind
@@ -55,15 +55,6 @@ def salted_agg(
             for out, (kind, _col) in aggs.items()
         ]
     )
-
-
-def key_salt(n_salts: int, *key_cols: Column) -> Column:
-    """Deterministic salt derived from the KEY columns: the same key always
-    lands in the same shard, so a dim table replicated per salt (explode
-    0..n_salts-1) co-partitions with the salted fact side of a skewed
-    join. (A row-position salt cannot do this — two DataFrames never
-    agree on row order.)"""
-    return F.pmod(F.xxhash64(*key_cols), F.lit(n_salts))
 
 
 def salted_join(

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import hashing, text, vectors
+from ..operators import lsh
 from ..session import default_parallelism
 from ..sources.tables import load
 from .registry import query
@@ -55,37 +56,8 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_cte_chain() -> str:
-    """CTE chain ending in ``pairs(doc_a, doc_b, jaccard)`` — shared by
-    the pair query and the clustering oracle."""
-    sig = hashing.minhash_signature_sql("hs")
-    bk = hashing.band_keys_sql("sig")
-    return f"""h AS (
-      SELECT doc_id, hs FROM {text.hashed_shingle_table_sql()}
-    ), s AS (
-      SELECT doc_id, hs, {sig} AS sig FROM h
-    ), b AS (
-      SELECT doc_id, unnest({bk}) AS band_key FROM s
-    ), cand AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM b x JOIN b y ON x.band_key = y.band_key AND x.doc_id < y.doc_id
-    ), scored AS (
-      SELECT c.doc_a, c.doc_b,
-             round(
-               len(list_filter(ha.hs, v -> list_contains(hb.hs, v))) * 1.0
-               / (len(ha.hs) + len(hb.hs)
-                  - len(list_filter(ha.hs, v -> list_contains(hb.hs, v)))),
-               6) AS jaccard
-      FROM cand c
-      JOIN h ha ON ha.doc_id = c.doc_a
-      JOIN h hb ON hb.doc_id = c.doc_b
-    ), pairs AS (
-      SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= 0.5
-    )"""
-
-
 def _minhash_pairs_oracle() -> str:
-    return f"WITH {_minhash_cte_chain()} SELECT doc_a, doc_b, jaccard FROM pairs"
+    return f"WITH {lsh.minhash_cte_chain()} SELECT doc_a, doc_b, jaccard FROM pairs"
 
 
 def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,49 +71,18 @@ def candidate_pairs_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) for EVERY LSH candidate pair (no
     threshold) — the scored-candidate frame near_dup_pairs cuts at 0.5
     and X801's threshold-percolation study sweeps."""
-    d = _docs_parallel(spark, sf_dir)
-    # two-step select so token hashing runs once per token (th is a
-    # materialized column, not a repeated subexpression); h then feeds
-    # three plan branches (band explode + both verify sides) — persist so
-    # the shingle hashing runs once, the same materialized-signature-table
-    # shape a cluster-scale dedup pass uses.
-    h = (
-        d.select(
-            "doc_id",
-            text.hashed_tokens_mod(F.col("text")).alias("th"),
-            text.tokens(F.col("text")).alias("toks"),
-        )
-        .select(
-            "doc_id",
-            F.array_distinct(
-                text.shingle_hashes(F.col("th"), F.col("toks"))
-            ).alias("hs"),
-        )
-        .persist()
-    )
-    s = h.withColumn("sig", hashing.minhash_signature("hs"))
-    b = s.select("doc_id", F.explode(hashing.band_keys("sig")).alias("band_key"))
-    x, y = b.alias("x"), b.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    # h feeds three plan branches (band explode + both verify sides) —
+    # persist so the shingle hashing runs once, the same
+    # materialized-signature-table shape a cluster-scale dedup pass uses.
+    h = lsh.shingle_sets(_docs_parallel(spark, sf_dir)).persist()
+    cand = lsh.candidates(lsh.band_rows(h))
     ha, hb = h.alias("ha"), h.alias("hb")
-    inter = F.size(
-        F.filter(F.col("ha.hs"), lambda v: F.array_contains(F.col("hb.hs"), v))
-    )
-    jacc = F.round(
-        inter * F.lit(1.0) / (F.size("ha.hs") + F.size("hb.hs") - inter), 6
-    )
     result = (
         cand.join(ha, F.col("ha.doc_id") == F.col("doc_a"))
         .join(hb, F.col("hb.doc_id") == F.col("doc_b"))
-        .select("doc_a", "doc_b", jacc.alias("jaccard"))
+        .select(
+            "doc_a", "doc_b", lsh.jaccard("ha.hs", "hb.hs").alias("jaccard")
+        )
         # materialize so the persisted shingle table can be released here
         # instead of leaking into the caller's session (the driver gate
         # runs 85 queries in one session — intermediates must clean up)
@@ -166,7 +107,7 @@ def q_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE {_minhash_cte_chain()},
+    WITH RECURSIVE {lsh.minhash_cte_chain()},
     edges AS (
       SELECT doc_a AS a, doc_b AS bb FROM pairs
       UNION
@@ -219,28 +160,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2b — exact n-gram Jaccard over blocked pairs (same lang). The
     blocking key cuts the pair space ~|langs|×; this is the small-corpus /
     verification twin of q_near_dedup, not the scale path."""
-    d = _docs_parallel(spark, sf_dir)
-    h = (
-        d.select(
-            "doc_id",
-            "lang",
-            text.hashed_tokens_mod(F.col("text")).alias("th"),
-            text.tokens(F.col("text")).alias("toks"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.array_distinct(
-                text.shingle_hashes(F.col("th"), F.col("toks"))
-            ).alias("hs"),
-        )
-        .persist()
-    )
+    h = lsh.shingle_sets(_docs_parallel(spark, sf_dir), "lang").persist()
     a, b = h.alias("a"), h.alias("b")
-    inter = F.size(
-        F.filter(F.col("a.hs"), lambda v: F.array_contains(F.col("b.hs"), v))
-    )
-    jacc = inter * F.lit(1.0) / (F.size("a.hs") + F.size("b.hs") - inter)
     result = (
         a.join(
             b,
@@ -250,7 +171,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            F.round(jacc, 6).alias("jaccard"),
+            lsh.jaccard("a.hs", "b.hs").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= 0.2)
         .localCheckpoint(eager=True)  # release h below, no session leak
@@ -800,7 +721,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_apply",
     oracle=f"""
-    WITH RECURSIVE {_minhash_cte_chain()},
+    WITH RECURSIVE {lsh.minhash_cte_chain()},
     edges AS (
       SELECT doc_a AS a, doc_b AS bb FROM pairs
       UNION
@@ -941,7 +862,7 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _training_pipeline_oracle() -> str:
     toks = text.tokens_sql("d.text")
     return f"""
-    WITH RECURSIVE {_minhash_cte_chain()},
+    WITH RECURSIVE {lsh.minhash_cte_chain()},
     edges AS (
       SELECT doc_a AS a, doc_b AS bb FROM pairs
       UNION

@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import text
+from ..functions import hashing, text
+from ..operators import lsh
 from ..sources.tables import load
 from .llm_ext import _docs_parallel
 from .registry import query
@@ -121,28 +122,8 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of q_containment_lsh — the banded scale path implemented
     below; this exact form is excluded from bench like every O(n²)
     twin."""
-    d = load(spark, sf_dir, "documents")
-    h = (
-        d.select(
-            "doc_id",
-            "lang",
-            text.hashed_tokens_mod(F.col("text")).alias("th"),
-            text.tokens(F.col("text")).alias("toks"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.array_distinct(
-                text.shingle_hashes(F.col("th"), F.col("toks"))
-            ).alias("hs"),
-        )
-        .persist()
-    )
+    h = lsh.shingle_sets(load(spark, sf_dir, "documents"), "lang").persist()
     a, b = h.alias("a"), h.alias("b")
-    inter = F.size(
-        F.filter(F.col("a.hs"), lambda v: F.array_contains(F.col("b.hs"), v))
-    )
-    cont = inter * F.lit(1.0) / F.least(F.size("a.hs"), F.size("b.hs"))
     result = (
         a.join(
             b,
@@ -152,7 +133,7 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            F.round(cont, 6).alias("containment"),
+            lsh.containment("a.hs", "b.hs").alias("containment"),
         )
         .filter(F.col("containment") >= 0.5)
         .localCheckpoint(eager=True)  # release h below, no session leak
@@ -162,21 +143,8 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _containment_lsh_oracle() -> str:
-    from ..functions import hashing
-
-    sig = hashing.minhash_signature_sql("hs")
-    bk = hashing.band_keys_sql("sig")
     return f"""
-    WITH h AS (
-      SELECT doc_id, hs FROM {text.hashed_shingle_table_sql()}
-    ), s AS (
-      SELECT doc_id, hs, {sig} AS sig FROM h
-    ), b AS (
-      SELECT doc_id, unnest({bk}) AS band_key FROM s
-    ), cand AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM b x JOIN b y ON x.band_key = y.band_key AND x.doc_id < y.doc_id
-    )
+    WITH {lsh.candidate_ctes()}
     SELECT c.doc_a, c.doc_b,
            round(len(list_filter(ha.hs, v -> list_contains(hb.hs, v))) * 1.0
                  / least(len(ha.hs), len(hb.hs)), 6) AS containment
@@ -205,51 +173,20 @@ def q_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard LSH-containment trade-off (Broder 1997; sketch engines
     ship the identical compromise). The DuckDB oracle reproduces the
     same deterministic candidate set, so recall choices cannot hide."""
-    from ..functions import hashing
-
     # fan out the single-split scan: the md5-per-token shingle pass is
     # the query's CPU cost and would otherwise run on one core (guide
     # §2.6; the same _docs_parallel idiom q_minhash_est uses)
-    d = _docs_parallel(spark, sf_dir)
-    h = (
-        d.select(
-            "doc_id",
-            text.hashed_tokens_mod(F.col("text")).alias("th"),
-            text.tokens(F.col("text")).alias("toks"),
-        )
-        .select(
-            "doc_id",
-            F.array_distinct(
-                text.shingle_hashes(F.col("th"), F.col("toks"))
-            ).alias("hs"),
-        )
-        .persist()
-    )
-    s = h.withColumn("sig", hashing.minhash_signature("hs"))
-    b = s.select(
-        "doc_id", F.explode(hashing.band_keys("sig")).alias("band_key")
-    )
-    x, y = b.alias("x"), b.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    h = lsh.shingle_sets(_docs_parallel(spark, sf_dir)).persist()
+    cand = lsh.candidates(lsh.band_rows(h))
     ha, hb = h.alias("ha"), h.alias("hb")
-    inter = F.size(
-        F.filter(F.col("ha.hs"), lambda v: F.array_contains(F.col("hb.hs"), v))
-    )
-    cont = F.round(
-        inter * F.lit(1.0) / F.least(F.size("ha.hs"), F.size("hb.hs")), 6
-    )
     result = (
         cand.join(ha, F.col("ha.doc_id") == F.col("doc_a"))
         .join(hb, F.col("hb.doc_id") == F.col("doc_b"))
-        .select("doc_a", "doc_b", cont.alias("containment"))
+        .select(
+            "doc_a",
+            "doc_b",
+            lsh.containment("ha.hs", "hb.hs").alias("containment"),
+        )
         .filter(F.col("containment") >= 0.5)
         .localCheckpoint(eager=True)  # release h below, no session leak
     )
@@ -258,8 +195,6 @@ def q_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_est_oracle() -> str:
-    from ..functions import hashing
-
     sig = hashing.minhash_signature_sql("hs")
     return f"""
     WITH h AS (SELECT doc_id, lang, hs
@@ -303,20 +238,8 @@ def q_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     through |langs| sort tasks: measured 43s vs ~3s at sf0.1."""
     from pyspark.sql import Window
 
-    from ..functions import hashing
-
-    d = _docs_parallel(spark, sf_dir)
     s = (
-        d.select(
-            "doc_id",
-            "lang",
-            F.array_distinct(
-                text.shingle_hashes(
-                    text.hashed_tokens_mod(F.col("text")),
-                    text.tokens(F.col("text")),
-                )
-            ).alias("hs"),
-        )
+        lsh.shingle_sets(_docs_parallel(spark, sf_dir), "lang")
         .withColumn("sig", hashing.minhash_signature("hs"))
         .localCheckpoint(eager=True)
     )
@@ -347,12 +270,6 @@ def q_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sig").alias("sig_b"),
     )
     j = pairs.join(sa, "doc_a").join(sb, "doc_b")
-    inter = F.size(
-        F.filter(F.col("hs_b"), lambda v: F.array_contains(F.col("hs_a"), v))
-    )
-    exact = inter * F.lit(1.0) / (
-        F.size("hs_a") + F.size("hs_b") - inter
-    )
     est = (
         F.size(
             F.filter(
@@ -366,7 +283,7 @@ def q_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select(
         "doc_a",
         "doc_b",
-        F.round(exact, 6).alias("jaccard_exact"),
+        lsh.jaccard("hs_a", "hs_b").alias("jaccard_exact"),
         F.round(est, 6).alias("jaccard_est"),
     )
 

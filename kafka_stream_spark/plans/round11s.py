@@ -32,8 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..operators.lsh import minhash_cte_chain
 from ..sources.tables import load
-from .llm_ext import _minhash_cte_chain, near_dup_pairs
+from .llm_ext import near_dup_pairs
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -138,7 +139,7 @@ def q_butterflies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _HOMOPHILY_ORACLE = f"""
-    WITH {_minhash_cte_chain()},
+    WITH {minhash_cte_chain()},
     lab AS (SELECT doc_id, lang FROM documents),
     e AS (
       SELECT la.lang AS li, lb.lang AS lj

@@ -30,8 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..operators.lsh import minhash_cte_chain
 from ..sources.tables import load
-from .llm_ext import _minhash_cte_chain, candidate_pairs_scored
+from .llm_ext import candidate_pairs_scored
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -189,7 +190,7 @@ def _perc_tau_sql(i: int, tau: float) -> str:
 
 
 _PERC_ORACLE = f"""
-    WITH RECURSIVE {_minhash_cte_chain()},
+    WITH RECURSIVE {minhash_cte_chain()},
     {', '.join(_perc_tau_sql(i, t) for i, t in enumerate(_PERC_TAUS))}
     SELECT CAST(tau AS DOUBLE) AS tau, CAST(n_edges AS BIGINT) AS n_edges,
            CAST(n_docs_in_dup_sets AS BIGINT) AS n_docs_in_dup_sets,

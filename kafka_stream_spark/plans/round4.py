@@ -707,14 +707,13 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X279 — LSH recall evaluation (dedup quality as a query)
 # ---------------------------------------------------------------------------
 
-from ..functions import text as textfn  # noqa: E402
-from .llm_ext import _minhash_cte_chain  # noqa: E402
+from ..operators import lsh  # noqa: E402
 
 
 @query(
     "q_lsh_recall",
     oracle=f"""
-    WITH {_minhash_cte_chain()},
+    WITH {lsh.minhash_cte_chain()},
     exact AS (
       SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
       FROM h x JOIN h y ON x.doc_id < y.doc_id
@@ -746,47 +745,30 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded from bench); the LSH side is the production pipeline.
     Output: exact pairs, LSH pairs, hits, recall."""
     from .llm_ext import near_dup_pairs
-    from ..functions import hashing
 
-    d = load(spark, sf_dir, "documents")
-    h = d.select(
-        "doc_id",
-        textfn.hashed_tokens_mod(F.col("text")).alias("th"),
-        textfn.tokens(F.col("text")).alias("toks"),
-    ).select(
-        "doc_id",
-        F.array_distinct(
-            textfn.shingle_hashes(F.col("th"), F.col("toks"))
-        ).alias("hs"),
-    ).persist()
+    h = lsh.shingle_sets(load(spark, sf_dir, "documents")).persist()
     x, y = h.alias("x"), h.alias("y")
-    inter = F.size(
-        F.filter(F.col("x.hs"), lambda v: F.array_contains(F.col("y.hs"), v))
-    )
-    jacc = F.round(
-        inter * F.lit(1.0) / (F.size("x.hs") + F.size("y.hs") - inter), 6
-    )
     exact = (
         x.join(y, F.col("x.doc_id") < F.col("y.doc_id"))
         .select(
             F.col("x.doc_id").alias("doc_a"),
             F.col("y.doc_id").alias("doc_b"),
-            jacc.alias("j"),
+            lsh.jaccard("x.hs", "y.hs").alias("j"),
         )
         .filter(F.col("j") >= 0.5)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)
     )
     h.unpersist()
-    lsh = near_dup_pairs(spark, sf_dir).select(
+    banded = near_dup_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("la"), F.col("doc_b").alias("lb")
     ).localCheckpoint(eager=True)
     hit = exact.join(
-        lsh,
+        banded,
         (F.col("doc_a") == F.col("la")) & (F.col("doc_b") == F.col("lb")),
         "left",
     ).select(F.col("la").isNotNull().alias("found"))
-    n_lsh = lsh.agg(F.count("*").alias("n_lsh"))
+    n_lsh = banded.agg(F.count("*").alias("n_lsh"))
     return (
         hit.agg(
             F.count("*").alias("n_exact"),

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import hashing, text
+from ..operators import lsh
 from ..sources.tables import load
 from .registry import query
 
@@ -360,20 +361,6 @@ def q_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LSH_CONFIGS = [(4, 8), (8, 4), (16, 2)]
 
 
-def _band_keys_param_sql(bands: int, rows: int) -> str:
-    keys = ", ".join(
-        "md5(concat_ws(',', '{b}', {slots}))".format(
-            b=b,
-            slots=", ".join(
-                f"CAST(sig[{b * rows + r + 1}] AS VARCHAR)"
-                for r in range(rows)
-            ),
-        )
-        for b in range(bands)
-    )
-    return f"[{keys}]"
-
-
 def _lsh_tuning_oracle() -> str:
     sig = hashing.minhash_signature_sql("hs")
     per_cfg = " UNION ALL ".join(
@@ -382,18 +369,18 @@ def _lsh_tuning_oracle() -> str:
                pow(1.0 / {bands}, 1.0 / {rows}) AS est_threshold,
                (SELECT count(*) FROM (
                   SELECT band_key FROM (
-                    SELECT unnest({_band_keys_param_sql(bands, rows)})
+                    SELECT unnest({hashing.band_keys_sql('sig', bands, rows)})
                       AS band_key
                     FROM s) GROUP BY band_key HAVING count(*) >= 2))
                  AS n_hot_buckets,
                (SELECT count(*) FROM (
                   SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM
                     (SELECT doc_id,
-                            unnest({_band_keys_param_sql(bands, rows)})
+                            unnest({hashing.band_keys_sql('sig', bands, rows)})
                               AS band_key FROM s) x
                     JOIN
                     (SELECT doc_id,
-                            unnest({_band_keys_param_sql(bands, rows)})
+                            unnest({hashing.band_keys_sql('sig', bands, rows)})
                               AS band_key FROM s) y
                     ON x.band_key = y.band_key
                    AND x.doc_id < y.doc_id)) AS n_candidate_pairs
@@ -426,55 +413,20 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature table (signatures computed once; the sweep never
     re-reads text). Choosing b,r from this table is how a 100 TB
     dedup tunes itself on a sample first."""
-    d = load(spark, sf_dir, "documents")
-    h = d.select(
-        "doc_id",
-        text.hashed_tokens_mod(F.col("text")).alias("th"),
-        text.tokens(F.col("text")).alias("toks"),
-    ).select(
-        "doc_id",
-        F.array_distinct(
-            text.shingle_hashes(F.col("th"), F.col("toks"))
-        ).alias("hs"),
-    )
+    h = lsh.shingle_sets(load(spark, sf_dir, "documents"))
     s = h.select(
         "doc_id", hashing.minhash_signature("hs").alias("sig")
     ).localCheckpoint(eager=True)
 
     def config_row(bands: int, rows: int) -> DataFrame:
-        keys = F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.lit(str(b)),
-                        *[
-                            F.element_at(
-                                F.col("sig"), b * rows + r + 1
-                            ).cast("string")
-                            for r in range(rows)
-                        ],
-                    )
-                )
-                for b in range(bands)
-            ]
-        )
-        bk = s.select("doc_id", F.explode(keys).alias("band_key"))
+        bk = lsh.band_rows(s, bands=bands, rows=rows)
         hot = (
             bk.groupBy("band_key")
             .agg(F.count("*").alias("c"))
             .filter(F.col("c") >= 2)
             .agg(F.count("*").alias("n_hot"))
         )
-        x = bk.select(F.col("doc_id").alias("a"), "band_key")
-        y = bk.select(F.col("doc_id").alias("b"), "band_key")
-        cand = (
-            x.join(y, "band_key")
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct()
-            .agg(F.count("*").alias("n_cand"))
-        )
+        cand = lsh.candidates(bk).agg(F.count("*").alias("n_cand"))
         return hot.crossJoin(F.broadcast(cand)).select(
             F.lit(bands).cast("long").alias("bands"),
             F.lit(rows).cast("long").alias("rows_per_band"),

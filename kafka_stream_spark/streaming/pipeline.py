@@ -748,21 +748,26 @@ def run_streaming_near_dedup(
     continuous-ingestion form of q_near_dedup, which is how a training
     corpus actually grows.
 
-    Per micro-batch (foreachBatch):
+    Per micro-batch (foreachBatch), all through ``operators.lsh``:
       1. shingle → 32-slot minhash → 8×4 band keys for the batch (one
-         map pass, identical expressions to the batch path);
-      2. candidates = batch bands ⋈ (store ∪ batch) bands on band_key
-         with doc_a < doc_b — so intra-batch AND cross-history dups
-         surface in the same equi-join;
-      3. exact-Jaccard verify ≥ 0.5 on candidates only; flagged docs
-         append (doc_id, dup_of=min verified partner, jaccard) to the
-         result log;
+         map pass, the batch path's own expressions);
+      2. candidates = batch ⋈ batch on doc_a < doc_b plus store ⋈
+         batch on doc_a != doc_b, both on band_key (``lsh.candidates``);
+      3. exact-Jaccard verify ≥ 0.5 on candidates only; every flagged
+         doc_b appends (doc_id, dup_of=min verified partner,
+         max_jaccard) to the result log;
       4. the batch's (doc_id, band_key, hs) rows append to the store.
     The store grows by signature rows only (~100 B/doc·band) — text
     never enters it; at cluster scale the store is a bucketed table so
-    step 2 is a co-located join. When arrival order follows doc_id,
-    the flagged set provably equals the batch q_near_dedup pair
-    targets (pytest: incremental == batch after every wave).
+    step 2 is a co-located join.
+
+    Arrival-order contract: a pair is found in the batch where its
+    later-arriving doc lands, and that doc is the one flagged, its
+    ``dup_of`` the smallest verified partner that arrived before it
+    (or, within one batch, has a smaller doc_id). This holds for any
+    arrival order; under doc_id-monotone arrival the log equals the
+    doc_b side of the batch q_near_dedup pairs after every wave (both
+    pinned in pytest).
 
     Both the store and the result log are batch_id-partitioned with
     dynamic partition overwrite (the ``idempotent_upsert`` recipe) and
@@ -784,56 +789,17 @@ def near_dedup_batch_fn(store_dir: str, out_dir: str):
     module level so pytest can invoke it twice with the same batch_id
     (a simulated at-least-once replay) and pin that the store and the
     result log come out unchanged."""
-    from ..functions import hashing, text
+    from ..operators import lsh
 
     def dedup_batch(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession
-        h = (
-            batch.select(
-                "doc_id",
-                text.hashed_tokens_mod(F.col("text")).alias("th"),
-                text.tokens(F.col("text")).alias("toks"),
-            )
-            .select(
-                "doc_id",
-                F.array_distinct(
-                    text.shingle_hashes(F.col("th"), F.col("toks"))
-                ).alias("hs"),
-            )
+        bands = lsh.band_rows(lsh.shingle_sets(batch), "hs").localCheckpoint(
+            eager=True
         )
-        s = h.withColumn("sig", hashing.minhash_signature("hs"))
-        bands = s.select(
-            "doc_id",
-            F.explode(hashing.band_keys("sig")).alias("band_key"),
-            "hs",
-        ).localCheckpoint(eager=True)
         prior = store_read(sess, store_dir, exclude_batch_id=batch_id)
-        known = prior.unionByName(bands) if prior is not None else bands
-        x, y = known.alias("x"), bands.alias("y")
-        cand = (
-            x.join(
-                y,
-                (F.col("x.band_key") == F.col("y.band_key"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("doc_a"),
-                F.col("x.hs").alias("hs_a"),
-                F.col("y.doc_id").alias("doc_b"),
-                F.col("y.hs").alias("hs_b"),
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        inter = F.size(
-            F.filter(
-                F.col("hs_a"), lambda v: F.array_contains(F.col("hs_b"), v)
-            )
-        )
-        jacc = inter * F.lit(1.0) / (
-            F.size("hs_a") + F.size("hs_b") - inter
-        )
         dups = (
-            cand.withColumn("jaccard", F.round(jacc, 6))
+            lsh.candidates(bands, prior)
+            .withColumn("jaccard", lsh.jaccard("hs_a", "hs_b"))
             .filter(F.col("jaccard") >= 0.5)
             .groupBy(F.col("doc_b").alias("doc_id"))
             .agg(
@@ -3097,19 +3063,20 @@ def dedup_clusters_batch_fn(sig_store_dir: str, label_store_dir: str):
     the batch's near-dup edges against the accumulated signature
     store, then FOLD them into the persisted component labels.
 
-    The label merge is the min-label fixpoint over (new edges ∪ the
-    stored v→comp pointers): components only coarsen as edges arrive,
-    and since component ids are min doc ids, min-of-mins equals the
-    global min — so after any prefix of waves the store equals the
-    batch q_dedup_clusters over the documents seen so far, for ANY
-    arrival order: the candidate join canonicalizes pair direction
-    with least/greatest, so prior↔new edges survive even when the new
-    doc has the smaller id (the parity pytest delivers interleaved-id
-    waves to pin exactly that; contrast the X225 pair log, whose
-    min-partner aggregation cannot reconstruct components — edges
-    (1,3),(2,3) cluster {1,2,3} but 3's min partner alone loses 2 —
-    and whose flag semantics do require doc_id-monotone arrival)."""
-    from ..functions import hashing, text
+    Edges come from ``lsh.candidates`` over the batch and the
+    signature store, under the near-dedup log's arrival-order contract:
+    a pair is found in the batch where its later-arriving doc lands,
+    whichever doc has the smaller id. The label merge is the min-label
+    fixpoint over (new edges ∪ the stored v→comp pointers): components
+    only coarsen as edges arrive, and since component ids are min doc
+    ids, min-of-mins equals the global min — so after any prefix of
+    waves the store equals the batch q_dedup_clusters over the
+    documents seen so far, for ANY arrival order (the parity pytest
+    delivers interleaved-id waves). The near-dedup log cannot stand in
+    for this store: its min-partner aggregation loses edges —
+    (1,3),(2,3) cluster {1,2,3}
+    but 3's min partner alone loses 2."""
+    from ..operators import lsh
     from ..operators.graph import connected_components
 
     def fold(batch: DataFrame, batch_id: int) -> None:
@@ -3118,62 +3085,13 @@ def dedup_clusters_batch_fn(sig_store_dir: str, label_store_dir: str):
         ) is not None and last >= batch_id:
             return
         sess = batch.sparkSession
-        h = (
-            batch.select(
-                "doc_id",
-                text.hashed_tokens_mod(F.col("text")).alias("th"),
-                text.tokens(F.col("text")).alias("toks"),
-            )
-            .select(
-                "doc_id",
-                F.array_distinct(
-                    text.shingle_hashes(F.col("th"), F.col("toks"))
-                ).alias("hs"),
-            )
+        bands = lsh.band_rows(lsh.shingle_sets(batch), "hs").localCheckpoint(
+            eager=True
         )
-        s = h.withColumn("sig", hashing.minhash_signature("hs"))
-        bands = s.select(
-            "doc_id",
-            F.explode(hashing.band_keys("sig")).alias("band_key"),
-            "hs",
-        ).localCheckpoint(eager=True)
         prior = store_read(sess, sig_store_dir, exclude_batch_id=batch_id)
-        known = prior.unionByName(bands) if prior is not None else bands
-        x, y = known.alias("x"), bands.alias("y")
-        # Join on != and canonicalize with least/greatest: a pair is
-        # found in whichever wave its LATER-ARRIVING doc lands, even
-        # when that doc has the SMALLER doc_id (the old
-        # x.doc_id < y.doc_id predicate silently dropped new=3 vs
-        # prior=5 — the y side only holds the current batch).  Jaccard
-        # is symmetric, so the hs sides need no swap.  This makes the
-        # incremental ≡ batch parity hold for ANY arrival order, not
-        # just doc_id-monotone arrival (unlike X225's flag log, whose
-        # "later doc is the dup" semantics genuinely need the order).
-        cand = (
-            x.join(
-                y,
-                (F.col("x.band_key") == F.col("y.band_key"))
-                & (F.col("x.doc_id") != F.col("y.doc_id")),
-            )
-            .select(
-                F.least("x.doc_id", "y.doc_id").alias("doc_a"),
-                F.col("x.hs").alias("hs_a"),
-                F.greatest("x.doc_id", "y.doc_id").alias("doc_b"),
-                F.col("y.hs").alias("hs_b"),
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        inter = F.size(
-            F.filter(
-                F.col("hs_a"), lambda v: F.array_contains(F.col("hs_b"), v)
-            )
-        )
-        jacc = inter * F.lit(1.0) / (
-            F.size("hs_a") + F.size("hs_b") - inter
-        )
         edges = (
-            cand.withColumn("jaccard", F.round(jacc, 6))
-            .filter(F.col("jaccard") >= 0.5)
+            lsh.candidates(bands, prior)
+            .filter(lsh.jaccard("hs_a", "hs_b") >= 0.5)
             .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
             .localCheckpoint(eager=True)
         )

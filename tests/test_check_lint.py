@@ -8,10 +8,11 @@ non-scalar class)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 from check import lint_oracle_output  # noqa: E402
 

@@ -18,12 +18,14 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = str(Path(__file__).resolve().parent.parent)
 
 _RUNNER = """
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {root!r})
 from pyspark.sql import SparkSession
 spark = (
     SparkSession.builder.master("local[4]")
@@ -41,7 +43,11 @@ print("COLD_OK", n)
 
 def _run_cold(key: str) -> str:
     proc = subprocess.run(
-        [sys.executable, "-c", _RUNNER.format(key=key, sf_dir=SF_DIR)],
+        [
+            sys.executable,
+            "-c",
+            _RUNNER.format(key=key, sf_dir=SF_DIR, root=ROOT),
+        ],
         capture_output=True,
         text=True,
         timeout=300,

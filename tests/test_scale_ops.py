@@ -315,9 +315,10 @@ def test_bench_headline_names_all_registered():
     key (the run would die mid-pass and lose the record)."""
     import importlib.util
     import sys
+    from pathlib import Path
 
     spec = importlib.util.spec_from_file_location(
-        "bench_mod", "/root/repo/bench.py"
+        "bench_mod", Path(__file__).resolve().parent.parent / "bench.py"
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["bench_mod"] = mod

@@ -10,13 +10,15 @@ Usage: python tools/check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
 import time
 from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from kafka_stream_spark.session import get_spark  # noqa: E402
 from kafka_stream_spark.sources.tables import TABLES  # noqa: E402
@@ -118,7 +120,6 @@ def write_summary(round_tag: str) -> int:
     never typed by hand, so the verdict-facing inventory cannot lag the
     code. Rewrites the block between STATUS:COUNTS markers in README.md
     and fails if the round's CHECK record is missing."""
-    import os
     import re
     import subprocess
 
@@ -134,7 +135,7 @@ def write_summary(round_tag: str) -> int:
         [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     m = re.search(r"(\d+) tests collected", collect.stdout)
     if collect.returncode != 0 or not m:
@@ -151,7 +152,7 @@ def write_summary(round_tag: str) -> int:
 
     # SURVEY §2 coverage guard: every registered key must have a row —
     # un-surveyed components are invisible capabilities to the judge
-    survey = open("/root/repo/SURVEY.md").read()
+    survey = open(os.path.join(ROOT, "SURVEY.md")).read()
     unsurveyed = sorted(k for k in qs if k not in survey)
     if unsurveyed:
         print(
@@ -165,13 +166,13 @@ def write_summary(round_tag: str) -> int:
     # can never drift from BENCH_DETAIL.json (round-7 verdict item #2)
     import json
 
-    bd = json.load(open("/root/repo/BENCH_DETAIL.json"))
+    bd = json.load(open(os.path.join(ROOT, "BENCH_DETAIL.json")))
     bench_line = bench_line_from_detail(bd)
 
     check_file = f"CHECK_{round_tag}.txt"
     check_note = (
         f"`{check_file}` records the closing pass"
-        if os.path.exists(f"/root/repo/{check_file}")
+        if os.path.exists(os.path.join(ROOT, check_file))
         else f"closing record `{check_file}` PENDING (generate before round close)"
     )
     block = (
@@ -185,7 +186,7 @@ def write_summary(round_tag: str) -> int:
         + bench_line
         + "<!-- STATUS:COUNTS:END -->"
     )
-    readme = open("/root/repo/README.md").read()
+    readme = open(os.path.join(ROOT, "README.md")).read()
     new = re.sub(
         r"<!-- STATUS:COUNTS:BEGIN.*?STATUS:COUNTS:END -->",
         block,
@@ -204,7 +205,7 @@ def write_summary(round_tag: str) -> int:
     if new == readme and "STATUS:COUNTS:BEGIN" not in readme:
         print("README.md has no STATUS:COUNTS markers", file=sys.stderr)
         return 1
-    open("/root/repo/README.md", "w").write(new)
+    open(os.path.join(ROOT, "README.md"), "w").write(new)
     print(
         f"README counts regenerated: {registered} registered "
         f"({oracled} oracled + {len(rows_only)} rows-only), "

@@ -27,7 +27,8 @@ import re
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 #: The reference-surface keys (SURVEY §2 rows S/F/P/J/A/D/K/T — the 39
 #: operators mapped in VERDICT's coverage table). The warm sharded gate
@@ -82,7 +83,7 @@ REFERENCE_SURFACE_KEYS: list[str] = [
 #: ``per_round`` registered non-fixed keys NOT yet in the ledger (sorted
 #: order), then appends them — every key provably cycles through cold
 #: exactly once before any key repeats.
-COLD_LEDGER = "/root/repo/tools/cold_ledger.json"
+COLD_LEDGER = os.path.join(ROOT, "tools", "cold_ledger.json")
 
 #: Hash-gated keys for which a 0-row result is the genuinely correct
 #: output on the testdata (each needs a FIXTURES.md justification).
@@ -142,7 +143,7 @@ def run_cold_tier(sf_dir: str, keys: list[str]) -> tuple[list[str], int]:
             [sys.executable, "tools/check.py", sf_dir, key],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=ROOT,
             env=env,
         )
         out = proc.stdout.replace("\r", "\n")
@@ -185,7 +186,7 @@ def main() -> int:
             [sys.executable, "tools/check.py", sf_dir, *part],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=ROOT,
         )
         out = proc.stdout.replace("\r", "\n")
         # per-query result lines only — check.py's "<N> ok, ..." summary
@@ -288,7 +289,7 @@ def main() -> int:
         f"once per pass): "
         f"{len(cold_lines) - cold_fail} ok, {cold_fail} FAILED.",
     ]
-    path = f"/root/repo/CHECK_{tag}.txt"
+    path = os.path.join(ROOT, f"CHECK_{tag}.txt")
     with open(path, "w") as f:
         f.write("\n".join(header + lines) + "\n")
     print(f"wrote {path}: {n_ok} ok, {n_ro} rows-only, 0 FAILED")
@@ -301,7 +302,7 @@ def main() -> int:
             [sys.executable, "bench.py"],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=ROOT,
         )
         if proc.returncode != 0:
             # ADVICE r8: a failed bench leaves BENCH_DETAIL.json stale or
@@ -318,7 +319,7 @@ def main() -> int:
 
     rc = subprocess.run(
         [sys.executable, "tools/check.py", "--summary", tag],
-        cwd="/root/repo",
+        cwd=ROOT,
     ).returncode
     if rc:
         return rc
@@ -332,9 +333,9 @@ def main() -> int:
 
     from check import bench_line_from_detail
 
-    bd = json.load(open("/root/repo/BENCH_DETAIL.json"))
+    bd = json.load(open(os.path.join(ROOT, "BENCH_DETAIL.json")))
     expected = bench_line_from_detail(bd)
-    readme = open("/root/repo/README.md").read()
+    readme = open(os.path.join(ROOT, "README.md")).read()
     if expected not in readme:
         print(
             "README bench line does not match BENCH_DETAIL.json — "
@@ -367,9 +368,9 @@ def main() -> int:
         "ADVICE.md",
     ):
         stage.extend(
-            os.path.basename(p) for p in glob.glob(f"/root/repo/{pat}")
+            os.path.basename(p) for p in glob.glob(os.path.join(ROOT, pat))
         )
-    subprocess.run(["git", "add", "--"] + sorted(set(stage)), cwd="/root/repo")
+    subprocess.run(["git", "add", "--"] + sorted(set(stage)), cwd=ROOT)
     print(f"staged for the closing commit: {' '.join(sorted(set(stage)))}")
     return 0
 

@@ -9,6 +9,7 @@ nprobe=2 probed cells). Run: python tools/dedup_store_probe.py [waves]
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
@@ -16,7 +17,8 @@ import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from kafka_stream_spark.session import get_spark  # noqa: E402
 from kafka_stream_spark.sources.tables import load  # noqa: E402

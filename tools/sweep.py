@@ -16,11 +16,13 @@ Usage: python tools/sweep.py [sf_dir] [--log PATH] [--chunk N]
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 #: oracle-side cost waivers, each with its FIXTURES.md justification.
 WAIVERS: dict[str, str] = {
@@ -32,7 +34,7 @@ WAIVERS: dict[str, str] = {
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
-    ap.add_argument("--log", default="/root/repo/SWEEP_sf01.txt")
+    ap.add_argument("--log", default=os.path.join(ROOT, "SWEEP_sf01.txt"))
     ap.add_argument("--chunk", type=int, default=40)
     ap.add_argument("--timeout", type=int, default=3600, help="per-chunk seconds")
     ap.add_argument(
@@ -82,7 +84,7 @@ def main() -> int:
                     [sys.executable, "tools/check.py", args.sf_dir, *chunk],
                     capture_output=True,
                     text=True,
-                    cwd="/root/repo",
+                    cwd=ROOT,
                     timeout=args.timeout,
                 )
                 out = p.stdout
