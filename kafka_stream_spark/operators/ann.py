@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import vectors
-from ..session import default_parallelism
+from . import vq
 
 
 def deterministic_centroids(
@@ -52,33 +52,10 @@ def deterministic_centroids(
     )
 
 
-def _cent_array(centroids: DataFrame):
-    """Codebook folded to ONE array column (c_id, c_emb structs) for the
-    per-row assignment/probe expressions below — broadcast exactly like
-    the joined codebook was, same size constraint. An empty codebook
-    folds to zero rows, so the crossJoin yields nothing, as the joined
-    codebook did."""
-    return F.broadcast(
-        centroids.agg(
-            F.collect_list(F.struct("c_id", "c_emb")).alias("_cents")
-        ).filter(F.size("_cents") > 0)
-    )
-
-
-#: per-centroid (negated-score, c_id) struct inside a lambda over the
-#: folded codebook: struct ordering ASC == (rounded cosine DESC, c_id
-#: ASC), the exact window order the r12 form used.  nanvl maps a NaN
-#: cosine (NaN embedding values) to -Infinity so it still sorts FIRST —
-#: Spark's desc ordering treats NaN as largest, and negation alone
-#: would leave NaN sorting last instead.  coalesce maps a NULL cosine
-#: (NULL or ragged embedding) to +Infinity so it sorts LAST, as under
-#: desc NULLS LAST.
-def _scored_struct_sql(vec_sql: str) -> str:
-    cos = vectors.cosine_spark_sql(vec_sql, "c.c_emb")
-    return (
-        f"struct(coalesce(nanvl((-round({cos}, 6)), "
-        f"CAST('-Infinity' AS DOUBLE)), CAST('Infinity' AS DOUBLE)) AS ns, "
-        f"c.c_id AS c_id)"
+def _codebook(centroids: DataFrame) -> DataFrame:
+    """The (c_id, c_emb) codebook folded for operators/vq.py."""
+    return vq.fold(
+        centroids.select(F.col("c_id").alias("cid"), F.col("c_emb").alias("cvec"))
     )
 
 
@@ -89,30 +66,11 @@ def ivf_assign(
     Exposed so callers running several searches against one corpus
     (e.g. graph_ann_search's build + seed passes) compute and persist
     it once — exactly what the persisted-index deployment does."""
-    # fan the corpus side out before the n×k_centroid cosine pass: the
-    # single-split test scan (and any narrow upstream) would otherwise
-    # run the whole assignment on one core; at deployment scale this
-    # shuffle is paid once per corpus inside the persisted index build
-    # (guide §2.6). Round-robin repartition does not affect the result:
-    # assignment is a per-row argmax with rounded-score/c_id tie-breaks.
-    #
-    # Round 13 (guide §2.3/§2.4): the argmax itself is now a per-row
-    # array_min over the broadcast codebook folded to ONE array — the
-    # r12 form expanded every corpus row k_centroid ways and sorted the
-    # expansion through a (n_id)-keyed window exchange (~k·n rows with
-    # the embedding payload); this computes the same (rounded cosine
-    # DESC, c_id ASC) argmax inside the scan stage with NO exchange.
-    return (
-        corpus.repartition(default_parallelism())
-        .crossJoin(_cent_array(centroids))
-        .withColumn(
-            "centroid_id",
-            F.expr(
-                f"array_min(transform(_cents, "
-                f"c -> {_scored_struct_sql('emb')})).c_id"
-            ),
-        )
-        .drop("_cents")
+    # assignment is a per-row argmax over the broadcast codebook, with
+    # no sort or window exchange; at deployment scale it is paid once per
+    # corpus inside the persisted index build
+    return vq.attach(corpus, _codebook(centroids)).select(
+        *corpus.columns, vq.nearest("emb", "cos").cid.alias("centroid_id")
     )
 
 
@@ -153,28 +111,11 @@ def ivf_search(
     # with both centroids and assigned supplied (the persisted-index
     # path, ivf_search_indexed), corpus may be None — it is never read
 
-    # top-nprobe routing as a per-row expression over the folded
-    # codebook (round 13): array_sort's struct ordering reproduces the
-    # (rounded cosine DESC, c_id ASC) window order, so slice+explode
-    # yields the identical probe rows with NO window exchange.  The
-    # query side is fanned out FIRST — the per-row |centroids|·dim
-    # scoring would otherwise run inside the single-split scan task
-    # (§2.6) — which also keeps the downstream re-rank join stage at
-    # full width (the r12 probes.repartition served that role).
-    probes = (
-        queries.repartition(default_parallelism())
-        .crossJoin(_cent_array(centroids))
-        .withColumn(
-            "centroid_id",
-            F.explode(
-                F.expr(
-                    f"transform(slice(array_sort(transform(_cents, "
-                    f"c -> {_scored_struct_sql('q_emb')})), 1, {int(nprobe)}), "
-                    f"s -> s.c_id)"
-                )
-            ),
-        )
-        .drop("_cents")
+    # top-nprobe routing, one row per probed list; the fanned-out query
+    # side also keeps the re-rank join stage at full width
+    probes = vq.attach(queries, _codebook(centroids)).select(
+        *queries.columns,
+        F.explode(vq.nearest("q_emb", "cos", nprobe).cid).alias("centroid_id"),
     )
 
     cand = (

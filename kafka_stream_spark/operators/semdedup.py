@@ -24,104 +24,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vectors
-
-
-def _sq_dist(a, b):
-    """Squared L2 distance between two array<double> columns (zip_with
-    + aggregate: JVM-side, no UDF)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+from . import vq
 
 
 def assign_clusters(e: DataFrame, cent: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: (vec_id, emb) x broadcast(cid, cvec)
-    -> (vec_id, emb, cid, dist), ties broken by (dist, cid) so both
-    engines and every rerun agree.  The centroid table is broadcast —
-    assignment is a map-side pass however large the fact side is.
-
-    Round 13 (guide §2.3/§2.4): the per-vector argmin is a row-local
-    array_min over the codebook folded to ONE broadcast array — struct
-    ordering ASC == the old window's (dist ASC, cid ASC) — instead of a
-    k-way row expansion sorted through a (vec_id)-keyed window
-    exchange.  Same rounded zip_with/aggregate distance, same
-    tie-break, no shuffle."""
-    from ..session import default_parallelism
-
-    cent_arr = F.broadcast(
-        cent.agg(F.collect_list(F.struct("cid", "cvec")).alias("_cents"))
-    )
-    sqd = (
-        "round(aggregate(zip_with(emb, c.cvec, "
-        "(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v), 6)"
-    )
-    # fan out BEFORE the per-row argmin: without the window's exchange
-    # the k·dim fold would run inside the single-split scan task
-    # (measured 2.1 s → 3.7 s on q_semantic_dedup before this line —
-    # the §2.6 lesson applies to expression rewrites too)
-    return (
-        e.repartition(default_parallelism())
-        .crossJoin(cent_arr)
-        .withColumn(
-            "_b",
-            F.expr(
-                f"array_min(transform(_cents, "
-                f"c -> struct({sqd} AS dist, c.cid AS cid)))"
-            ),
-        )
-        .select(
-            "vec_id",
-            "emb",
-            F.col("_b.cid").alias("cid"),
-            F.col("_b.dist").alias("dist"),
-        )
-    )
-
-
-def _update_centroids(assigned: DataFrame) -> DataFrame:
-    """Lloyd update: per-(cluster, dim) means folded back to vectors.
-    Shuffles (cid, pos, partial-sum) triples — never raw vectors."""
-    dims = (
-        assigned.select("cid", F.posexplode("emb").alias("pos", "val"))
-        .groupBy("cid", "pos")
-        .agg(F.avg("val").alias("v"))
-    )
-    return dims.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "v"))),
-            lambda s: s["v"],
-        ).alias("cvec")
-    )
+    -> (vec_id, emb, cid, dist), the rounded squared-L2 argmin with ties
+    broken by (dist, cid) so both engines and every rerun agree.  The
+    codebook is broadcast, so assignment is a map-side pass however
+    large the fact side is."""
+    return vq.attach(e, vq.fold(cent)).select(
+        "vec_id", "emb", vq.nearest("emb", "l2").alias("_nn")
+    ).select("vec_id", "emb", "_nn.cid", F.col("_nn.score").alias("dist"))
 
 
 def train_centroids(
     e: DataFrame, k: int, iters: int = 2, sample_fraction: float | None = None
 ) -> DataFrame:
-    """Deterministic k-means training: init = the k lowest vec_ids,
-    ``iters`` Lloyd rounds.  At corpus scale pass ``sample_fraction``
-    so training touches a hash-deterministic sample (SemDeDup trains
-    its 50k LAION centroids on a sample too); assignment of the full
-    corpus stays broadcast map-side either way."""
-    train = e
+    """Deterministic k-means training (operators/vq.lloyd): init = the
+    k lowest vec_ids, ``iters`` Lloyd rounds.  At corpus scale pass
+    ``sample_fraction`` so training touches a hash-deterministic sample
+    (SemDeDup trains its 50k LAION centroids on a sample too);
+    assignment of the full corpus stays broadcast map-side either way."""
+    train = None
     if sample_fraction is not None and sample_fraction < 1.0:
         # deterministic hash sample, not rand(): replays identically
         train = e.filter(
             F.pmod(F.xxhash64("vec_id"), 10_000)
             < int(sample_fraction * 10_000)
         )
-    init = (
-        e.select("vec_id")
-        .orderBy("vec_id")
-        .limit(k)
-        .join(e, "vec_id")
-        .select(F.col("vec_id").alias("cid"), F.col("emb").alias("cvec"))
-    )
-    cent = init
-    for _ in range(iters - 1):
-        cent = _update_centroids(assign_clusters(train, cent))
-    return cent.localCheckpoint(eager=True)
+    return vq.lloyd(e, k, iters=iters, train=train).localCheckpoint(eager=True)
 
 
 def semantic_dedup(
@@ -221,45 +153,11 @@ def _probe_assignments(e: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
     nearest cells ranked by (rounded cosine DESC, cid): prn = 1 is the
     ASSIGNED cell (the inverted-list home), prn 2..nprobe are the extra
     PROBED cells. One pass feeds both sides of the routed pair stage."""
-    # Round 13 (guide §2.3/§2.4): top-nprobe routing as a per-row
-    # expression over the codebook folded to ONE broadcast array,
-    # replacing the k-way row expansion + (vec_id)-keyed window
-    # exchange.  struct ordering ASC over ((-rounded cosine), cid)
-    # == the window's (cscore DESC, cid ASC); a NULL cscore
-    # (try_divide by a 0 norm) maps to +Infinity so it still sorts
-    # LAST, matching desc NULLS LAST, and a NaN cscore (NaN vector
-    # values; Spark orders NaN above every double) maps to -Infinity
-    # so it sorts FIRST, as under desc.  posexplode's 0-based
-    # position + 1 is exactly the window's prn.
-    from ..session import default_parallelism
-
-    cent_arr = F.broadcast(
-        cent.agg(F.collect_list(F.struct("cid", "cvec")).alias("_cents"))
-    )
-    cos = (
-        f"try_divide({vectors._dot_spark_sql('emb', 'c.cvec')}, "
-        f"{vectors._norm_spark_sql('emb')} * "
-        f"{vectors._norm_spark_sql('c.cvec')})"
-    )
-    probe_expr = (
-        f"transform(slice(array_sort(transform(_cents, "
-        f"c -> struct(coalesce(nanvl(-round({cos}, 6), "
-        f"CAST('-Infinity' AS DOUBLE)), "
-        f"CAST('Infinity' AS DOUBLE)) AS ns, c.cid AS cid))), "
-        f"1, {int(nprobe)}), s -> s.cid)"
-    )
-    # fan out before the per-row k·dim scoring (§2.6 — see
-    # assign_clusters)
-    return (
-        e.repartition(default_parallelism())
-        .crossJoin(cent_arr)
-        .select(
-            "vec_id",
-            "emb",
-            F.posexplode(F.expr(probe_expr)).alias("pos0", "cid"),
-        )
-        .select("vec_id", "emb", "cid", (F.col("pos0") + 1).alias("prn"))
-    )
+    return vq.attach(e, vq.fold(cent)).select(
+        "vec_id",
+        "emb",
+        F.posexplode(vq.nearest("emb", "cos", nprobe).cid).alias("pos0", "cid"),
+    ).select("vec_id", "emb", "cid", (F.col("pos0") + 1).alias("prn"))
 
 
 def semantic_dedup_routed(

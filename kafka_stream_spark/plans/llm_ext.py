@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import hashing, text, vectors
-from ..operators import lsh
+from ..operators import lsh, vq
 from ..session import default_parallelism
 from ..sources.tables import load
 from .registry import query
@@ -405,46 +405,15 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside those lists. At scale the centroid assignment is the partition
     key — each query touches ~nprobe/n_centroids of the corpus, and the
     centroid set (≪ corpus) is the only broadcast."""
+    from ..operators import ann
+
     e = load(spark, sf_dir, "embeddings")
-    cent = e.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
+    corpus = e.select(F.col("vec_id").alias("n_id"), F.col("embedding").alias("emb"))
+    queries = e.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
-    scored_assign = e.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "embedding",
-        "c_id",
-        F.round(vectors.cosine("embedding", "c_emb"), 6).alias("cscore"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("cscore"), "c_id")
-    # materialize the assignment once: both the inverted lists (assigned)
-    # and the query probes branch from it — without this the full
-    # |corpus|×|centroids| scoring pass runs twice
-    ranked = (
-        scored_assign.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") <= 2)
-        .localCheckpoint(eager=True)
-    )
-    assigned = ranked.filter(F.col("rn") == 1).select(
-        "vec_id", F.col("c_id").alias("centroid_id"), "embedding"
-    )
-    probes = ranked.filter((F.col("vec_id") < 10) & (F.col("rn") <= 2)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("c_id").alias("centroid_id"),
-        F.col("embedding").alias("q_emb"),
-    )
-    cand = probes.join(assigned, "centroid_id").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    scored = cand.select(
-        "q_id",
-        F.col("vec_id").alias("n_id"),
-        F.round(vectors.cosine("q_emb", "embedding"), 6).alias("score"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), "n_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "n_id", "score", "rn")
+    return ann.ivf_search(corpus, queries, k=3, nprobe=2, every=50).select(
+        "q_id", "n_id", "score", "rn"
     )
 
 
@@ -1027,98 +996,41 @@ _KM_DIST_SQL = (
 )
 
 
-def _kmeans_oracle() -> str:
-    def scored(cent: str) -> str:
-        return (
-            f"SELECT e.vec_id, c.cid, round({_KM_DIST_SQL}, 6) AS dist "
-            f"FROM embeddings e CROSS JOIN {cent} c"
-        )
-
-    assign = (
-        "SELECT vec_id, cid, dist FROM (SELECT vec_id, cid, dist, "
-        "row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn "
-        "FROM {scored}) WHERE rn = 1"
-    )
-    cent_update = (
-        "SELECT cid, list(v ORDER BY pos) AS cvec FROM ("
-        "SELECT a.cid, u.pos, avg(u.val) AS v "
-        "FROM {assign} a JOIN unn u ON u.vec_id = a.vec_id "
-        "GROUP BY a.cid, u.pos) GROUP BY cid"
-    )
-    return f"""
-    WITH unn AS (
-      SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS val,
-             unnest(range(len(embedding))) AS pos
-      FROM embeddings
-    ), cent0 AS (
-      SELECT vec_id AS cid,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-      FROM embeddings WHERE vec_id < 8
-    ), scored1 AS ({scored('cent0')}
-    ), assign1 AS ({assign.format(scored='scored1')}
-    ), cent1 AS ({cent_update.format(assign='assign1')}
-    ), scored2 AS ({scored('cent1')}
-    ), assign2 AS ({assign.format(scored='scored2')}
-    ), cent2 AS ({cent_update.format(assign='assign2')})
+@query(
+    "q_kmeans_quantizer",
+    oracle=f"""
+    WITH {vq.kmeans_ctes(k=8, iters=2)}
     SELECT a.cid AS cluster_id, count(*) AS n_vectors,
            round(avg(a.dist), 4) AS avg_sq_dist,
            round(list_aggregate(c.cvec, 'sum'), 4) AS centroid_sum
     FROM assign2 a JOIN cent2 c ON a.cid = c.cid
     GROUP BY a.cid, c.cvec
-    """
-
-
-@query("q_kmeans_quantizer", oracle=_kmeans_oracle())
+    """,
+)
 def q_kmeans_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained coarse quantizer for IVF: k=8 centroids, deterministic
-    init (vec_id < 8), two unrolled Lloyd iterations. Each iteration is
-    (1) assignment — centroids broadcast, squared-L2 argmin evaluated
-    map-side over the corpus, and (2) update — posexplode to (cid, pos)
-    and a mean per dimension, an O(k*d)-group shuffle independent of
-    corpus size. This is the training step q_ann_ivf's fixed sampler
-    deliberately skipped; at 100 TB you train on a sample with exactly
-    this plan, then the trained centroid table IS the partition function
-    for the inverted lists. Output: per-cluster size, mean assignment
-    distance, and a centroid checksum so the oracle verifies both the
-    assignment and the update step of both iterations."""
+    init (the 8 lowest vec_ids), two unrolled Lloyd iterations. Each
+    iteration is (1) assignment — centroids broadcast, squared-L2 argmin
+    evaluated map-side over the corpus, and (2) update — posexplode to
+    (cid, pos) and a mean per dimension, an O(k*d)-group shuffle
+    independent of corpus size. This is the training step q_ann_ivf's
+    fixed sampler deliberately skipped; at 100 TB you train on a sample
+    with exactly this plan, then the trained centroid table IS the
+    partition function for the inverted lists. Output: per-cluster
+    size, mean assignment distance, and a centroid checksum so the
+    oracle verifies both the assignment and the update step of both
+    iterations."""
+    from ..operators.semdedup import assign_clusters, train_centroids
+
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-
-    def assign(cent: DataFrame) -> DataFrame:
-        scored = e.crossJoin(F.broadcast(cent)).select(
-            "vec_id",
-            "emb",
-            "cid",
-            F.round(_sq_dist(F.col("emb"), F.col("cvec")), 6).alias("dist"),
-        )
-        w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn", "cvec")
-        )
-
-    def update(assigned: DataFrame) -> DataFrame:
-        dims = assigned.select(
-            "cid", F.posexplode("emb").alias("pos", "val")
-        ).groupBy("cid", "pos").agg(F.avg("val").alias("v"))
-        return dims.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda s: s["v"],
-            ).alias("cvec")
-        )
-
-    cent0 = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("emb").alias("cvec")
     )
     # materialize each trained centroid set once: every later stage
     # branches from it, and without the checkpoint the full corpus
     # assignment pass would recompute per consumer
-    cent1 = update(assign(cent0)).localCheckpoint(eager=True)
-    assign2 = assign(cent1).localCheckpoint(eager=True)
-    cent2 = update(assign2)
+    cent1 = train_centroids(e, k=8, iters=2)
+    assign2 = assign_clusters(e, cent1).localCheckpoint(eager=True)
+    cent2 = vq.update(assign2)
     return (
         assign2.groupBy("cid")
         .agg(

@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import vectors
+from ..operators import vq
 from ..sources.tables import load
-from .llm_ext import _KM_DIST_SQL
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -28,50 +28,10 @@ from .registry import query
 _SEM_TAU = 0.4
 
 
-def _kmeans_assign2_ctes() -> str:
-    """CTE chain ending in ``assign2(vec_id, cid, dist)`` — the same
-    deterministic 2-iteration Lloyd training as q_kmeans_quantizer's
-    oracle (k=8, init = vec_id < 8), so cluster membership is identical
-    in both engines."""
-
-    def scored(cent: str) -> str:
-        return (
-            f"SELECT e.vec_id, c.cid, round({_KM_DIST_SQL}, 6) AS dist "
-            f"FROM embeddings e CROSS JOIN {cent} c"
-        )
-
-    assign = (
-        "SELECT vec_id, cid, dist FROM (SELECT vec_id, cid, dist, "
-        "row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn "
-        "FROM {scored}) WHERE rn = 1"
-    )
-    cent_update = (
-        "SELECT cid, list(v ORDER BY pos) AS cvec FROM ("
-        "SELECT a.cid, u.pos, avg(u.val) AS v "
-        "FROM {assign} a JOIN unn u ON u.vec_id = a.vec_id "
-        "GROUP BY a.cid, u.pos) GROUP BY cid"
-    )
-    return f"""
-    unn AS (
-      SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS val,
-             unnest(range(len(embedding))) AS pos
-      FROM embeddings
-    ), cent0 AS (
-      SELECT vec_id AS cid,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-      FROM embeddings WHERE vec_id < 8
-    ), scored1 AS ({scored('cent0')}
-    ), assign1 AS ({assign.format(scored='scored1')}
-    ), cent1 AS ({cent_update.format(assign='assign1')}
-    ), scored2 AS ({scored('cent1')}
-    ), assign2 AS ({assign.format(scored='scored2')}
-    )"""
-
-
 @query(
     "q_semantic_dedup",
     oracle=f"""
-    WITH {_kmeans_assign2_ctes()},
+    WITH {vq.kmeans_ctes(k=8, iters=2)},
     members AS (
       SELECT a.vec_id, a.cid, e.embedding
       FROM assign2 a JOIN embeddings e ON e.vec_id = a.vec_id

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import vq
 from ..sources.tables import load
 from .llm_ext import _KM_DIST_SQL, _sq_dist
 from .registry import query
@@ -629,28 +630,7 @@ def q_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CLUSTER_ORACLE_PREFIX = f"""
-    WITH unn AS (
-      SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS val,
-             unnest(range(len(embedding))) AS pos
-      FROM embeddings
-    ), cent0 AS (
-      SELECT vec_id AS cid,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-      FROM embeddings WHERE vec_id < 8
-    ), scored1 AS (
-      SELECT e.vec_id, c.cid, round({_KM_DIST_SQL}, 6) AS dist
-      FROM embeddings e CROSS JOIN cent0 c
-    ), assign1 AS (
-      SELECT vec_id, cid FROM (
-        SELECT vec_id, cid, row_number() OVER
-          (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM scored1) WHERE rn = 1
-    ), cent1 AS (
-      SELECT cid, list(v ORDER BY pos) AS cvec FROM (
-        SELECT a.cid, u.pos, avg(u.val) AS v
-        FROM assign1 a JOIN unn u ON u.vec_id = a.vec_id
-        GROUP BY a.cid, u.pos) GROUP BY cid
-    ), scored2 AS (
+    WITH {vq.kmeans_ctes(k=8, iters=1)}, scored2 AS (
       SELECT e.vec_id, c.cid, round(sqrt({_KM_DIST_SQL}), 6) AS dist
       FROM embeddings e CROSS JOIN cent1 c
     ), own AS (
@@ -693,33 +673,8 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    cent0 = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("emb").alias("cvec")
-    )
-    scored1 = e.crossJoin(F.broadcast(cent0)).select(
-        "vec_id",
-        "emb",
-        "cid",
-        F.round(_sq_dist(F.col("emb"), F.col("cvec")), 6).alias("dist"),
-    )
+    cent1 = vq.lloyd(e, k=8, iters=2)
     w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-    assign1 = (
-        scored1.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid", "emb")
-    )
-    cent1 = (
-        assign1.select("cid", F.posexplode("emb").alias("pos", "val"))
-        .groupBy("cid", "pos")
-        .agg(F.avg("val").alias("v"))
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda s: s["v"],
-            ).alias("cvec")
-        )
-    )
     scored2 = e.crossJoin(F.broadcast(cent1)).select(
         "vec_id",
         "cid",
@@ -785,34 +740,8 @@ def q_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    cent0 = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("emb").alias("cvec")
-    )
-    scored1 = e.crossJoin(F.broadcast(cent0)).select(
-        "vec_id",
-        "emb",
-        "cid",
-        F.round(_sq_dist(F.col("emb"), F.col("cvec")), 6).alias("dist"),
-    )
+    cent1 = vq.lloyd(e, k=8, iters=2).localCheckpoint(eager=True)
     w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-    assign1 = (
-        scored1.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid", "emb")
-    )
-    cent1 = (
-        assign1.select("cid", F.posexplode("emb").alias("pos", "val"))
-        .groupBy("cid", "pos")
-        .agg(F.avg("val").alias("v"))
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda s: s["v"],
-            ).alias("cvec")
-        )
-        .localCheckpoint(eager=True)
-    )
     scored2 = e.crossJoin(F.broadcast(cent1)).select(
         "vec_id",
         "cid",

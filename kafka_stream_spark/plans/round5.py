@@ -15,7 +15,7 @@ the real entropy-coded decode.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import default_parallelism
@@ -2246,192 +2246,77 @@ def q_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X508 — product quantization (PQ) codebook + codes
 # ---------------------------------------------------------------------------
 
+from ..operators import vq  # noqa: E402
 from .llm_ext import _sq_dist  # noqa: E402
 
 _PQ_M = 8  # subspaces
 _PQ_K = 16  # centroids per subspace (4-bit codes)
 
-
-# --- literal-codebook PQ machinery (round-13 optimization) -----------------
-#
-# The PQ/IVF trainers below used to run every nearest-centroid assignment
-# as a 16x broadcast-join expansion + a (vec_id, m) sort-window — ~10
-# small jobs and 4+ exchanges per query (VERDICT r12 next #1).  The
-# codebooks are tiny and DETERMINISTIC (k<=16 per subspace, k=8 coarse),
-# so each trained codebook is collected to the driver (hundreds of rows)
-# and embedded as a folded SQL literal; assignment becomes a pure
-# per-row expression — array_min over struct(round(sq_dist, 6), cid),
-# which reproduces the window's (dist ASC, cid ASC) tie-break exactly
-# (struct ordering is lexicographic) — with NO join, NO window and NO
-# shuffle (guide §1.2/§2.4).  Distances use the identical
-# zip_with/aggregate fold as _sq_dist, against CAST('<repr>' AS DOUBLE)
-# literals (repr round-trips, string->double cast is correctly rounded),
-# so every per-pair value is bit-identical to the joined form.  At
-# corpus scale the collected frames stay codebook-sized (k entries),
-# never data-sized.
+# the M 8-dim subvectors and their trained per-subspace codebooks (the
+# DuckDB twin of _pq_subs/_pq_encode: ``pcent1`` is the trained
+# codebook, ``passign2`` every subvector's code)
+_PQ_CTES = f"""
+    subs AS (
+      SELECT vec_id, m,
+             list_transform(embedding[m * 8 + 1 : m * 8 + 8],
+                            x -> CAST(x AS DOUBLE)) AS sv
+      FROM embeddings CROSS JOIN
+           (SELECT unnest(range({_PQ_M})) AS m)
+    ), {vq.kmeans_ctes(k=_PQ_K, iters=2, src="subs", vec="sv", key="m",
+                       prefix="p")}"""
 
 
-def _pq_lit_d(v: float) -> str:
-    return f"CAST('{v!r}' AS DOUBLE)"
-
-
-def _pq_sqdist6_sql(vec_sql: str, cvec_sql: str) -> str:
-    """round(_sq_dist(vec, cvec), 6) as SQL — the exact assignment
-    distance (same fold, same rounding) used by the joined form."""
-    return (
-        f"round(aggregate(zip_with({vec_sql}, {cvec_sql}, "
-        f"(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v), 6)"
-    )
-
-
-def _pq_centlist_sql(entries) -> str:
-    """[(cid, [floats])] (ascending cid) -> SQL literal
-    array<struct<cid bigint, cvec array<double>>>."""
-    inner = ",".join(
-        f"named_struct('cid', CAST({int(cid)} AS BIGINT), 'cvec', "
-        f"array({','.join(_pq_lit_d(float(x)) for x in cv)}))"
-        for cid, cv in entries
-    )
-    return f"array({inner})"
-
-
-def _pq_argmin_sql(vec_sql: str, centlist_sql: str) -> str:
-    """Nearest-centroid struct(dist, cid) over a literal codebook:
-    array_min's struct ordering = (dist ASC, cid ASC), identical to the
-    row_number window it replaces."""
-    return (
-        f"array_min(transform({centlist_sql}, "
-        f"c -> struct({_pq_sqdist6_sql(vec_sql, 'c.cvec')} AS dist, "
-        f"c.cid AS cid)))"
-    )
-
-
-def _pq_cents_by_m_sql(cent_by_m) -> str:
-    """{m: [(cid, vec)]} -> SQL literal array indexed by m + 1."""
-    per_m = ",".join(
-        _pq_centlist_sql(sorted(cent_by_m.get(m, [])))
-        for m in range(_PQ_M)
-    )
-    return f"array({per_m})"
-
-
-def _pq_train_cents1(e: DataFrame) -> dict:
-    """One Lloyd round of PQ training, returning the updated per-
-    subspace codebooks as {m: [(cid, [8 doubles])]}.  Init = the
-    subvectors of vec_id < _PQ_K (collected: <=16 rows); assignment is
-    the literal-codebook expression; the update is the SAME
-    posexplode -> (cid, m, pos) avg aggregate as the joined form
-    (identical groups, identical avg), collected at codebook grain."""
-    init_rows = (
-        e.filter(F.col("vec_id") < _PQ_K).select("vec_id", "emb").collect()
-    )
-    cent0 = {
-        m: sorted(
-            (int(r["vec_id"]), list(r["emb"][m * 8 : m * 8 + 8]))
-            for r in init_rows
-        )
-        for m in range(_PQ_M)
-    }
-    cents0_sql = _pq_cents_by_m_sql(cent0)
+def _pq_subs(e: DataFrame) -> DataFrame:
+    """(vec_id, emb) → (vec_id, m, emb): the M 8-dim subvectors."""
     ms = e.sparkSession.range(_PQ_M).select(F.col("id").cast("int").alias("m"))
-    subs = e.crossJoin(F.broadcast(ms)).select(
-        "vec_id", "m", F.slice(F.col("emb"), F.col("m") * 8 + 1, 8).alias("sv")
+    return e.crossJoin(F.broadcast(ms)).select(
+        "vec_id", "m", F.slice("emb", F.col("m") * 8 + 1, 8).alias("emb")
     )
-    a1 = subs.select(
-        "m",
-        F.expr(_pq_argmin_sql("sv", f"element_at({cents0_sql}, m + 1)"))
-        .getField("cid")
-        .alias("cid"),
-        "sv",
-    )
-    dims = (
-        a1.select("cid", "m", F.posexplode("sv").alias("pos", "val"))
-        .groupBy("cid", "m", "pos")
-        .agg(F.avg("val").alias("v"))
-        .collect()
-    )
-    cent1: dict = {}
-    acc: dict = {}
-    for r in dims:
-        acc.setdefault((int(r["m"]), int(r["cid"])), {})[int(r["pos"])] = float(
-            r["v"]
-        )
-    for (m, cid), by_pos in acc.items():
-        cent1.setdefault(m, []).append(
-            (cid, [by_pos[p] for p in sorted(by_pos)])
-        )
-    for m in cent1:
-        cent1[m].sort()
-    return cent1
 
 
-def _pq_codes_sql(emb_sql: str, cents1_sql: str) -> str:
-    """Per-vector PQ codes in ONE expression: for each subspace m, the
-    nearest updated centroid of slice(emb, m*8+1, 8) — array of
-    struct(dist, cid), m ascending."""
-    vec = f"slice({emb_sql}, m * 8 + 1, 8)"
-    return (
-        f"transform(sequence(0, {_PQ_M - 1}), "
-        f"m -> {_pq_argmin_sql(vec, f'element_at({cents1_sql}, m + 1)')})"
+def _pq_encode(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """PQ training and encoding: each subspace's codebook is trained by
+    one Lloyd round (init = the K lowest vec_ids' subvectors) and every
+    subvector is coded by its nearest centroid. Returns the codebooks
+    folded per ``m`` and the codes ``(vec_id, m, nn)``, ``nn`` being
+    vq.nearest's struct (``cid``, ``score`` = the rounded squared
+    distance, ``pos`` = the index into the folded codebook)."""
+    subs = _pq_subs(e)
+    books = vq.fold(vq.lloyd(subs, _PQ_K, iters=2, key="m"), key="m")
+    codes = vq.attach(subs, books, "m").select(
+        "vec_id", "m", vq.nearest("emb", "l2").alias("nn")
+    )
+    return books, codes
+
+
+def _by_m(df: DataFrame, field: Column, name: str) -> DataFrame:
+    """(vec_id, m, ...) → (vec_id, name): ``field`` of every subspace,
+    as an array in m order."""
+    return df.groupBy("vec_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("m", field.alias("f")))),
+            lambda s: s["f"],
+        ).alias(name)
     )
 
 
 @query(
     "q_pq_codebook",
     oracle=f"""
-    WITH subs AS (
-      SELECT vec_id, m,
-             list_transform(embedding[m * 8 + 1 : m * 8 + 8],
-                            x -> CAST(x AS DOUBLE)) AS sv
-      FROM embeddings CROSS JOIN
-           (SELECT unnest(range({_PQ_M})) AS m)
-    ), cent0 AS (
-      SELECT vec_id AS cid, m, sv AS cvec FROM subs WHERE vec_id < {_PQ_K}
-    ), sc1 AS (
-      SELECT s.vec_id, s.m, c.cid,
-             round(list_aggregate(list_transform(range(8),
-               i -> pow(s.sv[i + 1] - c.cvec[i + 1], 2)), 'sum'), 6) AS dist
-      FROM subs s JOIN cent0 c ON s.m = c.m
-    ), a1 AS (
-      SELECT vec_id, m, cid FROM (
-        SELECT vec_id, m, cid,
-               row_number() OVER (PARTITION BY vec_id, m
-                                  ORDER BY dist, cid) AS rn
-        FROM sc1) WHERE rn = 1
-    ), cent1 AS (
-      SELECT cid, m, list(v ORDER BY pos) AS cvec FROM (
-        SELECT a1.cid, a1.m, u.pos, avg(u.val) AS v
-        FROM a1 JOIN (
-          SELECT vec_id, m, unnest(sv) AS val,
-                 unnest(range(len(sv))) AS pos
-          FROM subs) u ON u.vec_id = a1.vec_id AND u.m = a1.m
-        GROUP BY a1.cid, a1.m, u.pos)
-      GROUP BY cid, m
-    ), sc2 AS (
-      SELECT s.vec_id, s.m, c.cid,
-             round(list_aggregate(list_transform(range(8),
-               i -> pow(s.sv[i + 1] - c.cvec[i + 1], 2)), 'sum'), 6) AS dist
-      FROM subs s JOIN cent1 c ON s.m = c.m
-    ), a2 AS (
-      SELECT vec_id, m, cid, dist FROM (
-        SELECT vec_id, m, cid, dist,
-               row_number() OVER (PARTITION BY vec_id, m
-                                  ORDER BY dist, cid) AS rn
-        FROM sc2) WHERE rn = 1
-    )
+    WITH {_PQ_CTES}
     SELECT vec_id,
            string_agg(CAST(cid AS VARCHAR), '-' ORDER BY m) AS pq_code,
            round(sum(dist), 6) AS qerr
-    FROM a2 GROUP BY vec_id
+    FROM passign2 GROUP BY vec_id
     """,
 )
 def q_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X508 — product quantization (Jegou et al. 2011, the ANN
     compression standard): the 64-dim embedding splits into M=8
-    subvectors; each subspace trains its own K=4 codebook
+    subvectors; each subspace trains its own K=16 codebook
     (deterministic init = first K vectors' subvectors, one Lloyd
     round) and every vector compresses to an 8-symbol code — 64 floats
-    become 8 small ints (here 2 bits each), the memory step that makes
+    become 8 small ints (4 bits each), the memory step that makes
     billion-vector IVF-PQ indexes fit RAM.  Output: per-vector PQ code
     string + quantization error (the sum of per-subspace residuals —
     the quantity recall tuning trades against compression).
@@ -2442,29 +2327,16 @@ def q_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw vectors; assignment is a broadcast of M*K tiny centroids
     against the subvector stream, exactly the IVF discipline per
     subspace; codes are 8 bytes/vector however large the corpus."""
-    # Round-13 rewrite (VERDICT r12 next #1, guide §1.2/§2.4): the two
-    # assignment passes were each a 16x broadcast-join expansion + a
-    # (vec_id, m) sort-window, and the output rollup a third shuffle.
-    # The codebooks are tiny and deterministic, so training collects
-    # them (literal-codebook machinery above) and BOTH assignments
-    # become pure per-row expressions; the final output is computed at
-    # VECTOR grain in one shuffle-free projection (codes generated in m
-    # order replace the collect_list/array_sort rollup; qerr folds the
-    # same 8 rounded dists in m order).
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    cent1 = _pq_train_cents1(e)
-    codes = _pq_codes_sql("emb", _pq_cents_by_m_sql(cent1))
-    return e.select(
-        "vec_id", F.expr(codes).alias("codes")
-    ).select(
+    _, codes = _pq_encode(e)
+    # qerr folds the 8 rounded distances in m order
+    return _by_m(codes, F.col("nn"), "nn").select(
         "vec_id",
-        F.expr(
-            "array_join(transform(codes, s -> CAST(s.cid AS STRING)), '-')"
-        ).alias("pq_code"),
-        F.expr(
-            "round(aggregate(codes, 0D, (acc, s) -> acc + s.dist), 6)"
+        F.array_join(F.col("nn.cid").cast("array<string>"), "-").alias("pq_code"),
+        F.round(
+            F.aggregate("nn.score", F.lit(0.0), lambda acc, d: acc + d), 6
         ).alias("qerr"),
     )
 
@@ -2546,57 +2418,15 @@ def q_prefix_sharing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X510 — composed IVF-PQ search with recall evaluation (the ANN capstone)
 # ---------------------------------------------------------------------------
 
-from .llm_ext2 import _kmeans_assign2_ctes  # noqa: E402
-
 _IVFPQ_NPROBE = 2
 _IVFPQ_NQ = 10  # benchmark queries: vec_id < 10
 _IVFPQ_RERANK = 16  # ADC shortlist size re-ranked with exact distances
-
-# PQ CTE chain over raw vectors (the X508 training, shared spelling)
-_PQ_CTES = f"""
-    subs AS (
-      SELECT vec_id, m,
-             list_transform(embedding[m * 8 + 1 : m * 8 + 8],
-                            x -> CAST(x AS DOUBLE)) AS sv
-      FROM embeddings CROSS JOIN
-           (SELECT unnest(range({_PQ_M})) AS m)
-    ), pcent0 AS (
-      SELECT vec_id AS cid, m, sv AS cvec FROM subs WHERE vec_id < {_PQ_K}
-    ), psc1 AS (
-      SELECT s.vec_id, s.m, c.cid,
-             round(list_aggregate(list_transform(range(8),
-               i -> pow(s.sv[i + 1] - c.cvec[i + 1], 2)), 'sum'), 6) AS dist
-      FROM subs s JOIN pcent0 c ON s.m = c.m
-    ), pa1 AS (
-      SELECT vec_id, m, cid FROM (
-        SELECT vec_id, m, cid,
-               row_number() OVER (PARTITION BY vec_id, m
-                                  ORDER BY dist, cid) AS rn
-        FROM psc1) WHERE rn = 1
-    ), pcent1 AS (
-      SELECT cid, m, list(v ORDER BY pos) AS cvec FROM (
-        SELECT pa1.cid, pa1.m, u.pos, avg(u.val) AS v
-        FROM pa1 JOIN (
-          SELECT vec_id, m, unnest(sv) AS val,
-                 unnest(range(len(sv))) AS pos
-          FROM subs) u ON u.vec_id = pa1.vec_id AND u.m = pa1.m
-        GROUP BY pa1.cid, pa1.m, u.pos)
-      GROUP BY cid, m
-    ), pcodes AS (
-      SELECT vec_id, m, cid FROM (
-        SELECT s.vec_id, s.m, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-                 round(list_aggregate(list_transform(range(8),
-                   i -> pow(s.sv[i + 1] - c.cvec[i + 1], 2)), 'sum'), 6),
-                 c.cid) AS rn
-        FROM subs s JOIN pcent1 c ON s.m = c.m) WHERE rn = 1
-    )"""
 
 
 @query(
     "q_ivfpq_recall",
     oracle=f"""
-    WITH {_kmeans_assign2_ctes()},
+    WITH {vq.kmeans_ctes(k=8, iters=2)},
     {_PQ_CTES},
     queries AS (
       SELECT vec_id AS qid FROM embeddings WHERE vec_id < {_IVFPQ_NQ}
@@ -2624,7 +2454,7 @@ _PQ_CTES = f"""
                i -> pow(qs.sv[i + 1] - pc.cvec[i + 1], 2)), 'sum'), 6)), 6)
                AS adist
       FROM cand c
-      JOIN pcodes k ON k.vec_id = c.cand_id
+      JOIN passign2 k ON k.vec_id = c.cand_id
       JOIN pcent1 pc ON pc.cid = k.cid AND pc.m = k.m
       JOIN subs qs ON qs.vec_id = c.qid AND qs.m = k.m
       GROUP BY c.qid, c.cand_id
@@ -2685,80 +2515,30 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     land at nprobe=2 routing recall 10/10 and end-to-end recall@1
     measured by the query itself.
 
-    Scale: routing is broadcast (8 coarse + 32 PQ centroids); the
-    candidate join is cell-keyed (cluster-bounded like X266); ADC
-    shuffles (qid, cand, m, code) tuples — 16 bytes/candidate/subspace
-    — and the per-query argmin is a rank over candidates only. This is
-    the memory layout that serves billion-vector indexes."""
-    # Round-13 rewrite (VERDICT r12 next #1, guide §1.2/§2.4): coarse
-    # k-means, PQ training, corpus encoding, query routing AND the ADC
-    # distance all ran as broadcast-join expansions + sort-windows +
-    # per-(qid, cand, m) groupBy — ~10 small jobs.  Every codebook here
-    # is tiny and deterministic, so each is collected and embedded as a
-    # folded SQL literal (machinery above q_pq_codebook): assignment /
-    # routing / encoding / ADC become per-row expressions, and the only
-    # remaining shuffles are the candidate join and the per-query
-    # top-k windows.  Per-pair arithmetic (zip_with fold, round 6,
-    # (dist, cid) tie-breaks) is identical; ADC folds the same 8
-    # rounded per-subspace distances in m order.
+    Scale: routing is broadcast (8 coarse + 8×16 PQ centroids); the
+    candidate join is cell-keyed (cluster-bounded like X266); ADC is an
+    indexed lookup of a candidate's 8 codes into its query's broadcast
+    8×16 distance table, and the per-query argmin is a rank over
+    candidates only. This is the memory layout that serves
+    billion-vector indexes."""
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    # coarse k-means (train_centroids k=8, iters=2 spelling): init = the
-    # 8 lowest vec_ids, one Lloyd round with the same (cid, pos) avg
-    init_rows = e.orderBy("vec_id").limit(8).select("vec_id", "emb").collect()
-    centc0_sql = _pq_centlist_sql(
-        sorted((int(r["vec_id"]), list(r["emb"])) for r in init_rows)
+    # coarse k-means (k=8, one Lloyd round) routes; PQ codes rank
+    coarse = vq.fold(vq.lloyd(e, 8, iters=2))
+    assigned = vq.attach(e, coarse).select(
+        "vec_id", vq.nearest("emb", "l2").cid.alias("cid")
     )
-    cdims = (
-        e.select(
-            F.expr(_pq_argmin_sql("emb", centc0_sql))
-            .getField("cid")
-            .alias("cid"),
-            F.posexplode("emb").alias("pos", "val"),
-        )
-        .groupBy("cid", "pos")
-        .agg(F.avg("val").alias("v"))
-        .collect()
-    )
-    cacc: dict = {}
-    for r in cdims:
-        cacc.setdefault(int(r["cid"]), {})[int(r["pos"])] = float(r["v"])
-    coarse1_sql = _pq_centlist_sql(
-        sorted(
-            (cid, [by_pos[p] for p in sorted(by_pos)])
-            for cid, by_pos in cacc.items()
-        )
-    )
-    assigned = e.select(
-        "vec_id",
-        F.expr(_pq_argmin_sql("emb", coarse1_sql)).getField("cid").alias("cid"),
-    )
-
-    # PQ training (X508 spelling) + whole-corpus encoding at vector grain
-    cents1_sql = _pq_cents_by_m_sql(_pq_train_cents1(e))
-    pcodes = e.select(
-        "vec_id",
-        F.expr(
-            f"transform({_pq_codes_sql('emb', cents1_sql)}, s -> s.cid)"
-        ).alias("codes"),
-    )
+    books, codes = _pq_encode(e)
+    pcodes = _by_m(codes, F.col("nn.pos"), "codes")
 
     queries = e.filter(F.col("vec_id") < _IVFPQ_NQ).select(
         F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
     )
-    # nprobe nearest coarse cells per query: array_sort over the scored
-    # literal codebook = the (dist ASC, ccid ASC) window order
-    qprobe = queries.select(
+    qprobe = vq.attach(queries, coarse).select(
         "qid",
         "qemb",
-        F.explode(
-            F.expr(
-                f"transform(slice(array_sort(transform({coarse1_sql}, "
-                f"c -> struct({_pq_sqdist6_sql('qemb', 'c.cvec')} AS dist, "
-                f"c.cid AS cid))), 1, {_IVFPQ_NPROBE}), s -> s.cid)"
-            )
-        ).alias("cid"),
+        F.explode(vq.nearest("qemb", "l2", _IVFPQ_NPROBE).cid).alias("cid"),
     )
     cand = (
         F.broadcast(qprobe)
@@ -2766,21 +2546,25 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", "qemb", F.col("vec_id").alias("cand_id"))
     )
-    # ADC: per-subspace rounded distance of the query's exact subvector
-    # against the candidate code's centroid, folded in m order
-    _adc_lookup = (
-        f"element_at(filter(element_at({cents1_sql}, m + 1), "
-        f"c -> c.cid = element_at(codes, m + 1)), 1).cvec"
-    )
+    # ADC: each query's table of rounded distances from its subvector m
+    # to every centroid of subspace m; a candidate's distance is its
+    # codes' entries of those tables, summed in m order
+    tables = _by_m(
+        vq.attach(
+            _pq_subs(e.filter(F.col("vec_id") < _IVFPQ_NQ)), books, "m"
+        ).select("vec_id", "m", vq.distances("emb", "l2").alias("d")),
+        F.col("d"),
+        "tables",
+    ).withColumnRenamed("vec_id", "qid")
     adc = (
-        cand.join(pcodes, cand.cand_id == pcodes.vec_id)
+        cand.join(F.broadcast(tables), "qid")
+        .join(pcodes, cand.cand_id == pcodes.vec_id)
         .select(
             "qid",
             "cand_id",
             F.expr(
-                f"round(aggregate(transform(sequence(0, {_PQ_M - 1}), m -> "
-                f"{_pq_sqdist6_sql('slice(qemb, m * 8 + 1, 8)', _adc_lookup)}"
-                f"), 0D, (acc, v) -> acc + v), 6)"
+                "round(aggregate(zip_with(tables, codes, "
+                "(t, c) -> element_at(t, c)), 0D, (acc, v) -> acc + v), 6)"
             ).alias("adist"),
         )
     )

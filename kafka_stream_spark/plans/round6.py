@@ -1735,13 +1735,13 @@ def q_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X590 — clustering quality: purity + NMI of the semantic clusters
 # ---------------------------------------------------------------------------
 
-from .llm_ext2 import _kmeans_assign2_ctes  # noqa: E402
+from ..operators import vq  # noqa: E402
 
 
 @query(
     "q_cluster_purity",
     oracle=f"""
-    WITH {_kmeans_assign2_ctes()},
+    WITH {vq.kmeans_ctes(k=8, iters=2)},
     cl AS MATERIALIZED (
       SELECT a.vec_id, a.cid, e.label
       FROM assign2 a JOIN embeddings e ON e.vec_id = a.vec_id
@@ -2175,7 +2175,7 @@ _ROUTED_TAU = 0.4
 @query(
     "q_semantic_dedup_routed",
     oracle=f"""
-    WITH {_kmeans_assign2_ctes()},
+    WITH {vq.kmeans_ctes(k=8, iters=2)},
     ranked AS MATERIALIZED (
       SELECT vec_id, cid, prn FROM (
         SELECT e.vec_id, c.cid,

@@ -125,80 +125,55 @@ def q_margin_mining_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer; production trains k ~ sqrt(n) centroids
     (operators/semdedup.train_centroids) on the same search path.
 
-    Round-11 restructure (VERDICT r10 "What's wrong #3"): the two
-    directional ivf_search calls are FUSED into one side-tagged plan —
-    each search was a separate stage chain, and the eager
-    localCheckpoint on mg was the confirmed bench-variance point. The
-    fused form tags every vector with side = label % 2, assigns
-    corpus vectors to same-side centroids and routes queries to
-    opposite-side centroids, so one assignment pass + one probe pass +
-    one top-k window serve BOTH directions (verified row-identical to
-    the two-call form). The two mutual-best row_number windows became
-    max_by aggregates (map-side combinable), and the persist replaces
-    the eager localCheckpoint."""
+    The two directional searches are FUSED into one side-tagged plan:
+    every vector is tagged with side = label % 2, corpus vectors are
+    assigned to same-side centroids and queries routed to opposite-side
+    centroids (operators/vq over the per-side codebook), so one
+    assignment pass + one probe pass + one top-k window serve BOTH
+    directions. The mutual-best picks are max_by aggregates (map-side
+    combinable), and a persist replaces an eager localCheckpoint."""
     from pyspark import StorageLevel
     from pyspark.sql.window import Window as W
 
     from ..functions import vectors as _vec
+    from ..operators import vq
 
     emb = load(spark, sf_dir, "embeddings").select(
         (F.col("label") % 2).alias("side"), "vec_id", "embedding"
     )
-    cent = emb.filter(F.col("vec_id") % _MM_EVERY == 0).select(
-        F.col("side").alias("c_side"),
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_emb"),
+    cent_by_side = vq.fold(
+        emb.filter(F.col("vec_id") % _MM_EVERY == 0).select(
+            F.col("side").alias("c_side"),
+            F.col("vec_id").alias("cid"),
+            F.col("embedding").alias("cvec"),
+        ),
+        key="c_side",
     )
     corpus = emb.select(
         "side", F.col("vec_id").alias("n_id"), F.col("embedding").alias("emb")
     )
-    # Round 13 (guide §2.3/§2.6): fan the corpus/query sides out before
-    # the n×centroid cosine passes (single-split scan = one core), and
-    # compute assignment/routing as per-row expressions over the
-    # per-SIDE codebook folded to one broadcast array — the r12 form
-    # expanded every vector |centroids| ways and sorted the expansion
-    # through (n_id)/(q_id) window exchanges.  struct ordering ASC over
-    # ((-rounded cosine), c_id) == the windows' (cscore DESC, c_id ASC).
-    cent_by_side = F.broadcast(
-        cent.groupBy("c_side").agg(
-            F.collect_list(F.struct("c_id", "c_emb")).alias("_cents")
-        )
-    )
-    _cos_assign = _vec.cosine_spark_sql("emb", "c.c_emb")
-    assigned = (
-        corpus.repartition(default_parallelism())
-        .join(cent_by_side, F.col("side") == F.col("c_side"))
-        .select(
-            "side",
-            F.expr(
-                f"array_min(transform(_cents, c -> struct("
-                f"nanvl((-round({_cos_assign}, 6)), CAST('-Infinity' AS DOUBLE)) AS ns, c.c_id AS c_id))).c_id"
-            ).alias("centroid_id"),
-            "n_id",
-            "emb",
-        )
+    assigned = vq.attach(
+        corpus, cent_by_side, F.col("side") == F.col("c_side")
+    ).select(
+        "side",
+        vq.nearest("emb", "cos").cid.alias("centroid_id"),
+        "n_id",
+        "emb",
     )
     queries = emb.select(
         F.col("side").alias("q_side"),
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
     )
-    _cos_probe = _vec.cosine_spark_sql("q_emb", "c.c_emb")
-    probes = (
-        queries.repartition(default_parallelism())
-        .join(cent_by_side, F.col("q_side") != F.col("c_side"))
-        .select(
-            "q_side",
-            "q_id",
-            "q_emb",
-            F.explode(
-                F.expr(
-                    f"transform(slice(array_sort(transform(_cents, "
-                    f"c -> struct(nanvl((-round({_cos_probe}, 6)), CAST('-Infinity' AS DOUBLE)) AS ns, "
-                    f"c.c_id AS c_id))), 1, {_MM_NPROBE}), s -> s.c_id)"
-                )
-            ).alias("centroid_id"),
-        )
+    probes = vq.attach(
+        queries, cent_by_side, F.col("q_side") != F.col("c_side")
+    ).select(
+        "q_side",
+        "q_id",
+        "q_emb",
+        F.explode(vq.nearest("q_emb", "cos", _MM_NPROBE).cid).alias(
+            "centroid_id"
+        ),
     )
     candj = probes.join(assigned, "centroid_id").filter(
         F.col("q_id") != F.col("n_id")
@@ -2111,7 +2086,7 @@ def _mmr_oracle() -> str:
         )
     selects = "\n    UNION ALL\n    ".join(
         f"SELECT q_id, CAST({t} AS BIGINT) AS rnk, win AS n_id, "
-        f"round(win_rel, 6) AS rel, round(win_score, 6) AS mmr_score "
+        f"round(win_rel, 6) AS rel, round(win_score, 7) AS mmr_score "
         f"FROM w{t}"
         for t in range(1, _MMR_K + 1)
     )
@@ -2191,13 +2166,16 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
+        # 0.7·rel − 0.3·maxsim over 6-place inputs has exactly 7 places;
+        # rounding it to 6 would land on half-way digits, which Spark
+        # (decimal HALF_UP) and DuckDB (binary double) round apart
         outs.append(
             win.select(
                 "q_id",
                 F.lit(t).cast("long").alias("rnk"),
                 F.col("win").alias("n_id"),
                 F.round("win_rel", 6).alias("rel"),
-                F.round("win_score", 6).alias("mmr_score"),
+                F.round("win_score", 7).alias("mmr_score"),
             )
         )
         upd = sims.join(

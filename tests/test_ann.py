@@ -298,88 +298,3 @@ def test_ivf_index_build_once_and_serve(spark, sf_dir, tmp_path):
     inline = ann.ivf_search(corpus, qs, k=4, nprobe=2, every=every, residue=0)
     want = sorted(map(tuple, inline.select("q_id", "n_id", "score", "rn").collect()))
     assert got == want
-
-
-def test_semdedup_probe_order_matches_window_on_nan_and_zero_norm(spark):
-    """semdedup._probe_assignments ranks cells by a struct sort that
-    must agree with the (rounded cosine DESC, cid) window it replaced
-    on degenerate scores too: a NaN cosine (a NaN-valued query or
-    centroid embedding) sorts FIRST, since Spark orders NaN above
-    every double, and a NULL cosine (a zero-norm vector) sorts LAST."""
-    from kafka_stream_spark.operators.semdedup import _probe_assignments
-
-    nan = float("nan")
-    cent = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0]),
-            (1, [nan, 1.0]),
-            (2, [0.0, 1.0]),
-            (3, [0.0, 0.0]),
-            (4, [1.0, 1.0]),
-        ],
-        "cid long, cvec array<double>",
-    )
-    e = spark.createDataFrame(
-        [(1, [1.0, 0.2]), (2, [nan, 0.5]), (3, [0.0, 0.0]), (4, [0.3, 1.0])],
-        "vec_id long, emb array<double>",
-    )
-    nprobe = 3
-    got = {
-        (r["vec_id"], r["prn"], r["cid"])
-        for r in _probe_assignments(e, cent, nprobe).collect()
-    }
-    cscore = F.round(
-        F.try_divide(
-            vectors.dot("emb", "cvec"),
-            vectors.norm("emb") * vectors.norm("cvec"),
-        ),
-        6,
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cscore"), "cid")
-    ranked = (
-        e.crossJoin(cent)
-        .withColumn("cscore", cscore)
-        .withColumn("prn", F.row_number().over(w))
-        .filter(F.col("prn") <= nprobe)
-    )
-    want = {(r["vec_id"], r["prn"], r["cid"]) for r in ranked.collect()}
-    assert got == want
-    # the NaN centroid is every finite query's first probe
-    assert (1, 1, 1) in got and (4, 1, 1) in got
-
-
-def test_ivf_assign_matches_window_on_null_scores_and_empty_codebook(spark):
-    """ivf_assign's per-row argmax over the folded codebook must agree
-    with the (rounded cosine DESC NULLS LAST, c_id) window it replaced
-    when some cosines are NULL — a NULL query embedding, or a ragged
-    centroid whose zip_with pads with NULLs — and an empty codebook
-    must assign nothing, as the joined codebook did."""
-    corpus = spark.createDataFrame(
-        [(1, [1.0, 0.2]), (2, None), (3, [0.1, 1.0]), (4, [0.5, 0.5])],
-        "n_id long, emb array<double>",
-    )
-    cent = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0]), (5, [1.0, 0.0]), (7, [0.0, 1.0])],
-        "c_id long, c_emb array<double>",
-    )
-
-    def window_form(c):
-        w = Window.partitionBy("n_id").orderBy(F.desc("score"), "c_id")
-        return {
-            (r["n_id"], r["c_id"])
-            for r in corpus.crossJoin(c)
-            .withColumn("score", F.round(vectors.cosine("emb", "c_emb"), 6))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .collect()
-        }
-
-    got = {
-        (r["n_id"], r["centroid_id"])
-        for r in ann.ivf_assign(corpus, cent).collect()
-    }
-    assert got == window_form(cent)
-    assert (1, 5) in got and (3, 7) in got  # the ragged c_id 0 sorts last
-    empty = cent.limit(0)
-    assert ann.ivf_assign(corpus, empty).collect() == []
-    assert window_form(empty) == set()
