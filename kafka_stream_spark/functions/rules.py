@@ -1,4 +1,4 @@
-"""Keyword-rule classification as pure Column expressions.
+"""Keyword-rule classification as driver-compiled Column predicates.
 
 Re-expresses the reference's rule matcher (kafka_s.py:220-297,
 mysql_yi/mysql_rules.py:26-64) with the exact parsing semantics it uses
@@ -16,112 +16,65 @@ mysql_yi/mysql_rules.py:26-64) with the exact parsing semantics it uses
   (kafka_s.py:240-249) — in Spark that is an inner theta-join against the
   (broadcast) rules table, not a loop.
 
-Everything here compiles to native Catalyst expressions
-(split/transform/exists/forall/contains) — whole-stage-codegen-able, no
-Python UDF, which is what makes the match viable on 100 TB: the rules
-side broadcasts (it is tiny) and the stream side never shuffles.
+Why compiled: Spark 4.x mis-plans higher-order-function lambdas in a
+JOIN condition in a fresh session — the lambda-variable exprIds collide
+with a low stream-side exprId (text#1), and the conjunct is pushed into
+a FilterExec over the broadcast side alone
+([INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND]; pinned by
+tests/test_cold_session.py). So, as the reference does
+(kafka_s.py:240-249), the tiny rules dim is collected driver-side once
+and each rule's keywords are compiled into literal ``contains``
+conjunctions: a lambda-free boolean tree, still pure whole-stage
+codegen. At 100 TB, BroadcastNestedLoopJoin evaluates ~K literal
+substring tests per fact row, and the fact side never shuffles.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 OR_SEP = "、"
 AND_SEP = "&"
 
 
-def parse_in_rules(in_rules: Column | str) -> Column:
-    """``'a&b、c'`` → ``[['a','b'], ['c']]`` (OR-groups of AND-keywords).
-
-    OR-groups are trimmed; AND-parts deliberately are not (reference
-    asymmetry, kafka_s.py:243-245).
-    """
-    col = F.col(in_rules) if isinstance(in_rules, str) else in_rules
-    return F.transform(
-        F.split(col, OR_SEP), lambda g: F.split(F.trim(g), AND_SEP)
-    )
-
-
-def parse_filter_rules(filter_rules: Column | str) -> Column:
-    """``'x、y'`` → ``['x','y']`` with empty entries dropped.
-
-    Dropping empties matters: ``contains(title, '')`` is true, so an empty
-    filter rule would veto every row. The reference only consults
-    filter rules when the string is non-empty (kafka_s.py:267-272); the
-    filter-out-empties form is the vectorized equivalent.
-    """
-    col = F.col(filter_rules) if isinstance(filter_rules, str) else filter_rules
-    return F.filter(F.split(col, OR_SEP), lambda kw: kw != F.lit(""))
-
-
-def rule_matches(title: Column, in_rules: Column, filter_rules: Column) -> Column:
-    """Boolean join predicate: title matches the (in_rules, filter_rules) rule."""
-    groups = parse_in_rules(in_rules)
-    included = F.exists(
-        groups,
-        lambda grp: F.forall(grp, lambda kw: title.contains(kw)),
-    )
-    vetoed = F.exists(
-        parse_filter_rules(filter_rules), lambda kw: title.contains(kw)
-    )
-    return included & ~vetoed
-
-
-def veto_only(title: Column, filter_rules: Column) -> Column:
-    """The standalone anti-filter predicate (kafka_s.py:267-272)."""
-    return ~F.exists(parse_filter_rules(filter_rules), lambda kw: title.contains(kw))
-
-
-# ---------------------------------------------------------------------------
-# Driver-compiled predicates — the join-condition-safe form.
-#
-# Spark 4.x has a fresh-session bug with higher-order-function lambdas in a
-# JOIN condition: when the stream-side attribute holds a low exprId (text#1
-# in a cold session), the lambda-variable exprIds collide with it, the
-# conjunct's computed references drop the stream-side column, and the
-# predicate is pushed into a FilterExec over the broadcast side alone —
-# [INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND] Could not find text#1 in [rule_id#5L,
-# …]. Reproduced with Python-built HOFs, F.expr-parsed HOFs, and a full
-# spark.sql formulation alike; warming the session (any prior action) bumps
-# the exprId counter past the collision and masks it — which is why warm
-# sharded gates never saw it.
-#
-# The robust fix mirrors the reference's own architecture: the rules dim is
-# tiny and the reference loops over it per record after loading it into a
-# Python list (kafka_s.py:240-249, mysql_yi/mysql_rules.py:26-64). We
-# collect the dim driver-side once and COMPILE each rule's keyword logic
-# into literal `contains` conjunctions — the join condition becomes a plain
-# boolean tree with zero lambdas, immune to the collision, and still pure
-# whole-stage-codegen (contains over literals). At 100 TB the work is
-# identical to the HOF form: BroadcastNestedLoopJoin evaluates ~K literal
-# substring tests per fact row, the fact side never shuffles.
-# ---------------------------------------------------------------------------
-
-
 def parse_rule_py(in_rules: str, filter_rules: str) -> tuple[list[list[str]], list[str]]:
-    """Driver-side parse with semantics identical to :func:`parse_in_rules` /
-    :func:`parse_filter_rules` (OR-groups stripped, AND-parts not; empty
-    filter keywords dropped)."""
+    """``('a&b、c', 'x、、y')`` → ``([['a','b'], ['c']], ['x','y'])``.
+
+    OR-groups are stripped; AND-parts deliberately are not (reference
+    asymmetry, kafka_s.py:243-245). Empty filter keywords are dropped:
+    ``contains(title, '')`` is true, so one would veto every row; the
+    reference only consults a non-empty filter string
+    (kafka_s.py:267-272)."""
     groups = [g.strip().split(AND_SEP) for g in in_rules.split(OR_SEP)]
-    vetoes = [kw for kw in filter_rules.split(OR_SEP) if kw != ""]
-    return groups, vetoes
+    return groups, _vetoes(filter_rules)
+
+
+def _vetoes(filter_rules: str) -> list[str]:
+    return [kw for kw in filter_rules.split(OR_SEP) if kw != ""]
+
+
+def _all(terms: list[Column]) -> Column:
+    return reduce(lambda a, b: a & b, terms)
+
+
+def veto(title: Column, filter_rules: str) -> Column:
+    """The filter half (kafka_s.py:267-272): true iff no filter keyword
+    of ``filter_rules`` is a substring of ``title``."""
+    terms = [~title.contains(F.lit(kw)) for kw in _vetoes(filter_rules)]
+    return _all(terms) if terms else F.lit(True)
 
 
 def compile_match(title: Column, in_rules: str, filter_rules: str) -> Column:
-    """Literal-predicate form of :func:`rule_matches` for ONE known rule."""
+    """Literal predicate: ``title`` matches the rule (in_rules, filter_rules)."""
     groups, vetoes = parse_rule_py(in_rules, filter_rules)
-    included = None
-    for grp in groups:
-        conj = None
-        for kw in grp:
-            t = title.contains(F.lit(kw))
-            conj = t if conj is None else (conj & t)
-        included = conj if included is None else (included | conj)
-    cond = included
-    for kw in vetoes:
-        cond = cond & ~title.contains(F.lit(kw))
-    return cond
+    included = reduce(
+        lambda a, b: a | b,
+        [_all([title.contains(F.lit(kw)) for kw in grp]) for grp in groups],
+    )
+    return included & veto(title, filter_rules) if vetoes else included
 
 
 def compiled_join_cond(title: Column, rule_id: Column, rule_rows) -> Column:
@@ -130,10 +83,9 @@ def compiled_join_cond(title: Column, rule_id: Column, rule_rows) -> Column:
     ``rule_rows`` is an iterable of (rule_id, in_rules, filter_rules)
     collected from the (tiny) rules dim. The CASE-on-primary-key shape
     (WHEN rule_id = k THEN <literal match for rule k>) evaluates ONLY
-    the paired rule's keywords per (fact, rule) pair — same per-pair
-    work as the HOF form it replaces; an OR-of-branches form would
-    evaluate every rule's keywords per pair (measured 1.6× slower at
-    sf0.1). Lambda-free theta-join condition (J3)."""
+    the paired rule's keywords per (fact, rule) pair; an OR-of-branches
+    form would evaluate every rule's keywords per pair (measured 1.6×
+    slower at sf0.1). Lambda-free theta-join condition (J3)."""
     cond = None
     for rid, in_rules, filter_rules in rule_rows:
         match = compile_match(title, in_rules, filter_rules)
@@ -145,13 +97,26 @@ def compiled_join_cond(title: Column, rule_id: Column, rule_rows) -> Column:
     return cond.otherwise(F.lit(False))
 
 
-# ---------------------------------------------------------------------------
-# DuckDB-oracle SQL fragments for the same semantics (used by plans.queries).
-# DuckDB lambdas: list_filter/list_transform with `x -> expr`.
-# ---------------------------------------------------------------------------
+def match(d: DataFrame, title: str, r: DataFrame) -> DataFrame:
+    """``d`` ⋈ broadcast rules dim ``r``: one row per (row of ``d``,
+    rule its ``title`` column matches), with all of ``r``'s columns.
+
+    The only place the rules dim is collected. Collecting at plan
+    construction keeps the T2 refresh semantics of a file-backed ``r``:
+    a streaming query collects at (re)start, exactly when the static
+    side's file listing is captured anyway."""
+    rule_rows = [
+        (row.rule_id, row.in_rules, row.filter_rules)
+        for row in r.select("rule_id", "in_rules", "filter_rules").collect()
+    ]
+    cond = compiled_join_cond(d[title], r["rule_id"], rule_rows)
+    return d.join(F.broadcast(r), cond, "inner")
+
 
 def duckdb_match_sql(title: str, in_rules: str, filter_rules: str) -> str:
-    """SQL boolean expression replicating :func:`rule_matches` in DuckDB."""
+    """DuckDB boolean expression of the same match, parsing the rule
+    strings per row (list_filter lambdas; DuckDB has no join-condition
+    lambda hazard)."""
     return f"""(
       len(list_filter(
             string_split({in_rules}, '、'),

@@ -71,14 +71,13 @@ def norm(a: Column | str) -> Column:
 
 
 def cosine(a: Column | str, b: Column | str) -> Column:
+    """``dot / (norm * norm)``; NULL when either vector has zero norm
+    (``try_divide``; DuckDB's ``cosine_sql`` yields NULL there too)."""
     if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"({_dot_spark_sql(a, b)} / "
-            f"({_norm_spark_sql(a)} * {_norm_spark_sql(b)}))"
-        )
+        return F.expr(cosine_spark_sql(a, b))
     a = F.expr(a) if isinstance(a, str) else a
     b = F.expr(b) if isinstance(b, str) else b
-    return dot(a, b) / (norm(a) * norm(b))
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def cosine_spark_sql(a: str, b: str) -> str:
@@ -86,8 +85,8 @@ def cosine_spark_sql(a: str, b: str) -> str:
     inside a larger parsed expression (e.g. a higher-order-function
     lambda, where the operands are lambda variables)."""
     return (
-        f"({_dot_spark_sql(a, b)} / "
-        f"({_norm_spark_sql(a)} * {_norm_spark_sql(b)}))"
+        f"try_divide({_dot_spark_sql(a, b)}, "
+        f"{_norm_spark_sql(a)} * {_norm_spark_sql(b)})"
     )
 
 

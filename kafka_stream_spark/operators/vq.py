@@ -70,11 +70,7 @@ def attach(df: DataFrame, folded: DataFrame, on=None) -> DataFrame:
 def _score_sql(vec: str, metric: str) -> str:
     """Rounded score of ``vec`` against the codebook entry ``c``."""
     if metric == "cos":
-        return (
-            f"round(try_divide({vectors._dot_spark_sql(vec, 'c.cvec')}, "
-            f"{vectors._norm_spark_sql(vec)} * "
-            f"{vectors._norm_spark_sql('c.cvec')}), 6)"
-        )
+        return f"round({vectors.cosine_spark_sql(vec, 'c.cvec')}, 6)"
     if metric == "l2":
         return (
             f"round(aggregate(zip_with(CAST({vec} AS ARRAY<DOUBLE>), "

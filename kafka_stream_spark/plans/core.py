@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import boards
 from ..functions import decode, keys, rules
 from ..sources import dims
 from ..sources.tables import load
@@ -353,10 +354,8 @@ def q_industry_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RULE_MATCH_ORACLE = f"""
-    SELECT d.doc_id, r.rule_id, r.category_code, r.category_name,
-           r.sentiment, r.importance
-    FROM documents d, {dims.rules_values_sql('r')}
-    WHERE {rules.duckdb_match_sql('d.text', 'r.in_rules', 'r.filter_rules')}
+    SELECT doc_id, rule_id, category_code, category_name, sentiment, importance
+    FROM ({boards.match_sql('documents', 'text')})
 """
 
 
@@ -367,20 +366,12 @@ def q_rule_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter keyword is (kafka_s.py:240-285). One row per (title, rule)
     match. Physical shape at scale: BroadcastNestedLoopJoin with the tiny
     rules side broadcast — the 100 TB fact side never shuffles, and the
-    predicate is pure codegen (no UDF). The condition is driver-COMPILED
-    from the collected rules dim (the reference's own loop-over-rules-list
-    architecture, kafka_s.py:240-249) rather than HOF lambdas: lambdas in
-    a join condition hit a fresh-session exprId collision that pushes a
-    stream-side conjunct into the broadcast side (see functions/rules.py;
-    pinned by tests/test_cold_session.py)."""
+    predicate is pure codegen (no UDF). ``rules.match`` is the board
+    chain's rule join: its condition is driver-compiled from the
+    collected rules dim, lambda-free (see functions/rules.py; pinned by
+    tests/test_cold_session.py)."""
     d = load(spark, sf_dir, "documents")
-    r = dims.rules_df(spark)
-    rule_rows = [
-        (row.rule_id, row.in_rules, row.filter_rules)
-        for row in r.select("rule_id", "in_rules", "filter_rules").collect()
-    ]
-    cond = rules.compiled_join_cond(d["text"], r["rule_id"], rule_rows)
-    return d.join(F.broadcast(r), cond, "inner").select(
+    return rules.match(d, "text", dims.rules_df(spark)).select(
         "doc_id", "rule_id", "category_code", "category_name", "sentiment", "importance"
     )
 
@@ -397,7 +388,7 @@ def q_rule_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_anti_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 veto half — filter-keyword anti-predicate (kafka_s.py:267-272)."""
     d = load(spark, sf_dir, "documents")
-    return d.filter(rules.veto_only(F.col("text"), F.lit("slow、error"))).select(
+    return d.filter(rules.veto(F.col("text"), "slow、error")).select(
         "doc_id", "text"
     )
 

@@ -1,15 +1,11 @@
-"""The board pipeline — the reference's end-to-end enrichment chain as one
-declarative plan, parameterized by board config (SURVEY.md §2.12: the
-reference keeps two ~640-line near-identical copies, kafka_s.py /
-kafka_a.py; here the delta is data).
+"""The board pipeline in batch mode: ``documents`` through the board
+chain (``boards.enrich``, shared with the CDC stream), its DuckDB oracle
+(``boards.enrich_sql``) and the multi-sink fan-out (K1-K4).
 
-Chain (SURVEY.md §3.1): scan → dim lookup join (J1) → rule-match join
-(J3) → score decode (P8) → surrogate keys (P4-P6) → literals/defaults
-(P7/P9) → wide assembly (P10) → multi-sink fan-out (K1-K4).
-
-Scale shape: the only joins are against broadcast dims (sites, rules), so
-the 100 TB fact side streams through map-side-only stages — zero
-shuffles end-to-end; the plan is one WholeStageCodegen span per batch.
+Board config is data (SURVEY.md §2.12: the reference keeps two ~640-line
+near-identical copies, kafka_s.py / kafka_a.py). The only joins are
+against broadcast dims (sites, rules), so the 100 TB fact side streams
+through map-side-only stages — zero shuffles end-to-end.
 """
 
 from __future__ import annotations
@@ -21,65 +17,17 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import boards
 from ..boards import ASHARE, NEEQ, BoardConfig  # noqa: F401  (re-export)
-from ..functions import decode, keys, rules
-from ..sources import dims
+from ..functions import decode
 from ..sources.tables import load
 from .registry import query
 
 
 def enrich(d: DataFrame, spark: SparkSession, cfg: BoardConfig = NEEQ) -> DataFrame:
-    """The enrichment chain on a (doc_id, title, source, lang) DataFrame.
-
-    Batch/streaming-unified: ``d`` may be a static DataFrame or a
-    streaming one — every operator here (broadcast joins, projections) is
-    streaming-compatible, which is the point of expressing the reference's
-    per-record loop declaratively (Structured Streaming runs the same plan
-    per micro-batch; the dims are re-resolved each batch = SURVEY.md T2)."""
-    # J1: broadcast dim lookup; LEFT + coalesce('') fixes the reference's
-    # stale-carry-over on lookup miss (SURVEY.md §1.4) into explicit default
-    sites = dims.sites_df(spark)
-    d = d.join(F.broadcast(sites), "source", "left").withColumn(
-        "site_name", decode.default_empty(F.col("site_name"))
-    )
-    # J3: rule classification — one output row per matching rule. The
-    # condition is driver-compiled from the collected (tiny) rules dim:
-    # HOF lambdas in a join condition hit a fresh-session exprId collision
-    # (functions/rules.py compiled_join_cond docstring; tests/test_cold_session.py).
-    r = dims.rules_df(spark)
-    rule_rows = [
-        (row.rule_id, row.in_rules, row.filter_rules)
-        for row in r.select("rule_id", "in_rules", "filter_rules").collect()
-    ]
-    cond = rules.compiled_join_cond(d["title"], r["rule_id"], rule_rows)
-    m = d.join(F.broadcast(r), cond, "inner")
-    # P4-P8: keys + decodes; P7/P9/P10: literals, defaults, wide assembly
-    yqid = keys.surrogate_key(F.col("title"), F.col("source"), F.col("doc_id"))
-    m = m.withColumn("yqid", yqid).withColumn(
-        "only_id",
-        keys.surrogate_key(F.col("yqid"), F.col("site_name"), F.col("category_code")),
-    )
-    return m.select(
-        "doc_id",
-        "yqid",
-        "only_id",
-        "title",
-        "site_name",
-        F.col("lang").alias("lang_code"),
-        "rule_id",
-        "category_code",
-        "category_name",
-        keys.concat_key(F.col("category_code"), F.col("rule_id")).alias("level_key"),
-        F.col("sentiment").alias("emo_score"),
-        decode.emo_label(F.col("sentiment")).alias("emo_label"),
-        F.col("importance").alias("imp_score"),
-        decode.imp_label(F.col("importance")).alias("imp_label"),
-        F.lit(cfg.webname).alias("webname"),
-        F.lit(cfg.src_type).alias("src_type"),
-        F.lit(cfg.rel_type).alias("rel_type"),
-        F.lit(1).alias("is_valid"),
-        F.lit(1).alias("data_status"),
-    )
+    """The board chain (``boards.enrich``) on a (doc_id, title, source,
+    lang) DataFrame, static or streaming."""
+    return boards.enrich(d, spark, cfg, boards.DOCS)
 
 
 def board_pipeline(
@@ -96,37 +44,11 @@ def board_pipeline(
 
 
 def _board_pipeline_oracle(cfg: BoardConfig) -> str:
-    emo = decode.decode_case_sql("r.sentiment", decode.EMO_LABELS)
-    imp = decode.decode_case_sql("r.importance", decode.IMP_LABELS)
-    return f"""
-    WITH enriched AS (
-      SELECT d.doc_id, d.text AS title, d.source, d.lang,
-             coalesce(s.site_name, '') AS site_name
-      FROM documents d LEFT JOIN {dims.sites_values_sql('s')} USING (source)
-    ), matched AS (
-      SELECT e.*, r.rule_id, r.category_code, r.category_name,
-             r.sentiment, r.importance
-      FROM enriched e, {dims.rules_values_sql('r')}
-      WHERE {rules.duckdb_match_sql('e.title', 'r.in_rules', 'r.filter_rules')}
-    ), keyed AS (
-      SELECT *, md5(concat_ws('||', coalesce(title, ''), coalesce(source, ''),
-                              coalesce(CAST(doc_id AS VARCHAR), ''))) AS yqid
-      FROM matched
+    return boards.enrich_sql(
+        "SELECT doc_id, text AS title, source, lang FROM documents",
+        cfg,
+        boards.DOCS,
     )
-    SELECT doc_id, yqid,
-           md5(concat_ws('||', yqid, coalesce(site_name, ''),
-                         coalesce(CAST(category_code AS VARCHAR), ''))) AS only_id,
-           title, site_name, lang AS lang_code,
-           rule_id, category_code, category_name,
-           concat_ws('##', CAST(category_code AS VARCHAR),
-                     CAST(rule_id AS VARCHAR)) AS level_key,
-           sentiment AS emo_score, {emo} AS emo_label,
-           importance AS imp_score, {imp} AS imp_label,
-           '{cfg.webname}' AS webname, '{cfg.src_type}' AS src_type,
-           '{cfg.rel_type}' AS rel_type,
-           1 AS is_valid, 1 AS data_status
-    FROM keyed r
-    """
 
 
 @query("q_board_pipeline", oracle=_board_pipeline_oracle(NEEQ))

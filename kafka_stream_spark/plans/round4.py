@@ -744,9 +744,16 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the documented O(n^2) correctness twin (never the scale path;
     excluded from bench); the LSH side is the production pipeline.
     Output: exact pairs, LSH pairs, hits, recall."""
+    from ..session import default_parallelism
     from .llm_ext import near_dup_pairs
 
-    h = lsh.shingle_sets(load(spark, sf_dir, "documents")).persist()
+    # fan the single-split scan out, or the nested-loop self-join below
+    # runs as one task
+    h = (
+        lsh.shingle_sets(load(spark, sf_dir, "documents"))
+        .repartition(default_parallelism())
+        .persist()
+    )
     x, y = h.alias("x"), h.alias("y")
     exact = (
         x.join(y, F.col("x.doc_id") < F.col("y.doc_id"))

@@ -242,11 +242,7 @@ def q_embedding_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("bench_id"), F.col("emb").alias("bemb")
     )
     corpus = e.filter(F.col("vec_id") >= 50)
-    cos_r = F.round(
-        vectors.dot("emb", "bemb")
-        / (vectors.norm("emb") * vectors.norm("bemb")),
-        6,
-    )
+    cos_r = F.round(vectors.cosine("emb", "bemb"), 6)
     scored = corpus.crossJoin(F.broadcast(bench)).select(
         "vec_id", "bench_id", cos_r.alias("cos_r")
     )

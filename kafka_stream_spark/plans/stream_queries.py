@@ -16,8 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import decode, rules
-from ..sources import dims
+from .. import boards
 from ..sources.tables import load
 from ..streaming.pipeline import SinkPaths, run_board_stream
 from .registry import query
@@ -39,41 +38,16 @@ def _docs_as_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_oracle() -> str:
-    emo = decode.decode_case_sql("r.sentiment", decode.EMO_LABELS)
-    imp = decode.decode_case_sql("r.importance", decode.IMP_LABELS)
-    return f"""
-    WITH cdc AS (
+    return boards.enrich_sql(
+        f"""
       SELECT 'name_' || CAST(doc_id AS VARCHAR) AS cmp_short_name,
              source AS cmp_code, text AS title,
              '{_PUB}' AS publish_date,
              'http://doc/' || CAST(doc_id AS VARCHAR) AS url
-      FROM documents
-    ), enriched AS (
-      SELECT c.*, coalesce(s.site_name, '') AS site_name
-      FROM cdc c LEFT JOIN {dims.sites_values_sql('s')} ON c.cmp_code = s.source
-    ), matched AS (
-      SELECT e.*, r.rule_id, r.category_code, r.category_name,
-             r.sentiment, r.importance
-      FROM enriched e, {dims.rules_values_sql('r')}
-      WHERE {rules.duckdb_match_sql('e.title', 'r.in_rules', 'r.filter_rules')}
-    ), keyed AS (
-      SELECT *, md5(concat_ws('||', coalesce(title, ''), coalesce(url, ''),
-                              coalesce(publish_date, ''))) AS yqid
-      FROM matched
+      FROM documents""",
+        boards.NEEQ,
+        boards.CDC,
     )
-    SELECT yqid,
-           md5(concat_ws('||', yqid, coalesce(site_name, ''),
-                         coalesce(CAST(category_code AS VARCHAR), ''))) AS only_id,
-           title, cmp_short_name, cmp_code, site_name, url, publish_date,
-           rule_id, category_code, category_name,
-           concat_ws('##', CAST(category_code AS VARCHAR),
-                     CAST(rule_id AS VARCHAR)) AS level_key,
-           sentiment AS emo_score, {emo} AS emo_label,
-           importance AS imp_score, {imp} AS imp_label,
-           '巨潮资讯网' AS webname, '新三板公告' AS src_type,
-           '直接关联' AS rel_type, 1 AS is_valid, 1 AS data_status
-    FROM keyed r
-    """
 
 
 @query("q_stream_pipeline", oracle=_stream_oracle())

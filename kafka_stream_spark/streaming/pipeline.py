@@ -42,9 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .. import boards
 from ..boards import NEEQ, BoardConfig
-from ..functions import decode, keys, rules
-from ..sources import dims
 from .sources import file_cdc_stream
 
 #: read schemas of the testdata tables the streams consume
@@ -315,9 +314,9 @@ def enrich_cdc(
 ) -> DataFrame:
     """CDC fields → classified wide rows (streaming-compatible plan).
 
-    Mirrors kafka_s.py's chain on its own field names (SURVEY.md §3.1):
-    name-dim lookup (J1) on the company code, rule match (J3) on the
-    title, decodes (P8), deterministic keys (P4), wide assembly (P10).
+    The board chain (``boards.enrich``) on the CDC fields
+    (``boards.CDC``): site lookup on the company code, rule match on the
+    title, decodes, deterministic keys, wide row (SURVEY.md §3.1).
 
     ``rules_df``: pass a FILE-BACKED DataFrame for dimension refresh (T2).
     Honest semantics: the parquet static side's file listing is captured
@@ -327,52 +326,7 @@ def enrich_cdc(
     flat-file watermark machinery, kafka_s.py:198-219). A continuously-
     running query needs a per-batch re-read inside foreachBatch or a
     Delta-backed dim for true mid-query refresh."""
-    sites = dims.sites_df(spark)
-    d = d.join(
-        F.broadcast(sites), d["cmp_code"] == sites["source"], "left"
-    ).withColumn("site_name", decode.default_empty(F.col("site_name")))
-    r = rules_df if rules_df is not None else dims.rules_df(spark)
-    # Driver-compiled join condition (lambda-free): HOF lambdas in a join
-    # condition hit a fresh-session exprId collision (functions/rules.py).
-    # Collecting the tiny rules dim here keeps the T2 refresh semantics —
-    # the collect happens at query (re)start, exactly when the static
-    # side's file listing is captured anyway.
-    rule_rows = [
-        (row.rule_id, row.in_rules, row.filter_rules)
-        for row in r.select("rule_id", "in_rules", "filter_rules").collect()
-    ]
-    cond = rules.compiled_join_cond(d["title"], r["rule_id"], rule_rows)
-    m = d.join(F.broadcast(r), cond, "inner")
-    yqid = keys.surrogate_key(
-        F.col("title"), F.col("url"), F.col("publish_date")
-    )  # reference key recipe: title+srcUrl+pubTime (kafka_s.py:322)
-    m = m.withColumn("yqid", yqid).withColumn(
-        "only_id",
-        keys.surrogate_key(F.col("yqid"), F.col("site_name"), F.col("category_code")),
-    )
-    return m.select(
-        "yqid",
-        "only_id",
-        "title",
-        F.col("cmp_short_name"),
-        F.col("cmp_code"),
-        "site_name",
-        "url",
-        "publish_date",
-        "rule_id",
-        "category_code",
-        "category_name",
-        keys.concat_key(F.col("category_code"), F.col("rule_id")).alias("level_key"),
-        F.col("sentiment").alias("emo_score"),
-        decode.emo_label(F.col("sentiment")).alias("emo_label"),
-        F.col("importance").alias("imp_score"),
-        decode.imp_label(F.col("importance")).alias("imp_label"),
-        F.lit(cfg.webname).alias("webname"),
-        F.lit(cfg.src_type).alias("src_type"),
-        F.lit(cfg.rel_type).alias("rel_type"),
-        F.lit(1).alias("is_valid"),
-        F.lit(1).alias("data_status"),
-    )
+    return boards.enrich(d, spark, cfg, boards.CDC, rules_df)
 
 
 def _fan_out(sinks: SinkPaths):

@@ -89,6 +89,43 @@ def test_ivf_nprobe2_results_are_subset_scored_correctly(spark, sf_dir):
     assert hit / len(want) >= 0.5
 
 
+def test_ivf_zero_norm_vector_ranks_last_with_null_score(spark):
+    """A zero-norm vector in a probed list has no cosine: the exact
+    re-rank gives it a NULL score and ranks it last, as the DuckDB twin
+    does, instead of failing the whole search with DIVIDE_BY_ZERO."""
+    import duckdb
+
+    vecs = [(1, [1.0, 0.0]), (2, [0.5, 0.5]), (3, [0.0, 0.0]), (4, [0.0, 1.0])]
+    corpus = spark.createDataFrame(vecs, "n_id long, emb array<float>")
+    queries = spark.createDataFrame(
+        [(10, [1.0, 0.5])], "q_id long, q_emb array<float>"
+    )
+    cent = spark.createDataFrame([(1, [1.0, 0.0])], "c_id long, c_emb array<float>")
+    got = sorted(
+        (r["q_id"], r["rn"], r["n_id"], r["score"])
+        for r in ann.ivf_search(
+            corpus, queries, k=4, nprobe=1, centroids=cent
+        ).collect()
+    )
+    assert got[-1] == (10, 4, 3, None)
+
+    def values(rows, cols):
+        body = ", ".join(f"({i}, {v}::FLOAT[])" for i, v in rows)
+        return f"(VALUES {body}) t({cols})"
+
+    sql = ann.ivf_search_sql("c", "q", "k", k=4, nprobe=1)
+    want = sorted(
+        duckdb.sql(
+            f"""WITH c AS (SELECT * FROM {values(vecs, 'n_id, emb')}),
+            q AS (SELECT * FROM {values([(10, [1.0, 0.5])], 'q_id, q_emb')}),
+            k AS (SELECT * FROM {values([(1, [1.0, 0.0])], 'c_id, c_emb')}),
+            {sql}
+            SELECT q_id, rn, n_id, score FROM ivf_topk"""
+        ).fetchall()
+    )
+    assert got == want
+
+
 def test_ivf_pair_filter_is_applied(spark, sf_dir):
     """A label-mismatch pair_filter must hold on every returned row
     (the q_hard_negatives contract)."""

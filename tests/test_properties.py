@@ -1,7 +1,8 @@
-"""Property-based tests (SURVEY.md §5/§7.4): the Column-expression rule
-matcher vs an independent Python model of the reference's semantics
-(written from kafka_s.py:240-285's description, not from the expression
-code under test), over hypothesis-generated rules and titles."""
+"""Property-based tests (SURVEY.md §5/§7.4): the production rule join
+(``rules.match``, driver-compiled) vs an independent Python model of the
+reference's semantics (written from kafka_s.py:240-285's description,
+not from the expression code under test), over hypothesis-generated
+rules and titles."""
 
 from __future__ import annotations
 
@@ -42,25 +43,30 @@ def _case(draw):
 @settings(max_examples=12, deadline=None)
 @given(st.lists(_case(), min_size=1, max_size=25))
 def test_rule_match_agrees_with_model(spark, cases):
-    df = spark.createDataFrame(cases, schema=["title", "in_rules", "filter_rules"])
-    got = (
-        df.select(
-            "title",
-            "in_rules",
-            "filter_rules",
-            rules.rule_matches(
-                F.col("title"), F.col("in_rules"), F.col("filter_rules")
-            ).alias("m"),
-        )
-        .collect()
+    """Every generated title against every generated rule: the generated
+    rules become a rules frame with synthetic rule_ids, joined by
+    ``rules.match``; the matched (title, rule) pairs must be exactly the
+    model's."""
+    titles = spark.createDataFrame(
+        [(i, t) for i, (t, _, _) in enumerate(cases)], schema="tid long, title string"
     )
-    for row in got:
-        expected = model_match(row["title"], row["in_rules"], row["filter_rules"])
-        assert row["m"] == expected, (
-            row["title"],
-            row["in_rules"],
-            row["filter_rules"],
-        )
+    rules_df = spark.createDataFrame(
+        [(i, inr, fr) for i, (_, inr, fr) in enumerate(cases)],
+        schema="rule_id long, in_rules string, filter_rules string",
+    )
+    got = {
+        (row["tid"], row["rule_id"])
+        for row in rules.match(titles, "title", rules_df).collect()
+    }
+    want = {
+        (i, j)
+        for i, (title, _, _) in enumerate(cases)
+        for j, (_, inr, fr) in enumerate(cases)
+        if model_match(title, inr, fr)
+    }
+    assert got == want, [
+        (cases[i][0], cases[j][1], cases[j][2]) for i, j in got ^ want
+    ]
 
 
 def model_shingles(text: str, n: int = 3) -> list[str]:

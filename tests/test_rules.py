@@ -1,6 +1,7 @@
 """Rule-parse and rule-match semantics (SURVEY.md §7.4 hard part #1):
 ``、``/``&`` parsing with the asymmetric strip, all-keywords-present
-matching, veto rules, empty-filter safety, multi-rule fan-out."""
+matching, veto rules, empty-filter safety, multi-rule fan-out — all
+through the driver-compiled matcher production runs."""
 
 from __future__ import annotations
 
@@ -13,27 +14,28 @@ def _one(spark, col):
     return spark.range(1).select(col.alias("v")).collect()[0]["v"]
 
 
-def test_parse_in_rules_or_and(spark):
-    v = _one(spark, rules.parse_in_rules(F.lit("a&b、c")))
-    assert v == [["a", "b"], ["c"]]
+def test_parse_in_rules_or_and():
+    groups, _ = rules.parse_rule_py("a&b、c", "")
+    assert groups == [["a", "b"], ["c"]]
 
 
 def test_parse_strip_asymmetry(spark):
-    # OR-groups are stripped; AND-parts are not (kafka_s.py:243-245)
-    v = _one(spark, rules.parse_in_rules(F.lit(" a & b 、 c ")))
-    assert v == [["a ", " b"], ["c"]]
+    # OR-groups are stripped; AND-parts are not (kafka_s.py:243-245), so
+    # the unstripped AND-part " b" needs its leading space in the title
+    groups, _ = rules.parse_rule_py(" a & b 、 c ", "")
+    assert groups == [["a ", " b"], ["c"]]
+    assert _match(spark, "a  b", " a & b 、 c ")
+    assert not _match(spark, "ab", " a & b ")
+    assert _match(spark, "xc", " a & b 、 c ")
 
 
-def test_parse_filter_rules_drops_empties(spark):
-    assert _one(spark, rules.parse_filter_rules(F.lit(""))) == []
-    assert _one(spark, rules.parse_filter_rules(F.lit("x、、y"))) == ["x", "y"]
+def test_parse_filter_rules_drops_empties():
+    assert rules.parse_rule_py("a", "")[1] == []
+    assert rules.parse_rule_py("a", "x、、y")[1] == ["x", "y"]
 
 
 def _match(spark, title: str, in_rules: str, filter_rules: str = "") -> bool:
-    return _one(
-        spark,
-        rules.rule_matches(F.lit(title), F.lit(in_rules), F.lit(filter_rules)),
-    )
+    return _one(spark, rules.compile_match(F.lit(title), in_rules, filter_rules))
 
 
 def test_match_all_and_keywords_required(spark):
@@ -53,11 +55,18 @@ def test_match_is_substring_not_word(spark):
 def test_veto_blocks_match(spark):
     assert not _match(spark, "spark is fast but slow", "spark&fast", "slow")
     assert _match(spark, "spark is fast", "spark&fast", "slow")
+    assert not _match(spark, "spark is fast, no error", "spark&fast", "slow、error")
+    # the veto alone is q_anti_filter's predicate
+    assert _one(spark, rules.veto(F.lit("it is slow"), "slow、error")) is False
+    assert _one(spark, rules.veto(F.lit("it is fine"), "slow、error")) is True
+    assert _one(spark, rules.veto(F.lit(None).cast("string"), "slow")) is None
 
 
 def test_empty_filter_rules_never_veto(spark):
     # contains(title, '') is true — empties must be dropped pre-check
     assert _match(spark, "spark is fast", "spark&fast", "")
+    assert _match(spark, "spark is fast", "spark&fast", "、、")
+    assert _one(spark, rules.veto(F.lit("anything"), "")) is True
 
 
 def test_multi_rule_fanout(spark):
@@ -65,15 +74,14 @@ def test_multi_rule_fanout(spark):
     from kafka_stream_spark.sources import dims
 
     titles = spark.createDataFrame(
-        [("the spark fast stream window",)], schema=["title"]
+        [(1, "the spark fast stream window"),
+         (2, "the spark fast stream window table scan filter")],
+        schema=["tid", "title"],
     )
-    r = dims.rules_df(spark)
-    cond = rules.rule_matches(
-        titles["title"], r["in_rules"], r["filter_rules"]
-    )
-    matched = titles.join(F.broadcast(r), cond, "inner")
-    got = {row["rule_id"] for row in matched.collect()}
-    assert got == {1}  # rule 1 via both OR-groups still yields ONE row
+    matched = rules.match(titles, "title", dims.rules_df(spark))
+    got = {(row["tid"], row["rule_id"]) for row in matched.collect()}
+    # rule 1 via both OR-groups still yields ONE row per title
+    assert got == {(1, 1), (2, 1), (2, 2)}
 
 
 def test_oracle_sql_twin_agrees(spark):
@@ -85,6 +93,8 @@ def test_oracle_sql_twin_agrees(spark):
         ("stream only", "spark&fast、stream", ""),
         ("nothing here", "spark&fast", ""),
         (" padded ", " pad 、x&y", ""),
+        ("a  b", " a & b 、 c ", "、、"),
+        ("spark is fast, no error", "spark&fast", "slow、error"),
     ]
     for title, inr, fr in cases:
         spark_v = _match(spark, title, inr, fr)
