@@ -39,6 +39,13 @@ from pyspark.sql import functions as F
 OR_SEP = "、"
 AND_SEP = "&"
 
+#: what ``str.strip()`` strips (every character with ``str.isspace``), as a
+#: DuckDB string expression for ``trim(g, ...)``; DuckDB's one-argument
+#: ``trim`` strips spaces only
+_STRIP_CHARS_SQL = " || ".join(
+    f"chr({c})" for c in range(0x110000) if chr(c).isspace()
+)
+
 
 def parse_rule_py(in_rules: str, filter_rules: str) -> tuple[list[list[str]], list[str]]:
     """``('a&b、c', 'x、、y')`` → ``([['a','b'], ['c']], ['x','y'])``.
@@ -104,7 +111,9 @@ def match(d: DataFrame, title: str, r: DataFrame) -> DataFrame:
     The only place the rules dim is collected. Collecting at plan
     construction keeps the T2 refresh semantics of a file-backed ``r``:
     a streaming query collects at (re)start, exactly when the static
-    side's file listing is captured anyway."""
+    side's file listing is captured anyway. The inline dim is a
+    ``LocalRelation`` (``dims.local_frame``), so its collect runs no
+    Spark job."""
     rule_rows = [
         (row.rule_id, row.in_rules, row.filter_rules)
         for row in r.select("rule_id", "in_rules", "filter_rules").collect()
@@ -116,13 +125,14 @@ def match(d: DataFrame, title: str, r: DataFrame) -> DataFrame:
 def duckdb_match_sql(title: str, in_rules: str, filter_rules: str) -> str:
     """DuckDB boolean expression of the same match, parsing the rule
     strings per row (list_filter lambdas; DuckDB has no join-condition
-    lambda hazard)."""
+    lambda hazard). OR-groups are stripped of the same characters as
+    ``parse_rule_py`` strips."""
     return f"""(
       len(list_filter(
             string_split({in_rules}, '、'),
-            g -> len(list_filter(string_split(trim(g), '&'),
+            g -> len(list_filter(string_split(trim(g, {_STRIP_CHARS_SQL}), '&'),
                                  kw -> contains({title}, kw)))
-                 = len(string_split(trim(g), '&'))
+                 = len(string_split(trim(g, {_STRIP_CHARS_SQL}), '&'))
       )) > 0
       AND len(list_filter(
             list_filter(string_split({filter_rules}, '、'), kw -> kw <> ''),

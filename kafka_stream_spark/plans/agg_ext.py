@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import hashing
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -313,7 +314,7 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cum", F.sum("cnt").over(Window.orderBy("b").rowsBetween(
             Window.unboundedPreceding, Window.currentRow))
     )
-    qs = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "q double")
+    qs = local_frame(spark, [(0.5,), (0.9,), (0.99,)], "q double")
     tgt = qs.crossJoin(F.broadcast(st)).select(
         "q",
         F.greatest(F.ceil(F.col("q") * F.col("n")).cast("long"), F.lit(1))

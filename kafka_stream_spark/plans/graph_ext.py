@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -257,8 +258,8 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", parts)
     try:
-        dist = spark.createDataFrame(
-            [(2, 0.0)], "v long, dist double"
+        dist = local_frame(
+            spark, [(2, 0.0)], "v long, dist double"
         ).localCheckpoint(eager=True)
         for _ in range(4):
             relaxed = (

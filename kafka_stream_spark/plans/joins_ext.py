@@ -19,6 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -197,8 +198,10 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket. No nested-loop cross product: at 100 TB the fact side hits
     only the buckets that ranges actually cover."""
     e = load(spark, sf_dir, "events")
-    r = spark.createDataFrame(
-        RANGE_ROWS, schema=["range_id", "start_ts", "end_ts", "label"]
+    r = local_frame(
+        spark,
+        RANGE_ROWS,
+        "range_id long, start_ts string, end_ts string, label string",
     ).select(
         "range_id",
         F.col("start_ts").cast("timestamp").alias("start_ts"),

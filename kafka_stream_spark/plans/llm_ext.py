@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 from ..functions import hashing, text, vectors
 from ..operators import lsh, vq
 from ..session import default_parallelism
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -1214,8 +1215,8 @@ def q_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         sel_ids.append(top["vec_id"])
         out.append((t, top["vec_id"], float(top["rel"]), float(mmr)))
     cand.unpersist()
-    return spark.createDataFrame(
-        out, "sel_order int, vec_id long, rel double, mmr double"
+    return local_frame(
+        spark, out, "sel_order int, vec_id long, rel double, mmr double"
     )
 
 
@@ -1527,9 +1528,7 @@ def q_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.filter(F.split("text", " "), lambda t: t != "")
         ).alias("n_tok"),
     ).filter(F.col("n_tok") > 0)
-    schemes = spark.createDataFrame(
-        [(16,), (32,), (64,)], "bucket_size long"
-    )
+    schemes = local_frame(spark, [(16,), (32,), (64,)], "bucket_size long")
     padded = F.ceil(
         F.col("n_tok").cast("double") / F.col("bucket_size")
     ) * F.col("bucket_size")

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from .. import boards
 from ..boards import ASHARE, NEEQ, BoardConfig  # noqa: F401  (re-export)
 from ..functions import decode
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -126,4 +127,4 @@ def q_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts.append((sink, reader.load(path).count()))
     out.unpersist()
     shutil.rmtree(base, ignore_errors=True)  # counts are already collected
-    return spark.createDataFrame(counts, schema=["sink", "rows_written"])
+    return local_frame(spark, counts, "sink string, rows_written long")

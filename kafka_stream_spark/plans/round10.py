@@ -39,6 +39,7 @@ from pyspark.sql.window import Window as W
 from ..functions.hashing import token_hash, token_hash_sql
 from ..functions import text as _text
 from ..session import default_parallelism
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 from .round9b import _half_up_col, _half_up_sql
@@ -774,7 +775,8 @@ def q_mmd_rff(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("k")).alias("k"),
         F.round(F.col("ev").cast("double") * 10000).cast("long").alias("x4"),
     )
-    wdf = emb.sparkSession.createDataFrame(
+    wdf = local_frame(
+        emb.sparkSession,
         [
             (j, k, _MMD_W[j][k])
             for j in range(_MMD_D)
@@ -782,7 +784,8 @@ def q_mmd_rff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "j int, k int, wm long",
     )
-    bdf = emb.sparkSession.createDataFrame(
+    bdf = local_frame(
+        emb.sparkSession,
         [(j, _MMD_B[j]) for j in range(_MMD_D)], "j int, b7 long"
     )
     ang = (
@@ -963,6 +966,6 @@ def q_cka_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
             float(fxy) / (math.sqrt(float(fxx)) * math.sqrt(float(fyy))), 6
         )
         out.append((int(r["label"]), n, cka))
-    return spark.createDataFrame(
-        out, "label long, n long, cka double"
+    return local_frame(
+        spark, out, "label long, n long, cka double"
     ).orderBy("label")

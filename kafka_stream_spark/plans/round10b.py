@@ -34,6 +34,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions.hashing import token_hash, token_hash_sql
 from ..functions import text as _text
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 from .round9b import _half_up_col, _half_up_sql
@@ -260,7 +261,8 @@ def q_scaling_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sh(1000 * (sy * sxx - sx * sxy), den) / 1000.0,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "event_type string, n long, slope double, intercept double"
     ).orderBy("event_type")
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.hashing import token_hash, token_hash_sql
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 from .round9b import _half_up_col, _half_up_sql
@@ -113,8 +114,8 @@ def q_grad_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
                 float(dot) / (math.sqrt(float(qa)) * math.sqrt(float(qb))), 6
             )
             out.append((la, lb, cos, 1 if dot < 0 else 0))
-    return spark.createDataFrame(
-        out, "label_a long, label_b long, cosine double, conflict int"
+    return local_frame(
+        spark, out, "label_a long, label_b long, cosine double, conflict int"
     ).orderBy("label_a", "label_b")
 
 
@@ -654,7 +655,8 @@ def q_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
         hu(1000000 * ksum, n) / 1000000.0,
         hu(cal6, n) / 1000000.0,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [row],
         "slope_a double, intercept_b double, n long, "
         "base_rate double, mean_calibrated_p double",
@@ -967,7 +969,8 @@ def q_cox_ph(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n"),
         F.sum("d").cast("long").alias("n_events"),
     ).collect()[0]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 beta / 1000000.0,

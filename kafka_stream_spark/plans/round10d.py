@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import text as _text
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 from .round9b import _half_up_col, _half_up_sql
@@ -143,7 +144,7 @@ def q_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("n"),
     )
-    qs = spark.createDataFrame([(q,) for q in _HDR_QS], "q long")
+    qs = local_frame(spark, [(q,) for q in _HDR_QS], "q long")
     est = (
         qs.join(cum, 100 * F.col("cc") >= F.col("q") * F.col("n"))
         .groupBy("q")
@@ -352,7 +353,8 @@ def q_jelinek_mercer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("lsum"),
     ).collect()[0]
     avg_lp = sh(int(fin["lsum"]), int(fin["n_tokens"])) / 1000000.0
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(lam / 1000000.0, int(fin["n_tokens"]), avg_lp)],
         "lam double, n_tokens long, avg_logprob double",
     )

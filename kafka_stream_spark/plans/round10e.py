@@ -25,6 +25,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions.hashing import token_hash, token_hash_sql
 from ..functions import text as _text
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 from .round9b import _half_up_col, _half_up_sql
@@ -261,7 +262,8 @@ def q_cluster_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     vnum, ncl = int(c["vnum"]), int(c["ncl"])
     se_iid_raw = math.sqrt((float(se2) / (n - 2)) / float(su2))
     se_c_raw = math.sqrt(float(vnum)) / float(su2)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 b6 / 1000000.0,

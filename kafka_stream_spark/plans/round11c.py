@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import token_hash_sql
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -124,8 +125,8 @@ def q_participation_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
                     tr_c2 += 2.0 * cij * cij
         pr = tr_c * tr_c / tr_c2
         out.append((int(r["label"]), n, round(pr, 6), round(pr / _PR_D, 6)))
-    return spark.createDataFrame(
-        out, "label long, n long, participation_ratio double, "
+    return local_frame(
+        spark, out, "label long, n long, participation_ratio double, "
         "pr_fraction double"
     ).orderBy("label")
 

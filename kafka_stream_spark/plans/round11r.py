@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import text as textfn
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -169,9 +170,7 @@ def q_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
         .alias("cum"),
     )
-    pcts = spark.createDataFrame(
-        [(p,) for p in _VC_PCTS], "pct long"
-    )
+    pcts = local_frame(spark, [(p,) for p in _VC_PCTS], "pct long")
     return (
         rk.crossJoin(F.broadcast(pcts))
         .filter(F.lit(100) * F.col("cum") >= F.col("pct") * n_tok)

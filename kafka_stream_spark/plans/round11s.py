@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..operators.lsh import minhash_cte_chain
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .llm_ext import near_dup_pairs
 from .registry import query
@@ -212,7 +213,8 @@ def q_dupgraph_homophily(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = 1.0 if sq == m2 * m2 else round(
         (frac_same - aa2) / (1 - aa2), 6
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 m2 // 2,

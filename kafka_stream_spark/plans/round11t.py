@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..operators.lsh import minhash_cte_chain
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .llm_ext import candidate_pairs_scored
 from .registry import query
@@ -239,7 +240,8 @@ def q_dup_percolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-trip through a Spark double column (ADVICE r12): a future
     # _PERC_TAUS value that doesn't survive the float round-trip would
     # silently hit the .get default and report n_docs=0
-    taus_df = spark.createDataFrame(
+    taus_df = local_frame(
+        spark,
         [(i, float(t)) for i, t in enumerate(_PERC_TAUS)],
         "tau_idx int, tau double",
     )
@@ -334,7 +336,8 @@ def q_dup_percolation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "v", F.col("component").alias("comp")
             ).localCheckpoint(eager=True)
     rows = [rows_by_idx[i] for i in range(len(_PERC_TAUS))]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "tau double, n_edges long, n_docs_in_dup_sets long,"
         " n_components long, max_component long",

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import avro as _avro
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -220,9 +221,7 @@ def q_ac_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("doc_id").alias("n_docs"),
         F.sum("n_occ").alias("n_occ"),
     )
-    pats = spark.createDataFrame(
-        [(p,) for p in _AC_PATTERNS], "pattern string"
-    )
+    pats = local_frame(spark, [(p,) for p in _AC_PATTERNS], "pattern string")
     return pats.join(agg, "pattern", "left").select(
         "pattern",
         F.coalesce("n_docs", F.lit(0)).alias("n_docs"),

@@ -741,28 +741,37 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a query — the X86 ANN-recall discipline applied to the text-dedup
     stack, closing the 'how much does banding miss' question with a
     number instead of the banding probability argument. The exact side
-    is the documented O(n^2) correctness twin (never the scale path;
-    excluded from bench); the LSH side is the production pipeline.
+    is the correctness twin: every pair sharing a shingle, verified
+    exactly (never the scale path; excluded from bench); the LSH side is
+    the production pipeline.
     Output: exact pairs, LSH pairs, hits, recall."""
-    from ..session import default_parallelism
     from .llm_ext import near_dup_pairs
 
-    # fan the single-split scan out, or the nested-loop self-join below
-    # runs as one task
-    h = (
-        lsh.shingle_sets(load(spark, sf_dir, "documents"))
-        .repartition(default_parallelism())
-        .persist()
-    )
-    x, y = h.alias("x"), h.alias("y")
-    exact = (
-        x.join(y, F.col("x.doc_id") < F.col("y.doc_id"))
+    h = lsh.shingle_sets(load(spark, sf_dir, "documents")).persist()
+    # a pair with Jaccard >= 0.5 shares a shingle, so the candidates are
+    # the pairs that share one (an equi-join on the exploded hashes, not
+    # all n^2 pairs); a doc with no shingles scores NULL against any
+    # other and has no candidate
+    hv = h.select("doc_id", F.explode("hs").alias("hv"))
+    shared = (
+        hv.alias("x")
+        .join(hv.alias("y"), "hv")
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
         .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            lsh.jaccard("x.hs", "y.hs").alias("j"),
+            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
         )
-        .filter(F.col("j") >= 0.5)
+        .distinct()
+    )
+    exact = (
+        shared.join(
+            h.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a")),
+            "doc_a",
+        )
+        .join(
+            h.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b")),
+            "doc_b",
+        )
+        .filter(lsh.jaccard("hs_a", "hs_b") >= 0.5)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -137,8 +138,8 @@ def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.row_number().over(Window.orderBy("d")) - 1).alias("t"),
         F.count("*").over(wall).alias("n"),
     )
-    periods = spark.createDataFrame(
-        [(7.0,), (14.0,), (30.44,), (91.31,), (365.25,)], ["per"]
+    periods = local_frame(
+        spark, [(7.0,), (14.0,), (30.44,), (91.31,), (365.25,)], "per double"
     )
     tau = 2 * 3.141592653589793
     ang = F.lit(tau) * F.col("t") / F.col("per")

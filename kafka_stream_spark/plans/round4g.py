@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import hashing
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -266,7 +267,8 @@ def q_embedding_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     orphans = e.join(d, e.vec_id == d.doc_id, "left_anti").count()
     # scalar counts assembled driver-side: this is a 5-number audit
     # summary (each count is a distributed job; the collect is O(1))
-    return load(spark, sf_dir, "documents").sparkSession.createDataFrame(
+    return local_frame(
+        spark,
         [(n_docs, n_vecs, covered, missing, orphans)],
         "n_docs long, n_vectors long, n_covered long, "
         "n_docs_without_vec long, n_orphan_vecs long",

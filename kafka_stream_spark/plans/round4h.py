@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -159,8 +160,8 @@ def q_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding")[0].cast("double").alias("x1"),
         F.col("embedding")[1].cast("double").alias("x2"),
     )
-    w = x.sparkSession.createDataFrame(
-        [(0.0, 0.0, 0.0)], "w0 double, w1 double, w2 double"
+    w = local_frame(
+        x.sparkSession, [(0.0, 0.0, 0.0)], "w0 double, w1 double, w2 double"
     )
     for _ in range(_GD_ITERS):
         scored = x.crossJoin(F.broadcast(w))

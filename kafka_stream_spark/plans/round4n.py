@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -519,7 +520,7 @@ def q_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
         "r", (F.row_number().over(Window.orderBy("d")) - 1).alias("i")
     )
     blk = idx.crossJoin(
-        spark.createDataFrame([(16,), (32,), (64,), (128,)], ["s"])
+        local_frame(spark, [(16,), (32,), (64,), (128,)], "s long")
     ).select("s", (F.col("i") / F.col("s")).cast("long").alias("b"), "i", "r")
     bstat = blk.groupBy("s", "b").agg(
         F.count("*").alias("n"),

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -597,11 +598,11 @@ def q_bitemporal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_add(F.to_date("o_orderdate"), 3).alias("known_from"),
         "o_totalprice",
     )
-    vs = spark.createDataFrame(
-        [("1995-06-30",), ("1996-06-30",)], ["v"]
+    vs = local_frame(
+        spark, [("1995-06-30",), ("1996-06-30",)], "v string"
     ).select(F.col("v").cast("date").alias("valid_asof"))
-    ks = spark.createDataFrame(
-        [("1995-06-30",), ("1995-07-03",)], ["k0"]
+    ks = local_frame(
+        spark, [("1995-06-30",), ("1995-07-03",)], "k0 string"
     ).select(F.col("k0").cast("date").alias("known_asof"))
     axes = vs.crossJoin(ks)
     j = facts.crossJoin(F.broadcast(axes))

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .geo import _POINTS_SQL, _points
 from .registry import query
@@ -594,8 +595,10 @@ def q_geofence(spark: SparkSession, sf_dir: str) -> DataFrame:
     math, so it stays in whole-stage codegen). Overlapping fences
     multi-count by design, as real geofence alerting does."""
     pts = _points(spark, sf_dir)
-    fences = spark.createDataFrame(
-        _FENCES, ["fence", "lat0", "lat1", "lon0", "lon1"]
+    fences = local_frame(
+        spark,
+        _FENCES,
+        "fence string, lat0 double, lat1 double, lon0 double, lon1 double",
     )
     hits = pts.join(
         F.broadcast(fences),

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 from .round4o import _ERF_SQL, _p_two_sided
@@ -548,7 +549,7 @@ def q_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.orderBy(F.col("o_totalprice").desc(), "o_orderkey"))
         .alias("rnk"),
     ).localCheckpoint(eager=True)
-    ks = spark.createDataFrame([(250,), (500,), (1000,)], ["k"])
+    ks = local_frame(spark, [(250,), (500,), (1000,)], "k long")
     xk = ks.join(v, F.col("rnk") == F.col("k") + 1).select(
         "k", F.col("x").alias("xmin")
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -514,7 +515,7 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.lag("s").over(wl), F.lit(1.0)).alias("s_prev"),
         F.coalesce(F.lag("t").over(wl), F.lit(0)).alias("t_prev"),
     ).localCheckpoint(eager=True)
-    taus = spark.createDataFrame([(7,), (14,), (30,)], ["tau"])
+    taus = local_frame(spark, [(7,), (14,), (30,)], "tau long")
     rmst = (
         taus.crossJoin(segs)
         .groupBy("tau")

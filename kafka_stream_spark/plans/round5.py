@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import default_parallelism
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .llm_ext import _image_phash_oracle
 from .registry import query
@@ -1898,7 +1899,8 @@ def q_filter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         6,
     )
     m = d.select("doc_id", n_tok.alias("n_tok"), q.alias("q"))
-    grid = load(spark, sf_dir, "documents").sparkSession.createDataFrame(
+    grid = local_frame(
+        spark,
         [(t,) for t in (0.0, 0.2, 0.4, 0.5, 0.6, 0.7, 0.8)], "tau double"
     )
     keep = F.col("q") >= F.col("tau")

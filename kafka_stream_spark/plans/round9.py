@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..operators import ann as _ann
 from ..session import default_parallelism
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 from .round8 import _KALMAN_ORACLE, _KF_P0, _KF_Q, _KF_R
@@ -1645,9 +1646,7 @@ def q_chinchilla_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tokens"
         )
     )
-    grid = spark.createDataFrame(
-        [(float(c),) for c in _CHIN_BUDGETS], "c double"
-    )
+    grid = local_frame(spark, [(float(c),) for c in _CHIN_BUDGETS], "c double")
     n_opt = F.round(F.sqrt(F.col("c") / (6.0 * _CHIN_TPP)), 6)
     d_opt = F.round(_CHIN_TPP * F.sqrt(F.col("c") / (6.0 * _CHIN_TPP)), 6)
     return (
@@ -2254,9 +2253,7 @@ def q_cascade_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a single map-side-combinable aggregate over events × a
     constant grid."""
     e = load(spark, sf_dir, "events")
-    grid = spark.createDataFrame(
-        [(float(t),) for t in _CASC_GRID], "t double"
-    )
+    grid = local_frame(spark, [(float(t),) for t in _CASC_GRID], "t double")
     agg = (
         e.crossJoin(F.broadcast(grid))
         .groupBy("t")

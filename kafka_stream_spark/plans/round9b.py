@@ -53,6 +53,7 @@ from pyspark.sql.window import Window as W
 from ..functions import text as _text
 from ..functions.hashing import token_hash, token_hash_sql
 from ..session import default_parallelism
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -1037,7 +1038,8 @@ def q_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
         (f + 1, names[f], mm, uu)
         for f, (mm, uu) in enumerate(((m1, u1), (m2, u2), (m3, u3)))
     ]
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         rows, schema="field int, name string, m_milli long, u_milli long"
     )
     return out.select(
@@ -1945,9 +1947,7 @@ def dp_accountant_df(rel: DataFrame) -> DataFrame:
     import math
 
     spark = rel.sparkSession
-    alphas = spark.createDataFrame(
-        [(a,) for a in _DP_ALPHAS], "alpha int"
-    )
+    alphas = local_frame(spark, [(a,) for a in _DP_ALPHAS], "alpha int")
     e9 = F.round(
         1000000000
         * (

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.hashing import token_hash, token_hash_sql
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 from .round9b import _half_up_col, _half_up_sql
@@ -556,7 +557,8 @@ def embedding_bin_counts(emb: DataFrame) -> DataFrame:
             F.lit(_ED_NBINS - 1),
         ).alias("bin"),
     )
-    grid = emb.sparkSession.createDataFrame(
+    grid = local_frame(
+        emb.sparkSession,
         [
             (p, b, h)
             for p in range(_ED_NPROJ)
@@ -790,8 +792,8 @@ def q_rasch_irt(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i in range(len(etypes))
     ]
-    out = spark.createDataFrame(
-        rows, "event_type string, b_micro long, s long, n long"
+    out = local_frame(
+        spark, rows, "event_type string, b_micro long, s long, n long"
     )
     return out.select(
         "event_type",

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.dims import local_frame
 from ..sources.tables import load
 from .registry import query
 
@@ -1481,8 +1482,8 @@ def q_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("score"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
-    th = spark.createDataFrame(
-        [(100.0,), (200.0,), (300.0,), (400.0,), (450.0,)], "t double"
+    th = local_frame(
+        spark, [(100.0,), (200.0,), (300.0,), (400.0,), (450.0,)], "t double"
     )
     cm = (
         scored.crossJoin(F.broadcast(th))

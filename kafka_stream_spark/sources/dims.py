@@ -13,11 +13,23 @@ Both are broadcast in every plan that joins them: on a 1000-executor
 cluster the dim ships once per executor, the fact side never shuffles.
 ``as_values_sql`` renders the same rows as a DuckDB VALUES clause so the
 oracle runs on literally identical dimension data.
+
+``local_frame`` is how every inline frame of the package (these dims,
+literal grids, driver-computed results, empty state frames) enters
+Spark: a ``LocalRelation`` the driver already holds, so touching it
+(a ``collect``, a broadcast) runs no Spark job. ``createDataFrame`` on
+a Python list builds an RDD-backed plan instead, and every action on it
+ships the rows through Python workers.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 # (rule_id, in_rules, filter_rules, category_code, category_name,
 #  sentiment, importance)
@@ -38,18 +50,44 @@ RULES_COLS = (
     "sentiment",
     "importance",
 )
+RULES_SCHEMA = (
+    "rule_id long, in_rules string, filter_rules string, category_code long,"
+    " category_name string, sentiment long, importance long"
+)
 
 # (source, site_name)  — documents.source takes values src0..src9
 SITES_ROWS: list[tuple] = [(f"src{i}", f"站点{i}") for i in range(10)]
 SITES_COLS = ("source", "site_name")
+SITES_SCHEMA = "source string, site_name string"
+
+
+def local_frame(spark: SparkSession, rows: Iterable, schema: str) -> DataFrame:
+    """``rows`` (tuples, lists, dicts or Rows) as a driver-local
+    ``LocalRelation`` with exactly ``schema``, a DDL string such as
+    ``"q double, n long"``.
+
+    Values are converted by the schema's own ``toInternal``, as
+    ``createDataFrame(rows, schema)`` converts them, so a naive
+    ``datetime`` lands on the same instant (read in the Python process's
+    local zone) and a date on the same day; the arrays are then typed by
+    the schema's Arrow form. An Arrow table goes to the JVM as a
+    ``LocalRelation`` whatever the Arrow conf says."""
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    internal = [struct.toInternal(r) for r in rows]
+    cols = [[r[i] for r in internal] for i in range(len(struct.fields))]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def rules_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(RULES_ROWS, schema=list(RULES_COLS))
+    return local_frame(spark, RULES_ROWS, RULES_SCHEMA)
 
 
 def sites_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SITES_ROWS, schema=list(SITES_COLS))
+    return local_frame(spark, SITES_ROWS, SITES_SCHEMA)
 
 
 def _sql_lit(v) -> str:

@@ -9,8 +9,12 @@ hand-writes both into its SQL strings (kafka_s.py:113, 292).
 
 from __future__ import annotations
 
+import os
+from weakref import WeakKeyDictionary
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import apply_runtime_confs
 
@@ -28,20 +32,62 @@ TABLES = (
 )
 
 
-_CONFED_SESSIONS: set[int] = set()
+#: per session: file identity → the footer schema Spark inferred for it
+_SESSIONS: WeakKeyDictionary[SparkSession, dict[tuple, StructType]] = (
+    WeakKeyDictionary()
+)
 
 
-def _ensure_confs(spark: SparkSession) -> None:
-    """Apply runtime confs once per session (load() is called many times
-    per query; re-setting identical confs each time is driver noise)."""
-    key = id(spark)
-    if key not in _CONFED_SESSIONS:
+def _session_schemas(spark: SparkSession) -> dict[tuple, StructType]:
+    """This session's schema cache. A session's first load also applies
+    the runtime confs (load() is called many times per query; re-setting
+    identical confs each time is driver noise)."""
+    schemas = _SESSIONS.get(spark)
+    if schemas is None:
         apply_runtime_confs(spark)
-        _CONFED_SESSIONS.add(key)
+        schemas = _SESSIONS[spark] = {}
+    return schemas
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(absolute path, size, mtime_ns) of a parquet file, or of every file
+    under a parquet directory; ``None`` for a path the OS cannot stat (a
+    remote URI), which is then inferred on every read."""
+    path = os.path.abspath(path)
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (path, st.st_size, st.st_mtime_ns)
+        files = []
+        for root, _, names in os.walk(path):
+            for n in names:
+                st = os.stat(os.path.join(root, n))
+                files.append((os.path.join(root, n), st.st_size, st.st_mtime_ns))
+        return (path, *sorted(files))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the footer schema (a Spark
+    job) only the first time this session reads this file as it is now;
+    later reads pass the cached schema. A rewritten file has a new
+    identity and is inferred again."""
+    schemas = _session_schemas(spark)
+    ident = _file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    schema = schemas.get(ident)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schemas[ident] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table; schema comes from parquet footer metadata.
+    """Read one testdata table; schema comes from parquet footer metadata,
+    read once per session and file (``_read_parquet``).
 
     ``events.ts`` normalizes to TIMESTAMP (with the session's pinned UTC
     zone) regardless of how the parquet stores it:
@@ -57,8 +103,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    _ensure_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -44,6 +44,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import boards
 from ..boards import NEEQ, BoardConfig
+from ..sources.dims import local_frame
 from .sources import file_cdc_stream
 
 #: read schemas of the testdata tables the streams consume
@@ -1253,7 +1254,7 @@ def run_streaming_late_router(
             hwm = new_hwm
         if hwm is not None:
             idempotent_upsert(
-                sess.createDataFrame([(hwm,)], "hwm timestamp"),
+                local_frame(sess, [(hwm,)], "hwm timestamp"),
                 batch_id,
                 state_dir,
             )
@@ -1717,7 +1718,8 @@ def sequence_pack_batch_fn(
         )
         prior = merged_store_read(sess, state_dir, before=batch_id)
         if prior is None:
-            prior = sess.createDataFrame(
+            prior = local_frame(
+                sess,
                 [], "bucket int, open_seq int, open_fill int, open_slot int"
             )
         joined = items.join(F.broadcast(prior), "bucket", "left")
@@ -1811,7 +1813,8 @@ def lm_score_with_counts(
     # empty store → sum is NULL; score nothing rather than raise
     total = bigrams.agg(F.sum("c12")).collect()[0][0] or 0
     if total == 0:
-        return docs.sparkSession.createDataFrame(
+        return local_frame(
+            docs.sparkSession,
             [], "source string, n_docs long, mean_score double, min_score double"
         )
     uni = unigrams.select("w", "c1", "c2")
@@ -2320,7 +2323,7 @@ def elo_state_fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
         "event_type", "ts", "event_id", "user_id", "value"
     )
     if existing is None:
-        existing = sess.createDataFrame([], _ELO_STATE_SCHEMA)
+        existing = local_frame(sess, [], _ELO_STATE_SCHEMA)
 
     def fn(key, state_pdf, ev_pdf):
         import pandas as pd
@@ -2459,9 +2462,9 @@ def run_streaming_ivm(
         a_state = merged_store_read(sess, a_dir)
         b_state = merged_store_read(sess, b_dir)
         if a_state is None:
-            a_state = sess.createDataFrame([], "k long, priority string, na long")
+            a_state = local_frame(sess, [], "k long, priority string, na long")
         if b_state is None:
-            b_state = sess.createDataFrame([], "k long, flag string, nb long")
+            b_state = local_frame(sess, [], "k long, flag string, nb long")
         parts = []
         # Δa ⋈ B (pre-batch), A (pre-batch) ⋈ Δb, Δa ⋈ Δb
         for left, right in ((da, b_state), (a_state, db), (da, db)):
@@ -2598,7 +2601,7 @@ def sprt_state_fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
     sess = batch.sparkSession
     ev = batch.select("event_type", "ts", "event_id", "value")
     if existing is None:
-        existing = sess.createDataFrame([], _SPRT_STATE_SCHEMA)
+        existing = local_frame(sess, [], _SPRT_STATE_SCHEMA)
 
     def fn(key, state_pdf, ev_pdf):
         import pandas as pd
@@ -2770,7 +2773,7 @@ def bocpd_state_fold(existing, batch):
     sess = batch.sparkSession
     ev = batch.select("event_type", "ts", "event_id", "value")
     if existing is None:
-        existing = sess.createDataFrame([], _BOCPD_STATE_SCHEMA)
+        existing = local_frame(sess, [], _BOCPD_STATE_SCHEMA)
 
     def fn(key, state_pdf, ev_pdf):
         import pandas as pd
@@ -2868,7 +2871,7 @@ def space_saving_state_fold(existing, batch):
     sess = batch.sparkSession
     ev = batch.select("event_type", "ts", "event_id", "user_id")
     if existing is None:
-        existing = sess.createDataFrame([], _SS_STATE_SCHEMA)
+        existing = local_frame(sess, [], _SS_STATE_SCHEMA)
 
     def fn(key, state_pdf, ev_pdf):
         import pandas as pd
@@ -2966,7 +2969,7 @@ def theta_state_fold(existing, batch):
         .distinct()
     )
     if existing is None:
-        existing = sess.createDataFrame([], _THETA_STATE_SCHEMA)
+        existing = local_frame(sess, [], _THETA_STATE_SCHEMA)
     merged = existing.unionByName(fresh).distinct()
     return (
         merged.withColumn(

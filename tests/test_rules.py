@@ -95,9 +95,13 @@ def test_oracle_sql_twin_agrees(spark):
         (" padded ", " pad 、x&y", ""),
         ("a  b", " a & b 、 c ", "、、"),
         ("spark is fast, no error", "spark&fast", "slow、error"),
+        # an OR-group padded with non-ASCII whitespace: str.strip() strips
+        # the tab and the ideographic space U+3000, so both engines match
+        ("spark", "\u3000spark\t", ""),
     ]
     for title, inr, fr in cases:
         spark_v = _match(spark, title, inr, fr)
         sql = rules.duckdb_match_sql(f"'{title}'", f"'{inr}'", f"'{fr}'")
         duck_v = duckdb.sql(f"SELECT {sql}").fetchone()[0]
         assert spark_v == duck_v, (title, inr, fr)
+    assert _match(spark, "spark", "\u3000spark\t")
