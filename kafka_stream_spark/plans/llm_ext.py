@@ -22,6 +22,7 @@ from ..operators import lsh, vq
 from ..session import default_parallelism
 from ..sources.dims import local_frame
 from ..sources.tables import load
+from ..streaming.pipeline import Cells, StoreSpec
 from .registry import query
 
 
@@ -1471,12 +1472,19 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable rollup + a broadcast normalizer; the per-stratum
     expected sample counts are what the downstream sampler (X220)
     consumes."""
-    src = (
-        load(spark, sf_dir, "documents")
-        .groupBy("source", "lang")
-        .agg(F.count("*").alias("n"), F.sum("n_chars").alias("chars"))
-        .withColumn("raw_w", F.pow(F.col("n"), 0.5))
+    return MIXTURE_COUNTS.batch(spark, sf_dir)
+
+
+def strata_counts(d: DataFrame) -> DataFrame:
+    """Documents → (source, lang, n, chars) stratum sizes."""
+    return d.groupBy("source", "lang").agg(
+        F.count("*").alias("n"), F.sum("n_chars").alias("chars")
     )
+
+
+def mixture_weights_from_counts(counts: DataFrame) -> DataFrame:
+    """(source, lang, n, chars) → the q_mixture_weights output."""
+    src = counts.withColumn("raw_w", F.pow(F.col("n"), 0.5))
     tot = src.agg(F.sum("raw_w").alias("tw"), F.sum("n").alias("tn"))
     return src.crossJoin(F.broadcast(tot)).select(
         "source",
@@ -1488,6 +1496,15 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("expected_samples"),
     )
+
+
+#: X318 — the training-mix sampler reads fresh strata sizes from this
+#: store as documents stream in, without a corpus rescan
+MIXTURE_COUNTS = StoreSpec(
+    "documents",
+    (Cells("counts", ("source", "lang"), strata_counts),),
+    mixture_weights_from_counts,
+)
 
 
 @query(

@@ -36,6 +36,7 @@ from ..functions.hashing import token_hash, token_hash_sql
 from ..functions import text as _text
 from ..sources.dims import local_frame
 from ..sources.tables import load
+from ..streaming.pipeline import Cells, StoreSpec
 from .registry import query
 from .round9b import _half_up_col, _half_up_sql
 from .round10 import _sh_col, _sh_sql
@@ -681,39 +682,48 @@ def q_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: sketch state is d·w cells regardless of corpus; the audit
     join touches only the tracked keys."""
-    docs = load(spark, sf_dir, "documents")
-    cnt = (
+    return CMS.batch(spark, sf_dir)
+
+
+def _cms_token_counts(docs: DataFrame) -> DataFrame:
+    return (
         docs.select(F.explode(_text.tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").cast("long").alias("c"))
     )
-    jdf = spark.range(_CMS_D).select(F.col("id").cast("int").alias("j"))
-    hashed = cnt.crossJoin(F.broadcast(jdf)).select(
-        "tok",
-        "c",
-        "j",
-        (
-            token_hash(F.concat(F.col("j").cast("string"), F.lit("|"), F.col("tok")))
-            % _CMS_W
-        ).alias("cell"),
+
+
+def _cms_hashed(cnt: DataFrame) -> DataFrame:
+    """(tok, c) → (tok, c, j, cell): each token's cell in each of the d
+    hash rows, by the portable md5 token_hash."""
+    jdf = cnt.sparkSession.range(_CMS_D).select(
+        F.col("id").cast("int").alias("j")
     )
-    cells = hashed.groupBy("j", "cell").agg(F.sum("c").alias("cc"))
-    track = cnt.orderBy(F.desc("c"), "tok").limit(_CMS_TRACK)
+    cell = token_hash(
+        F.concat(F.col("j").cast("string"), F.lit("|"), F.col("tok"))
+    ) % _CMS_W
+    return cnt.crossJoin(F.broadcast(jdf)).select(
+        "tok", "c", "j", cell.alias("cell")
+    )
+
+
+def cms_cells(docs: DataFrame) -> DataFrame:
+    """Documents → the (j, cell, cc) count-min grid."""
+    return (
+        _cms_hashed(_cms_token_counts(docs))
+        .groupBy("j", "cell")
+        .agg(F.sum("c").alias("cc"))
+    )
+
+
+def cms_audit(docs: DataFrame, cells: DataFrame) -> DataFrame:
+    """(documents, grid) → the q_cms_sketch audit: exact count, sketch
+    estimate and overestimate of the top tracked tokens."""
+    track = _cms_token_counts(docs).orderBy(F.desc("c"), "tok").limit(
+        _CMS_TRACK
+    )
     est = (
-        track.crossJoin(F.broadcast(jdf))
-        .select(
-            "tok",
-            "c",
-            "j",
-            (
-                token_hash(
-                    F.concat(
-                        F.col("j").cast("string"), F.lit("|"), F.col("tok")
-                    )
-                )
-                % _CMS_W
-            ).alias("cell"),
-        )
+        _cms_hashed(track)
         .join(cells, ["j", "cell"])
         .groupBy("tok", "c")
         .agg(F.min("cc").alias("est"))
@@ -724,6 +734,17 @@ def q_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("est").cast("long").alias("cms_est"),
         (F.col("est") - F.col("c")).cast("long").alias("overestimate"),
     ).orderBy(F.desc("true_count"), "tok")
+
+
+#: X735 — the count-min sketch under micro-batch arrival: its cells are
+#: additive (the sketch's defining mergeability), d·w rows regardless
+#: of history
+CMS = StoreSpec(
+    "documents",
+    (Cells("cells", ("j", "cell"), cms_cells),),
+    cms_audit,
+    reads_source=True,
+)
 
 
 # ---------------------------------------------------------------------------

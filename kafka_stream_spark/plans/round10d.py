@@ -3,7 +3,7 @@ statistics.
 
 Reference scope note: §2.13 mandate extensions, reference-free.
 
-- X735 run_streaming_cms (streaming/pipeline.py): X723's streaming
+- X735 the ``CMS`` store spec (plans/round10b.py): X723's streaming
   face — the count-min cells are purely additive, so the sketch IS
   its own merge law.
 - X736 q_hdr_quantiles: HdrHistogram-style log-bucketed quantiles

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..sources.dims import local_frame
 from ..sources.tables import load
+from ..streaming.pipeline import Cells, StoreSpec
 from .geo import _POINTS_SQL, _points
 from .registry import query
 
@@ -63,14 +64,13 @@ def q_process_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     or endpoints; X390's paths are its most frequent walks. One
     windowed lag pass and a per-case tail pick; edges aggregate on a
     k² key."""
-    return dfg_finalize(dfg_edges(load(spark, sf_dir, "events")))
+    return PROCESS_MAP.batch(spark, sf_dir)
 
 
 def dfg_edges(e: DataFrame) -> DataFrame:
-    """Per-transition DFG rows (src, dst, dur) with virtual START/END —
-    the pre-aggregation form shared by the batch query and the
-    streaming edge store (sessions must not straddle the input frame,
-    which holds for batch and for session-keyed micro-batches)."""
+    """Per-transition DFG rows (src, dst, dur) with virtual START/END.
+    Sessions must not straddle the input frame, which holds for the
+    whole table and for session-keyed micro-batches."""
     w = Window.partitionBy(
         "user_id", F.date_trunc("day", "ts")
     ).orderBy("ts", "event_id")
@@ -103,34 +103,21 @@ def dfg_edges(e: DataFrame) -> DataFrame:
     return body.unionByName(tails)
 
 
-def dfg_partials(edges: DataFrame) -> DataFrame:
-    """Mergeable per-edge partials (n, dur_sum, dur_n) — closed under
-    addition, so per-micro-batch partials combine into the store by
-    summing (the X401 incremental-aggregate identity)."""
-    return edges.groupBy("src", "dst").agg(
+def dfg_partials(e: DataFrame) -> DataFrame:
+    """Events → mergeable per-edge partials (src, dst, n, dur_sum,
+    dur_n) — closed under addition, so per-micro-batch partials
+    combine into the store by summing (the X401 incremental-aggregate
+    identity)."""
+    return dfg_edges(e).groupBy("src", "dst").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("dur").alias("dur_sum"),
         F.count("dur").cast("long").alias("dur_n"),
     )
 
 
-def dfg_finalize(edges: DataFrame) -> DataFrame:
-    """(src, dst, dur) rows → the q_process_map output contract."""
-    return edges.groupBy("src", "dst").agg(
-        F.count("*").cast("long").alias("n"),
-        F.round(F.avg("dur"), 3).alias("mean_dur_s"),
-    )
-
-
 def dfg_from_partials(partials: DataFrame) -> DataFrame:
-    """Merged partials → the q_process_map output contract (shared
-    read-side arithmetic for the streaming store)."""
-    merged = partials.groupBy("src", "dst").agg(
-        F.sum("n").cast("long").alias("n"),
-        F.sum("dur_sum").alias("dur_sum"),
-        F.sum("dur_n").alias("dur_n"),
-    )
-    return merged.select(
+    """Per-edge partials → the q_process_map output contract."""
+    return partials.select(
         "src",
         "dst",
         "n",
@@ -141,6 +128,15 @@ def dfg_from_partials(partials: DataFrame) -> DataFrame:
             3,
         ).alias("mean_dur_s"),
     )
+
+
+#: X409's streaming face: the store is k² edge rows; it needs
+#: micro-batches keyed so a (user, day) session never straddles two
+PROCESS_MAP = StoreSpec(
+    "events",
+    (Cells("edges", ("src", "dst"), dfg_partials),),
+    dfg_from_partials,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -241,8 +237,7 @@ def kmv_hashes(li: DataFrame) -> DataFrame:
 def kmv_keep(h: DataFrame) -> DataFrame:
     """Keep the k smallest hashes per group — the sketch state. Closed
     under merge: keep(keep(A) ∪ keep(B)) = keep(A ∪ B), which is why
-    per-micro-batch sketches combine exactly (the streaming store's
-    invariant, pinned by pytest)."""
+    per-micro-batch sketches combine exactly (``kmv_merge``)."""
     wk = Window.partitionBy("g").orderBy("hv", "l_orderkey")
     return (
         h.withColumn("rn", F.row_number().over(wk))
@@ -334,9 +329,23 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the k smallest of the union of kept hashes) is exactly how
     per-partition sketches combine at 100 TB. Only k hashes per group
     survive the first rollup."""
-    li = load(spark, sf_dir, "lineitem")
-    kept = kmv_keep(kmv_hashes(li)).localCheckpoint(eager=True)
-    ests = kmv_estimates(kept)
+    return KMV.batch(spark, sf_dir)
+
+
+def kmv_sketch(li: DataFrame) -> DataFrame:
+    """Lineitem → the per-flag KMV sketch (g, hv, l_orderkey)."""
+    return kmv_keep(kmv_hashes(li))
+
+
+def kmv_merge(existing: DataFrame, part: DataFrame) -> DataFrame:
+    """keep(A ∪ B): the KMV store's keep-k merge."""
+    return kmv_keep(existing.unionByName(part).distinct())
+
+
+def kmv_report(li: DataFrame, kept: DataFrame) -> DataFrame:
+    """(lineitem, sketch) → the q_kmv_distinct output: the sketch's
+    estimates against the exact distinct counts of ``li``."""
+    ests = kmv_estimates(kept.localCheckpoint(eager=True))
     exact = li.groupBy(
         F.col("l_returnflag").alias("sketch")
     ).agg(F.countDistinct("l_orderkey").alias("exact_d"))
@@ -355,6 +364,16 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("rel_error"),
     )
+
+
+#: X411's streaming face: keep-k-smallest is closed under union, so the
+#: store's estimates EQUAL the batch sketch's; k rows per group
+KMV = StoreSpec(
+    "lineitem",
+    (Cells("sketch", ("g",), kmv_sketch, kmv_merge),),
+    kmv_report,
+    reads_source=True,
+)
 
 
 # ---------------------------------------------------------------------------

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..session import default_parallelism
 from ..sources.tables import load
+from ..streaming.pipeline import Cells, StoreSpec
 from .registry import query
 
 # quantized 0-255 gray levels from the embedding, 1-based DuckDB list
@@ -1009,7 +1010,7 @@ def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X582 — Stupid Backoff bigram scoring (Brants et al. 2007)
 # ---------------------------------------------------------------------------
 
-from .textlm import _BIGRAMS_SQL, _doc_bigrams  # noqa: E402
+from .textlm import _BIGRAMS_SQL, bigram_rows  # noqa: E402
 
 
 @query(
@@ -1064,19 +1065,50 @@ def q_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring join is bigram ⋈ count tables on their natural keys. The
     trained model is identical in both engines, so the gate pins the
     scoring arithmetic end-to-end."""
-    bg = _doc_bigrams(spark, sf_dir)
-    bg_counts = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    uni = bg.groupBy("w1").agg(F.count("*").alias("c1"))
-    uni2 = bg.groupBy(F.col("w2").alias("w")).agg(
-        F.count("*").alias("c2")
+    return LM_COUNTS.batch(spark, sf_dir)
+
+
+def lm_bigram_counts(d: DataFrame) -> DataFrame:
+    """Documents → (w1, w2, c12) bigram counts."""
+    return bigram_rows(d).groupBy("w1", "w2").agg(F.count("*").alias("c12"))
+
+
+def lm_unigram_counts(d: DataFrame) -> DataFrame:
+    """Documents → (w, c1, c2): per word, its count as a bigram's left
+    word and as its right word."""
+    bg = bigram_rows(d)
+    return (
+        bg.select(
+            F.col("w1").alias("w"), F.lit(1).alias("l"), F.lit(0).alias("r")
+        )
+        .unionByName(
+            bg.select(
+                F.col("w2").alias("w"),
+                F.lit(0).alias("l"),
+                F.lit(1).alias("r"),
+            )
+        )
+        .groupBy("w")
+        .agg(F.sum("l").alias("c1"), F.sum("r").alias("c2"))
     )
-    total = bg.count()
+
+
+def lm_score_with_counts(
+    docs: DataFrame, bigrams: DataFrame, unigrams: DataFrame
+) -> DataFrame:
+    """(documents, bigram counts, unigram counts) → the
+    q_stupid_backoff per-source scores."""
+    bg = bigram_rows(docs, "doc_id", "source")
+    total = bigrams.agg(F.sum("c12").alias("total"))
+    uni = unigrams.select("w", "c1", "c2")
     scored = (
-        bg.join(bg_counts, ["w1", "w2"], "left")
-        .join(uni, "w1", "left")
-        .join(uni2, bg.w2 == uni2.w, "left")
+        bg.join(bigrams.select("w1", "w2", "c12"), ["w1", "w2"], "left")
+        .join(uni.select(F.col("w").alias("w1"), "c1"), "w1", "left")
+        .join(uni.select(F.col("w").alias("w2"), "c2"), "w2", "left")
+        .crossJoin(F.broadcast(total))
         .select(
             "doc_id",
+            "source",
             F.round(
                 F.log10(
                     F.when(
@@ -1086,7 +1118,7 @@ def q_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
                         0.4
                         * F.coalesce(F.col("c2"), F.lit(0))
                         * 1.0
-                        / F.lit(float(total))
+                        / F.col("total")
                     )
                     + 1e-12
                 ),
@@ -1094,19 +1126,32 @@ def q_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lg"),
         )
     )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.round(F.avg("lg"), 6).alias("doc_score")
+    # every lg has 6 decimals, so a doc's mean can sit exactly on a
+    # 7th-decimal tie: average exactly in decimal and round it half-up,
+    # as DuckDB's round does, whatever order a double sum would run in
+    per_doc = scored.groupBy("doc_id", "source").agg(
+        F.round(F.avg(F.col("lg").cast("decimal(18,6)")), 6)
+        .cast("double")
+        .alias("doc_score")
     )
-    d = load(spark, sf_dir, "documents")
-    return (
-        per_doc.join(d.select("doc_id", "source"), "doc_id")
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.round(F.avg("doc_score"), 6).alias("mean_score"),
-            F.round(F.min("doc_score"), 6).alias("min_score"),
-        )
+    return per_doc.groupBy("source").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.round(F.avg("doc_score"), 6).alias("mean_score"),
+        F.round(F.min("doc_score"), 6).alias("min_score"),
     )
+
+
+#: X582's streaming face: bigram and two-sided unigram counts are plain
+#: sums, so scoring is a read-side view that never needs the text again
+LM_COUNTS = StoreSpec(
+    "documents",
+    (
+        Cells("bigrams", ("w1", "w2"), lm_bigram_counts),
+        Cells("unigrams", ("w",), lm_unigram_counts),
+    ),
+    lm_score_with_counts,
+    reads_source=True,
+)
 
 
 # ---------------------------------------------------------------------------

@@ -34,6 +34,7 @@ from pyspark.sql.window import Window as W
 from ..functions import hashing, text, vectors
 from ..session import default_parallelism
 from ..sources.tables import load
+from ..streaming.pipeline import Cells, StoreSpec
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -388,23 +389,30 @@ def q_grpo_advantage(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-local join back, one per-group window — the canonical
     two-pass normalize. 100 TB: groups are independent, skew bounded
     by samples-per-prompt (small by construction in RLHF data)."""
-    e = load(spark, sf_dir, "events").withColumn(
-        "cents", F.round(F.col("value") * 100).cast("long")
+    return GRPO_MOMENTS.batch(spark, sf_dir)
+
+
+def grpo_moments(e: DataFrame) -> DataFrame:
+    """Events → per-group (user_id, s1c, s2c, n) reward moments in
+    exact integer cents."""
+    cents = e.withColumn("cents", F.round(F.col("value") * 100).cast("long"))
+    return cents.groupBy("user_id").agg(
+        F.sum("cents").alias("s1c"),
+        F.sum(F.col("cents") * F.col("cents")).alias("s2c"),
+        F.count("*").alias("n"),
     )
-    g = (
-        e.groupBy("user_id")
-        .agg(
-            F.sum("cents").alias("s1c"),
-            F.sum(F.col("cents") * F.col("cents")).alias("s2c"),
-            F.count("*").alias("n"),
-        )
-        .filter(F.col("n") >= 4)
-    )
+
+
+def grpo_from_moments(events: DataFrame, moments: DataFrame) -> DataFrame:
+    """(events, moments) → the q_grpo_advantage output: n >= 4 gate,
+    variance floor, rounded advantage, top-2 per group on the rounded
+    value."""
+    g = moments.filter(F.col("n") >= 4)
     mean = F.col("s1c") / (100.0 * F.col("n"))
     var = F.greatest(
         F.col("s2c") / (10000.0 * F.col("n")) - mean * mean, F.lit(1e-12)
     )
-    a = e.join(g, "user_id").select(
+    a = events.join(g, "user_id").select(
         "user_id",
         "event_id",
         F.col("value").alias("reward"),
@@ -416,6 +424,16 @@ def q_grpo_advantage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= 2)
         .orderBy("user_id", "rnk")
     )
+
+
+#: X645 — streaming GRPO normalization state: integer-cents moments are
+#: associative, so the store's moments equal the batch's bit for bit
+GRPO_MOMENTS = StoreSpec(
+    "events",
+    (Cells("moments", ("user_id",), grpo_moments),),
+    grpo_from_moments,
+    reads_source=True,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -461,43 +479,103 @@ def q_best_of_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-group window (rank over samples-per-prompt, small
     by construction), one scalar aggregate joined as a broadcast —
     no global sort, no driver loop."""
-    e = load(spark, sf_dir, "events")
-    # the bar from exact integer cents (associative sums — the same
-    # contract as q_grpo_advantage, and what lets the streaming twin's
-    # incrementally-merged bar equal this one bit-for-bit)
-    bar = e.agg(
-        (
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            / (100.0 * F.count("*"))
-        ).alias("m")
-    )
+    return BEST_OF_N.batch(spark, sf_dir)
+
+
+def best_of_n_top2(e: DataFrame) -> DataFrame:
+    """Events → per-group top-2 (v1, e1, v2, e2) by (value DESC,
+    event_id) plus the sample count n."""
     w = W.partitionBy("user_id").orderBy(F.desc("value"), "event_id")
-    wc = W.partitionBy("user_id")
-    r = e.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(wc).alias("n"),
-    ).filter(F.col("rn") <= 2)
-    top2 = r.groupBy("user_id").agg(
-        F.any_value("n").alias("n"),
-        F.max(F.when(F.col("rn") == 1, F.col("event_id"))).alias("event_id"),
-        F.max(F.when(F.col("rn") == 1, F.col("value"))).alias("best"),
-        F.max(F.when(F.col("rn") == 2, F.col("value"))).alias("second"),
-    )
     return (
-        top2.crossJoin(bar)
-        .filter((F.col("n") >= 3) & (F.col("best") >= F.col("m")))
+        e.withColumn("rn", F.row_number().over(w))
+        .withColumn("n_b", F.count("*").over(W.partitionBy("user_id")))
+        .filter(F.col("rn") <= 2)
+        .groupBy("user_id")
+        .agg(
+            F.max(F.when(F.col("rn") == 1, F.col("value"))).alias("v1"),
+            F.max(F.when(F.col("rn") == 1, F.col("event_id"))).alias("e1"),
+            F.max(F.when(F.col("rn") == 2, F.col("value"))).alias("v2"),
+            F.max(F.when(F.col("rn") == 2, F.col("event_id"))).alias("e2"),
+            F.any_value("n_b").alias("n"),
+        )
+    )
+
+
+def top2_merge(existing: DataFrame, part: DataFrame) -> DataFrame:
+    """RANK-merge of two top-2 cell tables: explode both sides'
+    candidates, re-rank to the top-2 of the union, add the counts.
+    A semilattice merge on ORDER (max is associative and idempotent
+    per candidate), so no arithmetic can drift with fold order —
+    doubles are compared, never summed."""
+
+    def cands(df: DataFrame) -> DataFrame:
+        one = df.select(
+            "user_id", F.col("v1").alias("v"), F.col("e1").alias("e")
+        )
+        two = df.filter(F.col("v2").isNotNull()).select(
+            "user_id", F.col("v2").alias("v"), F.col("e2").alias("e")
+        )
+        return one.unionByName(two)
+
+    ns = (
+        existing.select("user_id", "n")
+        .unionByName(part.select("user_id", "n"))
+        .groupBy("user_id")
+        .agg(F.sum("n").alias("n"))
+    )
+    w = W.partitionBy("user_id").orderBy(F.desc("v"), "e")
+    ranked = (
+        cands(existing)
+        .unionByName(cands(part))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 2)
+    )
+    wide = ranked.groupBy("user_id").agg(
+        F.max(F.when(F.col("rn") == 1, F.col("v"))).alias("v1"),
+        F.max(F.when(F.col("rn") == 1, F.col("e"))).alias("e1"),
+        F.max(F.when(F.col("rn") == 2, F.col("v"))).alias("v2"),
+        F.max(F.when(F.col("rn") == 2, F.col("e"))).alias("e2"),
+    )
+    return wide.join(ns, "user_id")
+
+
+def reward_bar(e: DataFrame) -> DataFrame:
+    """Events → the corpus reward bar's (s1c, n) in exact integer
+    cents, one row keyed k = 0."""
+    return e.groupBy(F.lit(0).alias("k")).agg(
+        F.sum(F.round(F.col("value") * 100).cast("long")).alias("s1c"),
+        F.count("*").alias("n"),
+    )
+
+
+def best_of_n_select(top2: DataFrame, bar: DataFrame) -> DataFrame:
+    """(top-2 cells, bar cells) → the q_best_of_n output: n >= 3 gate,
+    the integer-cents bar, rounded margin over the runner-up."""
+    m = bar.select((F.col("s1c") / (100.0 * F.col("n"))).alias("m"))
+    return (
+        top2.crossJoin(F.broadcast(m))
+        .filter((F.col("n") >= 3) & (F.col("v1") >= F.col("m")))
         .select(
             "user_id",
-            "event_id",
-            F.round("best", 6).alias("best_reward"),
+            F.col("e1").alias("event_id"),
+            F.round("v1", 6).alias("best_reward"),
             F.col("n").cast("long").alias("n_samples"),
-            F.round(F.col("best") - F.col("second"), 6).alias("margin"),
+            F.round(F.col("v1") - F.col("v2"), 6).alias("margin"),
         )
         .orderBy("user_id")
     )
+
+
+#: X645b — streaming best-of-n: a top-2 RANK-merge cell table plus an
+#: additive integer-cents bar, each committed with its own replay guard
+BEST_OF_N = StoreSpec(
+    "events",
+    (
+        Cells("top2", ("user_id",), best_of_n_top2, top2_merge),
+        Cells("bar", ("k",), reward_bar),
+    ),
+    best_of_n_select,
+)
 
 
 # ---------------------------------------------------------------------------

@@ -36,6 +36,7 @@ from ..operators import ann as _ann
 from ..session import default_parallelism
 from ..sources.dims import local_frame
 from ..sources.tables import load
+from ..streaming.pipeline import Cells, StoreSpec
 from .registry import query
 from .round8 import _KALMAN_ORACLE, _KF_P0, _KF_Q, _KF_R
 
@@ -529,20 +530,19 @@ def q_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one groupBy(user) for (n, c), then constant arithmetic per
     prompt — map-side combinable counts, nothing else."""
-    e = load(spark, sf_dir, "events")
-    nc = e.groupBy("user_id").agg(
+    return PASS_COUNTS.batch(spark, sf_dir)
+
+
+def pass_counts(e: DataFrame) -> DataFrame:
+    """Events → per-prompt (user_id, n, c) trial/pass counts."""
+    return e.groupBy("user_id").agg(
         F.count("*").alias("n"),
-        F.sum((F.col("value") >= _PASS_THRESH).cast("int")).alias("c"),
+        F.sum((F.col("value") >= _PASS_THRESH).cast("long")).alias("c"),
     )
-    return pass_at_k_from_counts(nc)
 
 
 def pass_at_k_from_counts(nc: DataFrame) -> DataFrame:
-    """(user_id, n, c) → the q_pass_at_k output shape. Shared by the
-    batch query and the streaming counts store's read side
-    (streaming/pipeline.pass_at_k_from_store), so incremental == batch
-    is by construction — (n, c) are additive integers, the cleanest
-    possible merged-store state."""
+    """(user_id, n, c) → the q_pass_at_k output shape."""
     outs = []
     for k in _PASS_KS:
         prod = None
@@ -568,6 +568,15 @@ def pass_at_k_from_counts(nc: DataFrame) -> DataFrame:
     for o in outs[1:]:
         out = out.unionByName(o)
     return out
+
+
+#: X659 — the pass@k store: (n, c) are additive integers per prompt, so
+#: a live eval service keeps the curve current without a history rescan
+PASS_COUNTS = StoreSpec(
+    "events",
+    (Cells("counts", ("user_id",), pass_counts),),
+    pass_at_k_from_counts,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -893,20 +902,20 @@ def q_data_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two grouped aggregates (user×day, then user) — the same
     shuffle a daily rollup already pays."""
-    e = load(spark, sf_dir, "events")
-    cells = e.groupBy("user_id", F.to_date("ts").alias("d")).agg(
+    return DATA_MAP.batch(spark, sf_dir)
+
+
+def data_map_cells(e: DataFrame) -> DataFrame:
+    """Events → (user_id, d, n_pass, n) per-epoch pass/total counts."""
+    return e.groupBy("user_id", F.to_date("ts").alias("d")).agg(
         F.sum((F.col("value") >= _DM_THRESH).cast("long")).alias("n_pass"),
         F.count("*").alias("n"),
     )
-    return data_map_from_cells(cells)
 
 
 def data_map_from_cells(cells: DataFrame) -> DataFrame:
     """(user_id, d, n_pass, n) epoch cells → the q_data_map output
-    shape. Shared by the batch query and the streaming cells store's
-    read side (streaming/pipeline.data_map_from_store): the cell
-    counts are additive integers, so the live map equals the batch map
-    by associativity."""
+    shape."""
     pd_ = cells.select(
         "user_id",
         F.round(F.col("n_pass") * 1.0 / F.col("n"), 10).alias("p"),
@@ -936,6 +945,15 @@ def data_map_from_cells(cells: DataFrame) -> DataFrame:
         .otherwise("hard")
         .alias("quadrant"),
     )
+
+
+#: X666 — live dataset cartography: additive (user, day) cells, so the
+#: easy/ambiguous/hard map updates per micro-batch without a rescan
+DATA_MAP = StoreSpec(
+    "events",
+    (Cells("cells", ("user_id", "d"), data_map_cells),),
+    data_map_from_cells,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2340,9 +2358,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one projection pass computing the CASE ladder (tokenize
     once; pure Column expressions), one stage-grain aggregate."""
-    d = load(spark, sf_dir, "documents")
-    cells = funnel_stage_counts(d)
-    return funnel_from_cells(cells)
+    return FUNNEL.batch(spark, sf_dir)
 
 
 def funnel_stage_attribution(d: DataFrame) -> F.Column:
@@ -2365,8 +2381,8 @@ def funnel_stage_attribution(d: DataFrame) -> F.Column:
 
 
 def funnel_stage_counts(d: DataFrame) -> DataFrame:
-    """(stage, n_docs, n_chars_s) additive cells — the merged-store
-    state of the streaming funnel (streaming/pipeline.run_streaming_funnel)."""
+    """(stage, n_docs, n_chars_s) additive cells — the cells of the
+    ``FUNNEL`` store."""
     return (
         d.select("n_chars", funnel_stage_attribution(d).alias("stage"))
         .groupBy("stage")
@@ -2379,8 +2395,8 @@ def funnel_stage_counts(d: DataFrame) -> DataFrame:
 
 def funnel_from_cells(cells: DataFrame) -> DataFrame:
     """Stage cells → the q_curation_funnel output shape; totals derive
-    from the cells themselves, so the streaming store needs no second
-    state table."""
+    from the cells themselves, so the store needs no second cell
+    table."""
     tot = cells.agg(
         F.sum("n_docs").alias("n"), F.sum("n_chars_s").alias("chars")
     )
@@ -2393,6 +2409,15 @@ def funnel_from_cells(cells: DataFrame) -> DataFrame:
             "frac_chars"
         ),
     )
+
+
+#: X678 — live curation funnel: per-stage kill counts are additive, so
+#: which filter is eating the feed shows per micro-batch
+FUNNEL = StoreSpec(
+    "documents",
+    (Cells("stages", ("stage",), funnel_stage_counts),),
+    funnel_from_cells,
+)
 
 
 # ---------------------------------------------------------------------------

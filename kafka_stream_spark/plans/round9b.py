@@ -30,8 +30,8 @@ reference-free by design.
 - X692 q_gae_advantage: backward GAE fold (PPO advantages).
 - X693 q_ivm_join_view (+ run_streaming_ivm): delta-join incremental
   view maintenance.
-- X694 q_infonce_audit, X695 q_dp_accounting (+X696 streaming
-  ledger), X697 q_sinkhorn_ot, X698 q_topic_coherence,
+- X694 q_infonce_audit, X695 q_dp_accounting (+X696 its
+  ``DP_LEDGER`` store spec), X697 q_sinkhorn_ot, X698 q_topic_coherence,
   X699 q_self_bleu, X700 q_spectral_cut, X701 q_group_dro,
   X702 q_infinigram.
 
@@ -55,6 +55,7 @@ from ..functions.hashing import token_hash, token_hash_sql
 from ..session import default_parallelism
 from ..sources.dims import local_frame
 from ..sources.tables import load
+from ..streaming.pipeline import Cells, StoreSpec
 from .registry import query
 
 _MICRO = 1000000
@@ -1932,18 +1933,16 @@ def q_dp_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one count per source + a 63-row constant grid crossJoin —
     fixed work per ledger regardless of corpus size."""
-    rel = load(spark, sf_dir, "documents").groupBy("source").agg(
-        F.count("*").cast("long").alias("t")
-    )
-    return dp_accountant_df(rel)
+    return DP_LEDGER.batch(spark, sf_dir)
+
+
+def dp_releases(d: DataFrame) -> DataFrame:
+    """Documents → (source, t) release counts."""
+    return d.groupBy("source").agg(F.count("*").cast("long").alias("t"))
 
 
 def dp_accountant_df(rel: DataFrame) -> DataFrame:
-    """(source, t) release counts → the q_dp_accounting output shape —
-    shared by the batch query and the streaming ledger store
-    (streaming/pipeline.run_streaming_dp_ledger): release counts are
-    purely additive, so the live ledger is additive_combine state read
-    through this exact arithmetic."""
+    """(source, t) release counts → the q_dp_accounting output shape."""
     import math
 
     spark = rel.sparkSession
@@ -1970,6 +1969,16 @@ def dp_accountant_df(rel: DataFrame) -> DataFrame:
         )
         .orderBy("source")
     )
+
+
+#: X696 — live privacy ledger: release counts are additive, and the
+#: store's replay guard is what keeps a replayed batch from spending ε
+#: twice
+DP_LEDGER = StoreSpec(
+    "documents",
+    (Cells("releases", ("source",), dp_releases),),
+    dp_accountant_df,
+)
 
 
 # ---------------------------------------------------------------------------

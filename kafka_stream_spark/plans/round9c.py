@@ -28,6 +28,7 @@ from pyspark.sql.window import Window as W
 from ..functions.hashing import token_hash, token_hash_sql
 from ..sources.dims import local_frame
 from ..sources.tables import load
+from ..streaming.pipeline import Cells, StoreSpec
 from .registry import query
 from .round9b import _half_up_col, _half_up_sql
 
@@ -199,11 +200,9 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one explode-free map pass (the ±1 signs fold into a
     fixed-width expression) + an (nproj × 8 × 2)-cell combinable
-    aggregate. The streaming face (run_streaming_embedding_drift)
+    aggregate. The streaming face (the ``EMBEDDING_DRIFT`` store spec)
     folds the same cells additively — X707."""
-    return embedding_drift_from_counts(
-        embedding_bin_counts(load(spark, sf_dir, "embeddings"))
-    )
+    return EMBEDDING_DRIFT.batch(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -469,8 +468,7 @@ def q_bon_unbiased(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def embedding_drift_from_counts(cnt: DataFrame) -> DataFrame:
     """(proj, bin, half, c) dense cell counts → the q_embedding_drift
-    output shape — shared by the batch query's tail and the streaming
-    drift store (streaming/pipeline.run_streaming_embedding_drift)."""
+    output shape, the ``EMBEDDING_DRIFT`` store's finalize."""
     # cnt is referenced FOUR times below (both halves of the bin join +
     # both halves of the totals); un-materialized, each reference
     # re-runs the full upstream projection pass (guide §2.4). The frame
@@ -574,6 +572,16 @@ def embedding_bin_counts(emb: DataFrame) -> DataFrame:
     ).select(
         "proj", "bin", "half", F.coalesce("c0", F.lit(0)).alias("c")
     )
+
+
+#: X707 — live embedding-drift monitor: the (proj × bin × half) cells
+#: are additive, so an encoder-version drift shows up as a PSI step
+#: without rescanning the vector log
+EMBEDDING_DRIFT = StoreSpec(
+    "embeddings",
+    (Cells("cells", ("proj", "bin", "half"), embedding_bin_counts),),
+    embedding_drift_from_counts,
+)
 
 
 # ---------------------------------------------------------------------------

@@ -38,19 +38,23 @@ from ..sources.tables import load
 from .registry import query
 
 
-def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, w1, w2) — adjacent token pairs per document."""
-    d = load(spark, sf_dir, "documents")
-    toks = d.select("doc_id", text.tokens(F.col("text")).alias("t")).filter(
+def bigram_rows(d: DataFrame, *carry: str) -> DataFrame:
+    """(carry…, w1, w2) — adjacent token pairs of each document row."""
+    toks = d.select(*carry, text.tokens(F.col("text")).alias("t")).filter(
         F.size("t") >= 2
     )
     return toks.select(
-        "doc_id",
+        *carry,
         F.posexplode(F.slice("t", 1, F.size("t") - 1)).alias("pos", "w1"),
         F.col("t"),
     ).select(
-        "doc_id", "w1", F.element_at("t", F.col("pos") + 2).alias("w2")
+        *carry, "w1", F.element_at("t", F.col("pos") + 2).alias("w2")
     )
+
+
+def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, w1, w2) — adjacent token pairs per document."""
+    return bigram_rows(load(spark, sf_dir, "documents"), "doc_id")
 
 
 _BIGRAMS_SQL = f"""

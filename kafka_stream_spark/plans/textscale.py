@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..functions import text
 from ..functions.hashing import MERSENNE_P, token_hash_sql
 from ..sources.tables import load
+from ..streaming.pipeline import Cells, StoreSpec
 from .registry import query
 
 #: Jaccard threshold for the prefix-filtered join (set similarity, on
@@ -398,18 +399,36 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     window only sees the (lang, token) aggregate — the scan's token
     explosion never shuffles raw. At 100 TB swap the exact count for a
     count-min sketch only if the vocabulary itself outgrows memory."""
-    d = load(spark, sf_dir, "documents")
-    counted = (
+    return HEAVY_HITTERS.batch(spark, sf_dir)
+
+
+def token_counts(d: DataFrame) -> DataFrame:
+    """Documents → (lang, token, cnt)."""
+    return (
         d.select("lang", F.explode(text.tokens(F.col("text"))).alias("token"))
         .groupBy("lang", "token")
         .agg(F.count("*").alias("cnt"))
     )
+
+
+def top3_tokens(counted: DataFrame) -> DataFrame:
+    """(lang, token, cnt) → the q_heavy_hitters top-3 per language."""
     w = Window.partitionBy("lang").orderBy(F.col("cnt").desc(), F.col("token"))
     return (
         counted.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 3)
         .select("lang", "token", "cnt", "rk")
     )
+
+
+#: X492 — streaming heavy hitters: the store keeps the (lang, token)
+#: counts, the sufficient statistic; the rank is recomputed on read,
+#: because a persisted rank would be wrong after the next batch
+HEAVY_HITTERS = StoreSpec(
+    "documents",
+    (Cells("counts", ("lang", "token"), token_counts),),
+    top3_tokens,
+)
 
 
 _GOPHER_WC_MIN = 20

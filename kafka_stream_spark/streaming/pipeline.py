@@ -30,12 +30,17 @@ replayable source, a checkpoint and idempotent stores, spelled once:
 - ``merged_store_apply`` (mergeable partials) and
   ``versioned_fold_batch_fn`` (order-dependent state folds) commit
   read-modify-write stores as ``v=<batch_id>`` versions, skipping a
-  replay of a committed batch.
+  replay of a committed batch;
+- ``run_store`` drains every additive or semilattice store from its
+  ``StoreSpec``, the declaration its batch ``q_*`` key also runs
+  (``finalize(partial(load(table)))``), so stream == batch holds by
+  construction.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +62,17 @@ _DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
 _VECS_SCHEMA = "vec_id long, embedding array<float>, label int"
+_READ_SCHEMAS = {
+    "events": _EVENTS_SCHEMA,
+    "documents": _DOCS_SCHEMA,
+    "embeddings": _VECS_SCHEMA,
+    "lineitem": (
+        "l_orderkey long, l_partkey long, l_suppkey long, "
+        "l_linenumber int, l_quantity double, l_extendedprice double, "
+        "l_discount double, l_tax double, l_returnflag string, "
+        "l_linestatus string, l_shipdate timestamp"
+    ),
+}
 
 
 def _drain(
@@ -173,9 +189,9 @@ def merged_store_write(
     versions are re-pruned by the next write and never read (readers
     take the max committed id).
 
-    ``keep`` must be >= 2: the streaming sequence packer's replay path
-    reads ``merged_store_read(before=batch_id)`` — the PRE-batch
-    version — so pruning down to a single version (or disabling the
+    ``keep`` must be >= 2: an as-of replay read
+    (``merged_store_read(before=batch_id)``) needs the PRE-batch
+    version, so pruning down to a single version (or disabling the
     floor with keep<=0) could delete the exact snapshot a replayed
     batch regenerates its append output from."""
     import shutil
@@ -202,10 +218,10 @@ def merged_store_apply(
     batch_id: int,
     combine,
 ) -> bool:
-    """The one read-modify-write store skeleton every merged streaming
-    store parameterizes (heavy hitters, DFG edges, KMV sketch, LM
-    counts): skip if this batch already committed (foreachBatch replay),
-    else fold the batch's partial into the latest committed version via
+    """The one read-modify-write store skeleton (``run_store``'s cell
+    tables, the IVM view, the cdcgen witness): skip if this batch
+    already committed (foreachBatch replay), else fold the batch's
+    partial into the latest committed version via
     ``combine(existing, part) -> DataFrame`` and commit a new version.
     Returns True when the merge ran, False when the replay was skipped.
 
@@ -227,12 +243,13 @@ def merged_store_apply(
 
 def versioned_fold_batch_fn(store_dir: str, state_fold):
     """foreachBatch body of an ORDER-DEPENDENT versioned store (Elo,
-    SPRT, BOCPD, Space-Saving, theta): fold the batch into the latest
-    committed state with ``state_fold(existing | None, batch) ->
-    DataFrame`` and commit the result as a new version. A replay of a
-    committed batch is a no-op (``merged_store_last_applied`` guard);
-    an uncommitted one re-folds from the prior version. Exported so
-    tests can replay a batch_id and simulate both crash windows."""
+    SPRT, BOCPD, Space-Saving, theta, dedup clusters): fold the batch
+    into the latest committed state with ``state_fold(existing | None,
+    batch, batch_id) -> DataFrame`` and commit the result as a new
+    version. A replay of a committed batch is a no-op
+    (``merged_store_last_applied`` guard); an uncommitted one re-folds
+    from the prior version. Exported so tests can replay a batch_id
+    and simulate both crash windows."""
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         if (
@@ -242,7 +259,9 @@ def versioned_fold_batch_fn(store_dir: str, state_fold):
         existing = merged_store_read(batch.sparkSession, store_dir)
         # materialize BEFORE overwriting: the fold reads the version
         # it is about to supersede
-        new_state = state_fold(existing, batch).localCheckpoint(eager=True)
+        new_state = state_fold(existing, batch, batch_id).localCheckpoint(
+            eager=True
+        )
         merged_store_write(new_state, store_dir, batch_id)
 
     return fold
@@ -262,6 +281,109 @@ def additive_combine(keys: list[str], sums: list[str]):
         )
 
     return combine
+
+
+@dataclass(frozen=True)
+class Cells:
+    """One cell table of a store: ``partial(rows) -> cells``, one row
+    per ``keys`` value, and the merge that folds a batch's cells into
+    the stored ones. ``merge=None`` sums every non-key column
+    (``additive_combine``); otherwise ``merge(existing, part)`` is a
+    semilattice merge (KMV keep-k, best-of-n top-2), exact under any
+    split of the input into batches."""
+
+    name: str
+    keys: tuple[str, ...]
+    partial: Callable[[DataFrame], DataFrame] | None = None
+    merge: Callable[[DataFrame, DataFrame], DataFrame] | None = None
+
+    def combine(self, existing: DataFrame, part: DataFrame) -> DataFrame:
+        if self.merge is not None:
+            return self.merge(existing, part)
+        sums = [c for c in part.columns if c not in self.keys]
+        return additive_combine(list(self.keys), sums)(existing, part)
+
+
+@dataclass(frozen=True)
+class StoreSpec:
+    """An incremental store declared once, as the batch query it
+    maintains. The batch key is ``batch()``, i.e.
+    ``finalize(partial(load(table)))`` per cell table; ``run_store``
+    keeps the same cells current as ``table`` rows stream in, and
+    ``read()`` finalizes them. Because each merge is exact, the
+    finalized store equals the batch key over the rows so far after
+    every micro-batch. ``finalize`` takes the cell tables in ``cells``
+    order, preceded by the source rows when ``reads_source`` (outputs
+    that also need the rows themselves: an exact side, an audit, a
+    join back)."""
+
+    table: str
+    cells: tuple[Cells, ...]
+    finalize: Callable[..., DataFrame]
+    reads_source: bool = False
+
+    @property
+    def schema(self) -> str:
+        return _READ_SCHEMAS[self.table]
+
+    def output(
+        self, cells: Sequence[DataFrame], source: DataFrame | None
+    ) -> DataFrame:
+        if self.reads_source:
+            return self.finalize(source, *cells)
+        return self.finalize(*cells)
+
+    def batch(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        from ..sources.tables import load
+
+        source = load(spark, sf_dir, self.table)
+        return self.output([c.partial(source) for c in self.cells], source)
+
+    def read(
+        self,
+        spark: SparkSession,
+        store_dir: str,
+        source: DataFrame | None = None,
+    ) -> DataFrame:
+        """The finalized store; ``source`` = the rows drained so far,
+        needed only when ``reads_source``."""
+        cells = [
+            merged_store_read(spark, os.path.join(store_dir, c.name))
+            for c in self.cells
+        ]
+        return self.output(cells, source)
+
+
+def run_store(
+    spark: SparkSession,
+    spec: StoreSpec,
+    input_dir: str,
+    store_dir: str,
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Drain ``spec.table`` rows from ``input_dir`` into the store under
+    ``store_dir``: per micro-batch, each cell table's partial merges
+    into ``store_dir/<cells.name>`` through ``merged_store_apply``.
+
+    The partial is computed inside foreachBatch from the batch's raw
+    rows, never as an upstream update-mode streaming aggregation
+    (that emits the state store's CUMULATIVE totals, which a merge
+    would double-count), so the versioned store is the only state.
+    Each cell table guards its own replay: a crash between two cell
+    tables' commits completes the missing one when Spark replays the
+    batch, and a replay of a committed batch changes nothing."""
+    rows = spark.readStream.schema(spec.schema).parquet(input_dir)
+
+    def fold(batch: DataFrame, batch_id: int) -> None:
+        for cells in spec.cells:
+            merged_store_apply(
+                cells.partial(batch),
+                os.path.join(store_dir, cells.name),
+                batch_id,
+                cells.combine,
+            )
+
+    return _drain(rows, fold, checkpoint_dir)
 
 
 def prune_batch_partitions(
@@ -903,125 +1025,6 @@ def run_streaming_corpus_build(
     return _drain(docs, build_batch, checkpoint_dir)
 
 
-def run_streaming_mixture_counts(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Incrementally-maintained mixture-weight inputs: the per-(source,
-    lang) document/char counts q_mixture_weights (X229) derives its
-    n^alpha temperature weights from, kept current as documents stream
-    in — so the training-mix sampler always reads fresh strata sizes
-    without a corpus rescan.
-
-    Counts are MERGEABLE (plain sums), so this is the X182 sketch-store
-    discipline applied to the mixture rollup: a streaming groupBy in
-    update mode emits only the strata each micro-batch touched, and the
-    foreachBatch writer dynamic-overwrites exactly those partitions.
-    pytest pins store-derived weights == the batch q_mixture_weights on
-    documents-so-far after every wave (mixture_weights_from_counts is
-    the shared read-side arithmetic)."""
-    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
-    agg = docs.groupBy("source", "lang").agg(
-        F.count("*").alias("n"), F.sum("n_chars").alias("chars")
-    )
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        overwrite_partitions(batch, out_dir, "source", "lang")
-
-    return _drain(agg, upsert, checkpoint_dir, "update")
-
-
-def mixture_weights_from_counts(counts: DataFrame) -> DataFrame:
-    """(source, lang, n, chars) → the q_mixture_weights output shape
-    (alpha = 0.5 temperature weights + expected sample counts): the
-    read side of the streaming store, shared with the batch query's
-    arithmetic so incremental == batch is by construction."""
-    src = counts.withColumn("raw_w", F.pow(F.col("n"), 0.5))
-    tot = src.agg(F.sum("raw_w").alias("tw"), F.sum("n").alias("tn"))
-    return src.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "lang",
-        F.col("n").cast("long").alias("n"),
-        F.col("chars").cast("long").alias("chars"),
-        F.round(F.col("raw_w") / F.col("tw"), 6).alias("weight"),
-        F.floor(F.col("raw_w") / F.col("tw") * F.col("tn"))
-        .cast("long")
-        .alias("expected_samples"),
-    )
-
-
-def run_streaming_process_map(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Incrementally-maintained directly-follows-graph edge store: per
-    micro-batch the session-complete events are reduced to mergeable
-    edge partials (n, dur_sum, dur_n — plans/round4t.dfg_partials) and
-    summed into the store, the X401 incremental-aggregate identity
-    applied to X409's process map. Requires micro-batches keyed so a
-    (user, day) session never straddles batches — the same routing
-    discipline as the X225 band store; the pytest waves split by user.
-    The store is k² edge rows, so each upsert rewrites a tiny table.
-    pytest pins dfg_from_partials(store) == batch q_process_map on
-    events-so-far after every wave."""
-    from ..plans.round4t import dfg_edges, dfg_partials
-
-    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        part = dfg_partials(dfg_edges(batch))
-        merged_store_apply(
-            part,
-            out_dir,
-            batch_id,
-            additive_combine(["src", "dst"], ["n", "dur_sum", "dur_n"]),
-        )
-
-    return _drain(events, upsert, checkpoint_dir)
-
-
-def run_streaming_kmv(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Incrementally-maintained KMV distinct sketch store (X411's
-    k-minimum-values per return flag): each micro-batch's k smallest
-    normalized hashes merge into the store by keep(store ∪ batch) —
-    exact, because the keep-k-smallest operator is closed under union
-    (plans/round4t.kmv_keep), the defining property of a mergeable
-    sketch. Unlike the X182 histogram store this one is LOSSLESS with
-    respect to its estimate: pytest pins store-derived estimates
-    EQUAL (not approximately) to the batch sketch on rows-so-far
-    after every wave. Store size is k rows per group."""
-    from ..plans.round4t import kmv_hashes, kmv_keep
-
-    li = spark.readStream.schema(
-        "l_orderkey long, l_partkey long, l_suppkey long, "
-        "l_linenumber int, l_quantity double, l_extendedprice double, "
-        "l_discount double, l_tax double, l_returnflag string, "
-        "l_linestatus string, l_shipdate timestamp"
-    ).parquet(input_dir)
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        part = kmv_keep(kmv_hashes(batch))
-        merged_store_apply(
-            part,
-            out_dir,
-            batch_id,
-            lambda existing, p: kmv_keep(
-                existing.unionByName(p).distinct()
-            ),
-        )
-
-    return _drain(li, upsert, checkpoint_dir)
-
-
 def run_streaming_semantic_dedup(
     spark: SparkSession,
     input_dir: str,
@@ -1139,62 +1142,6 @@ def semantic_dedup_batch_fn(
         idempotent_upsert(members, batch_id, store_dir)
 
     return dedup_batch
-
-
-def run_streaming_heavy_hitters(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Incrementally-maintained heavy-hitters store (X81's per-language
-    top tokens as a stream): each micro-batch's (lang, token) counts
-    MERGE into the accumulating count store by addition — exact,
-    because counts are the canonical mergeable aggregate; the top-k
-    rank is a VIEW over the store, recomputed on read (ranking is not
-    mergeable, so persisting ranks would be wrong after the next
-    batch — the store keeps sufficient statistics, never derived
-    ones).  pytest pins store-derived top-3 == batch q_heavy_hitters
-    on rows-so-far after every wave.
-
-    Scale: the store is vocabulary-sized (token counts), partitioned
-    by lang; each merge is one co-partitioned groupBy-sum. When the
-    vocabulary itself outgrows memory the X101 count-min sketch is the
-    documented fallback — same merge-by-addition contract.
-
-    Replay safety: versioned merged store (``merged_store_apply``) —
-    each merge commits a new ``v=<batch_id>`` directory whose
-    ``_SUCCESS`` file is the atomic commit point, and the merge skips
-    any batch_id at or below the last committed version — an additive
-    store must never apply a replayed batch twice (pytest replays a
-    batch and pins the counts unchanged)."""
-    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
-
-    return _drain(docs, heavy_hitters_batch_fn(store_dir), checkpoint_dir)
-
-
-def heavy_hitters_batch_fn(store_dir: str):
-    """foreachBatch body of ``run_streaming_heavy_hitters``, exposed so
-    pytest can replay a batch_id and pin that the additive store does
-    not double-count."""
-    from ..functions import text
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        part = (
-            batch.select(
-                "lang", F.explode(text.tokens(F.col("text"))).alias("token")
-            )
-            .groupBy("lang", "token")
-            .agg(F.count("*").alias("cnt"))
-        )
-        merged_store_apply(
-            part,
-            store_dir,
-            batch_id,
-            additive_combine(["lang", "token"], ["cnt"]),
-        )
-
-    return merge
 
 
 def run_streaming_late_router(
@@ -1585,86 +1532,6 @@ def semantic_dedup_routed_batch_fn(
     return dedup_batch
 
 
-def run_streaming_lm_counts(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Incrementally-maintained Stupid-Backoff LM count store (the
-    streaming twin of q_stupid_backoff, X582): bigram counts, left/
-    right unigram counts and the bigram total are all PLAIN SUMS —
-    the property that makes Stupid Backoff the web-scale LM — so the
-    store merges by addition exactly like the X81 heavy-hitters store,
-    and scoring is a read-side view (lm_score_with_counts) over
-    sufficient statistics that never need the text again.
-
-    Layout: ``store_dir/bigrams`` (w1, w2, c12), ``store_dir/unigrams``
-    (w, c1, c2) — one row per word carrying BOTH the left-context and
-    right-occurrence counts. Each sub-store is an independently
-    versioned merged store with its own replay guard, so a crash
-    between the two commits completes (not skips) the second merge on
-    replay. pytest pins store counts equal
-    to batch counts and store-driven scoring equal to the batch
-    q_stupid_backoff on documents-so-far after every wave."""
-    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
-
-    return _drain(docs, lm_counts_batch_fn(store_dir), checkpoint_dir)
-
-
-def lm_counts_batch_fn(store_dir: str):
-    """foreachBatch body of ``run_streaming_lm_counts``."""
-    from ..functions import text
-
-    bigram_dir = os.path.join(store_dir, "bigrams")
-    unigram_dir = os.path.join(store_dir, "unigrams")
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        # each sub-store guards its own replay independently (inside
-        # merged_store_apply): a crash between the bigram commit and the
-        # unigram commit COMPLETES the unigram merge on replay instead
-        # of skipping the whole batch on the bigram marker alone
-        done_b = (merged_store_last_applied(bigram_dir) or -1) >= batch_id
-        done_u = (merged_store_last_applied(unigram_dir) or -1) >= batch_id
-        if done_b and done_u:
-            return
-        toks = batch.select(
-            "doc_id", text.tokens(F.col("text")).alias("t")
-        ).filter(F.size("t") >= 2)
-        bg = toks.select(
-            F.posexplode(F.slice("t", 1, F.size("t") - 1)).alias(
-                "pos", "w1"
-            ),
-            F.col("t"),
-        ).select("w1", F.element_at("t", F.col("pos") + 2).alias("w2"))
-        bg = bg.localCheckpoint(eager=True)
-        bpart = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-        upart = (
-            bg.select(F.col("w1").alias("w"), F.lit(1).alias("l"),
-                      F.lit(0).alias("r"))
-            .unionByName(
-                bg.select(F.col("w2").alias("w"), F.lit(0).alias("l"),
-                          F.lit(1).alias("r"))
-            )
-            .groupBy("w")
-            .agg(F.sum("l").alias("c1"), F.sum("r").alias("c2"))
-        )
-        merged_store_apply(
-            bpart,
-            bigram_dir,
-            batch_id,
-            additive_combine(["w1", "w2"], ["c12"]),
-        )
-        merged_store_apply(
-            upart,
-            unigram_dir,
-            batch_id,
-            additive_combine(["w"], ["c1", "c2"]),
-        )
-
-    return merge
-
-
 def run_streaming_sequence_pack(
     spark: SparkSession,
     input_dir: str,
@@ -1683,13 +1550,12 @@ def run_streaming_sequence_pack(
     strict-capacity invariant (fill ≤ budget) holds globally.
 
     Replay safety is the full composed recipe: assignments are
-    batch_id-partitioned appends (``idempotent_upsert``); state is a
-    versioned merged store whose REPLAY READ is as-of (*before* the
-    replaying batch's id — ``merged_store_read(before=...)``), because
-    the state both folds AND feeds the append output, so a replay must
-    regenerate assignments from the PRE-batch state even when its own
-    crashed attempt already committed the post-batch version. The
-    default keep=2 version retention exists exactly for this read."""
+    batch_id-partitioned appends (``idempotent_upsert``) written BEFORE
+    the state commits, and the state is an order-dependent versioned
+    fold (``versioned_fold_batch_fn``). A replay of a committed batch
+    is a no-op (its assignments were complete before the commit); an
+    uncommitted one re-packs from the pre-batch state and overwrites
+    its own assignment partition."""
     docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
     return _drain(
         docs,
@@ -1707,8 +1573,7 @@ def sequence_pack_batch_fn(
 
     from ..functions import text
 
-    def pack(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
+    def pack(prior: DataFrame | None, batch: DataFrame, batch_id: int):
         items = batch.select(
             "doc_id",
             F.least(F.size(text.tokens(F.col("text"))), F.lit(budget))
@@ -1716,10 +1581,9 @@ def sequence_pack_batch_fn(
             .alias("len"),
             (F.col("doc_id") % n_buckets).cast("int").alias("bucket"),
         )
-        prior = merged_store_read(sess, state_dir, before=batch_id)
         if prior is None:
             prior = local_frame(
-                sess,
+                batch.sparkSession,
                 [], "bucket int, open_seq int, open_fill int, open_slot int"
             )
         joined = items.join(F.broadcast(prior), "bucket", "left")
@@ -1779,77 +1643,11 @@ def sequence_pack_batch_fn(
                 F.col("s.slot").alias("open_slot"),
             )
         )
+        return prior.join(
+            new_state.select("bucket"), "bucket", "left_anti"
+        ).unionByName(new_state)
 
-        def replace_by_bucket(existing: DataFrame, part: DataFrame):
-            return existing.join(
-                part.select("bucket"), "bucket", "left_anti"
-            ).unionByName(part)
-
-        merged_store_apply(new_state, state_dir, batch_id, replace_by_bucket)
-
-    return pack
-
-
-def lm_score_with_counts(
-    docs: DataFrame, bigrams: DataFrame, unigrams: DataFrame
-) -> DataFrame:
-    """Read side of the X585-stream: per-source Stupid-Backoff scores
-    from the count stores — the same arithmetic as q_stupid_backoff,
-    shared so incremental == batch is by construction."""
-    from ..functions import text
-
-    toks = docs.select(
-        "doc_id", "source", text.tokens(F.col("text")).alias("t")
-    ).filter(F.size("t") >= 2)
-    bg = toks.select(
-        "doc_id",
-        "source",
-        F.posexplode(F.slice("t", 1, F.size("t") - 1)).alias("pos", "w1"),
-        F.col("t"),
-    ).select(
-        "doc_id", "source", "w1",
-        F.element_at("t", F.col("pos") + 2).alias("w2"),
-    )
-    # empty store → sum is NULL; score nothing rather than raise
-    total = bigrams.agg(F.sum("c12")).collect()[0][0] or 0
-    if total == 0:
-        return local_frame(
-            docs.sparkSession,
-            [], "source string, n_docs long, mean_score double, min_score double"
-        )
-    uni = unigrams.select("w", "c1", "c2")
-    scored = (
-        bg.join(bigrams.select("w1", "w2", "c12"), ["w1", "w2"], "left")
-        .join(uni.select(F.col("w").alias("w1"), "c1"), "w1", "left")
-        .join(uni.select(F.col("w").alias("w2"), "c2"), "w2", "left")
-        .select(
-            "doc_id",
-            "source",
-            F.round(
-                F.log10(
-                    F.when(
-                        F.col("c12").isNotNull(),
-                        F.col("c12") * 1.0 / F.col("c1"),
-                    ).otherwise(
-                        0.4
-                        * F.coalesce(F.col("c2"), F.lit(0))
-                        * 1.0
-                        / F.lit(float(total))
-                    )
-                    + 1e-12
-                ),
-                6,
-            ).alias("lg"),
-        )
-    )
-    per_doc = scored.groupBy("doc_id", "source").agg(
-        F.round(F.avg("lg"), 6).alias("doc_score")
-    )
-    return per_doc.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.round(F.avg("doc_score"), 6).alias("mean_score"),
-        F.round(F.min("doc_score"), 6).alias("min_score"),
-    )
+    return versioned_fold_batch_fn(state_dir, pack)
 
 
 # ---------------------------------------------------------------------------
@@ -1887,8 +1685,10 @@ def cdcgen_batch_fn(out_dir: str, state_dir: str, fail_flag: str | None = None):
     from its offset log (the SimpleDataSourceStreamReader's
     readBetweenOffsets path): the sink overwrite replaces the partial
     attempt's partition, the store — never committed — folds exactly
-    once."""
-    import os
+    once.
+
+    Not a ``StoreSpec``: the witness must write its sink BEFORE its
+    store, inside the same batch, to open that crash window."""
 
     def fn(batch: DataFrame, batch_id: int) -> None:
         enriched = cdcgen_enrich(batch).dropDuplicates(["seq"])
@@ -1909,10 +1709,7 @@ def cdcgen_batch_fn(out_dir: str, state_dir: str, fail_flag: str | None = None):
                 F.sum("n_words").cast("long").alias("words"),
             )
             merged_store_apply(
-                part,
-                state_dir,
-                batch_id,
-                additive_combine(["st_code"], ["n", "words"]),
+                part, state_dir, batch_id, Cells("state", ("st_code",)).combine
             )
         finally:
             enriched.unpersist()
@@ -1957,320 +1754,6 @@ def run_cdcgen_pipeline(
     )
 
 
-def run_streaming_grpo_moments(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Incrementally-maintained GRPO normalization state (X626's
-    streaming face): the per-prompt-group reward moments (s1, s2, n)
-    the group-relative advantage divides by, folded into the versioned
-    merged store as reward events stream in. Moments are purely
-    additive, so this is the X182 sketch-store discipline again —
-    per-batch partials merged by ``additive_combine``, exactly-once
-    via the store's version commit protocol.
-
-    This is how an RLHF data service actually runs: rollouts arrive
-    continuously, and the advantage job must not rescan the full
-    reward history per batch. pytest pins store-derived advantages ==
-    the batch q_grpo_advantage on events-so-far after every wave."""
-    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
-
-    # the per-batch PARTIAL is aggregated inside foreachBatch from the
-    # raw rows — NOT as a streaming groupBy upstream: update-mode
-    # streaming aggregation emits the state store's CUMULATIVE per-key
-    # totals, which an additive store would double-count. Folding raw
-    # batches keeps the versioned store the ONLY state (the X574
-    # replay story), and the moments are exact integer cents (the
-    # batch query's contract): integer sums are associative, so the
-    # fold order cannot drift from the batch aggregation by one ULP.
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        cents = F.round(F.col("value") * 100).cast("long")
-        part = batch.groupBy("user_id").agg(
-            F.sum(cents).alias("s1c"),
-            F.sum(cents * cents).alias("s2c"),
-            F.count("*").alias("n"),
-        )
-        merged_store_apply(
-            part,
-            store_dir,
-            batch_id,
-            additive_combine(["user_id"], ["s1c", "s2c", "n"]),
-        )
-
-    return _drain(events, fold, checkpoint_dir)
-
-
-def grpo_from_moments(events: DataFrame, moments: DataFrame) -> DataFrame:
-    """(events-so-far, store moments) → the q_grpo_advantage output
-    shape: the read side of the streaming moments store, sharing the
-    batch query's arithmetic exactly (n >= 4 gate, variance floor,
-    rounded advantage, top-2 per group on the rounded value) so
-    incremental == batch is by construction."""
-    from pyspark.sql.window import Window as W
-
-    g = moments.filter(F.col("n") >= 4)
-    mean = F.col("s1c") / (100.0 * F.col("n"))
-    var = F.greatest(
-        F.col("s2c") / (10000.0 * F.col("n")) - mean * mean, F.lit(1e-12)
-    )
-    a = events.join(g, "user_id").select(
-        "user_id",
-        "event_id",
-        F.col("value").alias("reward"),
-        F.round((F.col("value") - mean) / F.sqrt(var), 6).alias("adv"),
-    )
-    w = W.partitionBy("user_id").orderBy(F.desc("adv"), "event_id")
-    return (
-        a.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 2)
-        .orderBy("user_id", "rnk")
-    )
-
-
-def _top2_combine(existing: DataFrame, part: DataFrame) -> DataFrame:
-    """RANK-merge for the best-of-n store: each side holds per-user
-    top-2 (v1, e1, v2, e2) plus the sample count; the merge explodes
-    both sides' candidates, re-ranks to top-2 of the union, and adds
-    the counts. Unlike the additive stores this is a semilattice merge
-    on ORDER (max is associative and idempotent per candidate), so no
-    arithmetic can drift with fold order — doubles are compared, never
-    summed."""
-    from pyspark.sql.window import Window as W
-
-    def cands(df: DataFrame) -> DataFrame:
-        one = df.select(
-            "user_id", F.col("v1").alias("v"), F.col("e1").alias("e")
-        )
-        two = df.filter(F.col("v2").isNotNull()).select(
-            "user_id", F.col("v2").alias("v"), F.col("e2").alias("e")
-        )
-        return one.unionByName(two)
-
-    ns = (
-        existing.select("user_id", "n")
-        .unionByName(part.select("user_id", "n"))
-        .groupBy("user_id")
-        .agg(F.sum("n").alias("n"))
-    )
-    w = W.partitionBy("user_id").orderBy(F.desc("v"), "e")
-    ranked = (
-        cands(existing)
-        .unionByName(cands(part))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-    )
-    wide = ranked.groupBy("user_id").agg(
-        F.max(F.when(F.col("rn") == 1, F.col("v"))).alias("v1"),
-        F.max(F.when(F.col("rn") == 1, F.col("e"))).alias("e1"),
-        F.max(F.when(F.col("rn") == 2, F.col("v"))).alias("v2"),
-        F.max(F.when(F.col("rn") == 2, F.col("e"))).alias("e2"),
-    )
-    return wide.join(ns, "user_id")
-
-
-def run_streaming_best_of_n(
-    spark: SparkSession,
-    input_dir: str,
-    top2_dir: str,
-    bar_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Streaming best-of-n curation state (X627's streaming face): two
-    independently-committed sub-stores per batch — a RANK-merge store
-    holding each prompt group's top-2 (reward, sample) plus count, and
-    an additive scalar store for the corpus reward bar in exact integer
-    cents. A crash between the two commits is healed by replay (each
-    sub-store guards its own batch id — the multi-store property
-    merged_store_apply documents). Read through
-    ``best_of_n_from_store`` the pair equals the batch q_best_of_n on
-    events-so-far bit-for-bit: the top-2 merge compares doubles (never
-    sums), and the bar divides associative integer sums."""
-    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql.window import Window as W
-
-        w = W.partitionBy("user_id").orderBy(
-            F.desc("value"), "event_id"
-        )
-        top2 = (
-            batch.withColumn("rn", F.row_number().over(w))
-            .withColumn("n_b", F.count("*").over(W.partitionBy("user_id")))
-            .filter(F.col("rn") <= 2)
-            .groupBy("user_id")
-            .agg(
-                F.max(F.when(F.col("rn") == 1, F.col("value"))).alias("v1"),
-                F.max(F.when(F.col("rn") == 1, F.col("event_id"))).alias(
-                    "e1"
-                ),
-                F.max(F.when(F.col("rn") == 2, F.col("value"))).alias("v2"),
-                F.max(F.when(F.col("rn") == 2, F.col("event_id"))).alias(
-                    "e2"
-                ),
-                F.any_value("n_b").alias("n"),
-            )
-        )
-        merged_store_apply(top2, top2_dir, batch_id, _top2_combine)
-        bar = batch.groupBy(F.lit(0).alias("k")).agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("s1c"),
-            F.count("*").alias("n"),
-        )
-        merged_store_apply(
-            bar, bar_dir, batch_id, additive_combine(["k"], ["s1c", "n"])
-        )
-
-    return _drain(events, fold, checkpoint_dir)
-
-
-def best_of_n_from_store(top2: DataFrame, bar: DataFrame) -> DataFrame:
-    """(top-2 store, bar store) → the q_best_of_n output shape,
-    sharing the batch query's arithmetic (integer-cents bar, n >= 3
-    gate, rounded margin over the runner-up)."""
-    m = bar.select(
-        (F.col("s1c") / (100.0 * F.col("n"))).alias("m")
-    )
-    return (
-        top2.crossJoin(F.broadcast(m))
-        .filter((F.col("n") >= 3) & (F.col("v1") >= F.col("m")))
-        .select(
-            "user_id",
-            F.col("e1").alias("event_id"),
-            F.round("v1", 6).alias("best_reward"),
-            F.col("n").cast("long").alias("n_samples"),
-            F.round(F.col("v1") - F.col("v2"), 6).alias("margin"),
-        )
-        .orderBy("user_id")
-    )
-
-
-def run_streaming_pass_counts(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """X659 — incrementally-maintained pass@k state (X650's streaming
-    face): per-prompt (n, c) trial/pass counts folded into the
-    versioned merged store as completions stream in. The state is two
-    additive INTEGERS per prompt — the cleanest instance of the X182
-    sketch-store discipline (no cents, no semilattice: bare counts) —
-    so incremental == batch is exact by associativity. This is how a
-    live eval service runs: completions arrive continuously and the
-    pass@k dashboard must not rescan history per batch.
-
-    Per-batch partials aggregate inside foreachBatch from raw rows
-    (never an upstream update-mode streaming groupBy — that emits
-    CUMULATIVE state and an additive store would double-count)."""
-    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        from ..plans.round9 import _PASS_THRESH
-
-        part = batch.groupBy("user_id").agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("value") >= _PASS_THRESH).cast("long")).alias("c"),
-        )
-        merged_store_apply(
-            part, store_dir, batch_id, additive_combine(["user_id"], ["n", "c"])
-        )
-
-    return _drain(events, fold, checkpoint_dir)
-
-
-def pass_at_k_from_store(counts: DataFrame) -> DataFrame:
-    """Store (user_id, n, c) → the q_pass_at_k output shape, through
-    the batch query's own arithmetic (plans/round9.pass_at_k_from_counts)
-    — incremental == batch by construction."""
-    from ..plans.round9 import pass_at_k_from_counts
-
-    return pass_at_k_from_counts(counts)
-
-
-def run_streaming_data_map(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """X666 — live dataset-cartography state (X654's streaming face):
-    the per-(sample, epoch) pass/total counts the data map's moments
-    derive from, folded into the versioned merged store as events
-    stream in — additive integers keyed by (user_id, d), so the live
-    map equals the batch map exactly after every commit. This is the
-    training-dynamics monitor a curation service keeps warm: the
-    easy/ambiguous/hard quadrants update per micro-batch without
-    rescanning history."""
-    events = spark.readStream.schema(_EVENTS_SCHEMA).parquet(input_dir)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        from ..plans.round9 import _DM_THRESH
-
-        part = batch.groupBy(
-            "user_id", F.to_date("ts").alias("d")
-        ).agg(
-            F.sum((F.col("value") >= _DM_THRESH).cast("long")).alias(
-                "n_pass"
-            ),
-            F.count("*").alias("n"),
-        )
-        merged_store_apply(
-            part,
-            store_dir,
-            batch_id,
-            additive_combine(["user_id", "d"], ["n_pass", "n"]),
-        )
-
-    return _drain(events, fold, checkpoint_dir)
-
-
-def data_map_from_store(cells: DataFrame) -> DataFrame:
-    """Store (user_id, d, n_pass, n) → the q_data_map output shape via
-    the batch query's own arithmetic."""
-    from ..plans.round9 import data_map_from_cells
-
-    return data_map_from_cells(cells)
-
-
-def run_streaming_funnel(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """X678 — live curation-funnel state (X669's streaming face): the
-    per-stage (n_docs, n_chars) kill counts folded into the versioned
-    merged store as documents stream in — stage attribution is a
-    stateless per-doc CASE ladder and the counts are additive, so the
-    live funnel equals the batch funnel exactly after every commit.
-    This is the data-quality dashboard a crawl ingester keeps warm:
-    which filter is eating the feed, per micro-batch, without
-    rescanning history."""
-    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        from ..plans.round9 import funnel_stage_counts
-
-        part = funnel_stage_counts(batch)
-        merged_store_apply(
-            part,
-            store_dir,
-            batch_id,
-            additive_combine(["stage"], ["n_docs", "n_chars_s"]),
-        )
-
-    return _drain(docs, fold, checkpoint_dir)
-
-
-def funnel_from_store(cells: DataFrame) -> DataFrame:
-    """Store (stage, n_docs, n_chars_s) → the q_curation_funnel output
-    shape via the batch query's own arithmetic."""
-    from ..plans.round9 import funnel_from_cells
-
-    return funnel_from_cells(cells)
-
-
 def run_streaming_elo(
     spark: SparkSession,
     input_dir: str,
@@ -2310,7 +1793,9 @@ _ELO_STATE_SCHEMA = (
 )
 
 
-def elo_state_fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
+def elo_state_fold(
+    existing: DataFrame | None, batch: DataFrame, batch_id: int
+) -> DataFrame:
     """(state-so-far, new events) → new state: per arena, replay
     [stored carry] + batch events in (ts, event_id) order through the
     exact integer fold. Rows with player >= 0 are the rating vector;
@@ -2437,6 +1922,9 @@ def run_streaming_ivm(
     not yet committed neither state sub-store has) — a crash between
     commits completes the missing sub-stores with the same deltas.
 
+    Not a ``StoreSpec``: ΔV reads the PRE-batch A and B states, so the
+    view's per-batch partial is not a function of the batch alone.
+
     Input schema: side ('a'|'b'), k (join key), attr (the grouped
     dimension: orders priority for side a, lineitem returnflag for
     side b)."""
@@ -2483,14 +1971,13 @@ def run_streaming_ivm(
             .agg(F.sum("n_rows").cast("long").alias("n_rows"))
         ).localCheckpoint(eager=True)
         merged_store_apply(
-            dview, v_dir, batch_id,
-            additive_combine(["priority", "flag"], ["n_rows"]),
+            dview, v_dir, batch_id, Cells("view", ("priority", "flag")).combine
         )
         merged_store_apply(
-            da, a_dir, batch_id, additive_combine(["k", "priority"], ["na"])
+            da, a_dir, batch_id, Cells("a_state", ("k", "priority")).combine
         )
         merged_store_apply(
-            db, b_dir, batch_id, additive_combine(["k", "flag"], ["nb"])
+            db, b_dir, batch_id, Cells("b_state", ("k", "flag")).combine
         )
 
     return _drain(feed, fold, checkpoint_dir)
@@ -2507,76 +1994,6 @@ def ivm_view_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def run_streaming_dp_ledger(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """X696 — live differential-privacy ledger (X695's streaming
-    face): per-source release counts are purely additive, so the
-    versioned merged store folds each micro-batch's counts with
-    ``additive_combine`` and the accountant (plans/round9b.
-    dp_accountant_df) reads ε(δ) straight off the state — a privacy
-    budget dashboard that never rescans history, with the store's
-    exactly-once commit protocol guarding against double-spending a
-    replayed batch (the failure mode a privacy ledger cannot have)."""
-    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        part = batch.groupBy("source").agg(F.count("*").alias("t"))
-        merged_store_apply(
-            part, store_dir, batch_id, additive_combine(["source"], ["t"])
-        )
-
-    return _drain(docs, fold, checkpoint_dir)
-
-
-def dp_ledger_from_store(cells: DataFrame) -> DataFrame:
-    """Store (source, t) → the q_dp_accounting output shape."""
-    from ..plans.round9b import dp_accountant_df
-
-    return dp_accountant_df(cells.select("source", F.col("t").cast("long")))
-
-
-def run_streaming_embedding_drift(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """X707 — live embedding-drift monitor (X704's streaming face):
-    per micro-batch the incoming vectors' projected-and-binned cell
-    counts (proj × bin × half) fold additively into the versioned
-    merged store; the PSI read side is the batch query's own tail
-    (plans/round9c.embedding_drift_from_counts). This is the monitor
-    an embedding service keeps warm: encoder-version drift shows up
-    as a PSI step without rescanning the vector log."""
-    vecs = spark.readStream.schema(_VECS_SCHEMA).parquet(input_dir)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        from ..plans.round9c import embedding_bin_counts
-
-        part = embedding_bin_counts(batch).localCheckpoint(eager=True)
-        merged_store_apply(
-            part,
-            store_dir,
-            batch_id,
-            additive_combine(["proj", "bin", "half"], ["c"]),
-        )
-
-    return _drain(vecs, fold, checkpoint_dir)
-
-
-def embedding_drift_from_store(cells: DataFrame) -> DataFrame:
-    """Store cells → the q_embedding_drift output shape."""
-    from ..plans.round9c import embedding_drift_from_counts
-
-    return embedding_drift_from_counts(
-        cells.select("proj", "bin", "half", F.col("c").cast("long"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # X726 — streaming SPRT monitor (X721's streaming face)
 # ---------------------------------------------------------------------------
@@ -2587,7 +2004,9 @@ _SPRT_STATE_SCHEMA = (
 )
 
 
-def sprt_state_fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
+def sprt_state_fold(
+    existing: DataFrame | None, batch: DataFrame, batch_id: int
+) -> DataFrame:
     """(state-so-far, new events) → new state: per arena, continue
     Wald's LLR walk over the batch's events in (ts, event_id) order.
     State is O(1) per arena: total events t, running successes a, and
@@ -2686,72 +2105,6 @@ def sprt_from_store(cells: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# X735 — streaming count-min sketch store (X723's streaming face)
-# ---------------------------------------------------------------------------
-
-
-def cms_partial(batch: DataFrame) -> DataFrame:
-    """One micro-batch's count-min cell increments: tokens hashed into
-    the d×w grid with the portable md5 token_hash — the same cell law
-    as plans/round10b.q_cms_sketch."""
-    from ..functions import text as _text
-    from ..functions.hashing import token_hash
-    from ..plans.round10b import _CMS_D, _CMS_W
-
-    cnt = (
-        batch.select(F.explode(_text.tokens(F.col("text"))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    jdf = batch.sparkSession.range(_CMS_D).select(
-        F.col("id").cast("int").alias("j")
-    )
-    return (
-        cnt.crossJoin(F.broadcast(jdf))
-        .select(
-            "j",
-            (
-                token_hash(
-                    F.concat(
-                        F.col("j").cast("string"), F.lit("|"), F.col("tok")
-                    )
-                )
-                % _CMS_W
-            ).alias("cell"),
-            "c",
-        )
-        .groupBy("j", "cell")
-        .agg(F.sum("c").alias("cc"))
-    )
-
-
-def run_streaming_cms(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """X735 — the count-min sketch maintained under micro-batch
-    arrival: CMS cells are PURELY ADDITIVE (the sketch's defining
-    mergeability), so the store is merged_store_apply with the
-    additive combine — exactly-once from associativity, no carry
-    state. The read side is the raw (j, cell, cc) grid; any key's
-    estimate is min_j cells[j][h_j(key)], exactly as the batch face.
-
-    Scale: state is d·w cells regardless of history; each batch
-    shuffles only its own token counts."""
-    docs = spark.readStream.schema(_DOCS_SCHEMA).parquet(input_dir)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        part = cms_partial(batch)
-        merged_store_apply(
-            part, store_dir, batch_id, additive_combine(["j", "cell"], ["cc"])
-        )
-
-    return _drain(docs, fold, checkpoint_dir)
-
-
-# ---------------------------------------------------------------------------
 # X761 streaming face — BOCPD regime monitor store
 # ---------------------------------------------------------------------------
 
@@ -2761,7 +2114,7 @@ _BOCPD_STATE_SCHEMA = (
 )
 
 
-def bocpd_state_fold(existing, batch):
+def bocpd_state_fold(existing, batch, batch_id):
     """(state-so-far, new events) → new state: per event_type, resume
     the exact integer BOCPD fold (plans/round11g.bocpd_fold) from the
     stored (mass, ns, ones, cp, prev-MAP) vectors over the batch's
@@ -2860,7 +2213,7 @@ _SS_STATE_SCHEMA = (
 )
 
 
-def space_saving_state_fold(existing, batch):
+def space_saving_state_fold(existing, batch, batch_id):
     """(state-so-far, new events) → new state: per event_type, resume
     the Space-Saving counter fold (plans/round11d.space_saving_fold's
     update rule) from the stored (item, count, err) slots over the
@@ -2947,7 +2300,7 @@ def space_saving_from_store(cells: DataFrame) -> DataFrame:
 _THETA_STATE_SCHEMA = "et string, hv long"
 
 
-def theta_state_fold(existing, batch):
+def theta_state_fold(existing, batch, batch_id):
     """(state-so-far, new events) → new state: per stream, the K
     smallest portable hashes of the users seen so far.  KMV state is a
     pure SET — merge = union + re-trim — so the fold is entirely
@@ -2986,7 +2339,9 @@ def run_streaming_theta(
     store_dir: str,
     checkpoint_dir: str,
 ) -> StreamingQuery:
-    """X787 — X784's streaming face (distinct from X411's per-flag KMV store run_streaming_kmv: this one persists the SET-ALGEBRA sketch cells): the live distinct-cardinality
+    """X787 — X784's streaming face (distinct from X411's per-flag KMV
+    store, plans/round4t.KMV: this one persists the SET-ALGEBRA sketch
+    cells): the live distinct-cardinality
     board.  K hashes per stream maintained across micro-batches; the
     stored cells ARE theta sketches, so the read path answers
     per-stream, union, and intersection cardinalities at any moment
@@ -3036,11 +2391,7 @@ def dedup_clusters_batch_fn(sig_store_dir: str, label_store_dir: str):
     from ..operators import lsh
     from ..operators.graph import connected_components
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if (
-            last := merged_store_last_applied(label_store_dir)
-        ) is not None and last >= batch_id:
-            return
+    def fold(prior_labels: DataFrame | None, batch: DataFrame, batch_id: int):
         sess = batch.sparkSession
         bands = lsh.band_rows(lsh.shingle_sets(batch), "hs").localCheckpoint(
             eager=True
@@ -3054,7 +2405,6 @@ def dedup_clusters_batch_fn(sig_store_dir: str, label_store_dir: str):
         )
         idempotent_upsert(bands, batch_id, sig_store_dir)
 
-        prior_labels = merged_store_read(sess, label_store_dir)
         batch_vs = batch.select(F.col("doc_id").alias("v")).distinct()
         if prior_labels is None:
             vertices = batch_vs
@@ -3071,12 +2421,9 @@ def dedup_clusters_batch_fn(sig_store_dir: str, label_store_dir: str):
         labels, _rounds = connected_components(
             vertices, all_edges, shuffle_partitions=4
         )
-        labels = labels.select(
-            "v", F.col("component").alias("comp")
-        ).localCheckpoint(eager=True)
-        merged_store_write(labels, label_store_dir, batch_id)
+        return labels.select("v", F.col("component").alias("comp"))
 
-    return fold
+    return versioned_fold_batch_fn(label_store_dir, fold)
 
 
 def run_streaming_dedup_clusters(

@@ -156,51 +156,6 @@ def test_facility_location_greedy_invariants(spark, sf_dir):
         )
 
 
-def test_streaming_pass_counts_incremental_equals_batch(spark, tmp_path):
-    """X659: the additive (n, c) store, read through the shared pass@k
-    arithmetic, must equal the batch q_pass_at_k on events-so-far
-    after every wave."""
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import (
-        merged_store_read,
-        pass_at_k_from_store,
-        run_streaming_pass_counts,
-    )
-
-    events = load(spark, "/root/testdata/sf0.001", "events")
-    wave1 = events.filter(F.col("event_id") % 2 == 0)
-    wave2 = events.filter(F.col("event_id") % 2 == 1)
-
-    inp = str(tmp_path / "in")
-    store = str(tmp_path / "counts")
-    ckpt = str(tmp_path / "ckpt")
-
-    def store_pass():
-        return {
-            tuple(r)
-            for r in pass_at_k_from_store(
-                merged_store_read(spark, store)
-            ).collect()
-        }
-
-    def batch_pass(d, tag):
-        cum = str(tmp_path / f"cum_{tag}")
-        d.write.mode("overwrite").parquet(f"{cum}/events.parquet")
-        return {tuple(r) for r in q_pass_at_k(spark, cum).collect()}
-
-    wave1.write.mode("append").parquet(inp)
-    assert run_streaming_pass_counts(spark, inp, store, ckpt).awaitTermination(
-        180
-    )
-    assert store_pass() == batch_pass(wave1, "w1")
-
-    wave2.write.mode("append").parquet(inp)
-    assert run_streaming_pass_counts(spark, inp, store, ckpt).awaitTermination(
-        180
-    )
-    assert store_pass() == batch_pass(events, "all")
-
-
 def test_inbatch_collision_vs_expectation(spark, sf_dir):
     from kafka_stream_spark.plans.round9 import q_inbatch_collision
 
@@ -284,48 +239,6 @@ def test_neyman_allocation_sums_to_budget(spark, sf_dir):
     assert abs(sum(r["n_alloc"] for r in rows) - _NEYMAN_BUDGET) <= len(rows)
     for r in rows:
         assert r["s_h"] >= 0 and r["n_alloc"] >= 0
-
-
-def test_streaming_data_map_incremental_equals_batch(spark, tmp_path):
-    """X666: the additive (user, day) cell store, read through the
-    shared cartography arithmetic, must equal the batch q_data_map on
-    events-so-far after every wave."""
-    from kafka_stream_spark.plans.round9 import q_data_map
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import (
-        data_map_from_store,
-        merged_store_read,
-        run_streaming_data_map,
-    )
-
-    events = load(spark, "/root/testdata/sf0.001", "events")
-    wave1 = events.filter(F.col("event_id") % 2 == 0)
-    wave2 = events.filter(F.col("event_id") % 2 == 1)
-
-    inp = str(tmp_path / "in")
-    store = str(tmp_path / "cells")
-    ckpt = str(tmp_path / "ckpt")
-
-    def store_map():
-        return {
-            tuple(r)
-            for r in data_map_from_store(
-                merged_store_read(spark, store)
-            ).collect()
-        }
-
-    def batch_map(d, tag):
-        cum = str(tmp_path / f"cum_{tag}")
-        d.write.mode("overwrite").parquet(f"{cum}/events.parquet")
-        return {tuple(r) for r in q_data_map(spark, cum).collect()}
-
-    wave1.write.mode("append").parquet(inp)
-    assert run_streaming_data_map(spark, inp, store, ckpt).awaitTermination(180)
-    assert store_map() == batch_map(wave1, "w1")
-
-    wave2.write.mode("append").parquet(inp)
-    assert run_streaming_data_map(spark, inp, store, ckpt).awaitTermination(180)
-    assert store_map() == batch_map(events, "all")
 
 
 def test_mmr_rerank_diversity_property(spark, sf_dir):
@@ -502,48 +415,6 @@ def test_verbosity_bias_bounds(spark, sf_dir):
     # i.e. the query detects the bias it exists to detect
     assert r["frac_chosen_longer"] > 0.5
     assert r["mean_len_gap"] > 0
-
-
-def test_streaming_funnel_incremental_equals_batch(spark, tmp_path):
-    """X678: the additive per-stage store, read through the shared
-    funnel arithmetic, must equal the batch q_curation_funnel on
-    documents-so-far after every wave."""
-    from kafka_stream_spark.plans.round9 import q_curation_funnel
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import (
-        funnel_from_store,
-        merged_store_read,
-        run_streaming_funnel,
-    )
-
-    docs = load(spark, "/root/testdata/sf0.001", "documents")
-    wave1 = docs.filter(F.col("doc_id") % 2 == 0)
-    wave2 = docs.filter(F.col("doc_id") % 2 == 1)
-
-    inp = str(tmp_path / "in")
-    store = str(tmp_path / "stages")
-    ckpt = str(tmp_path / "ckpt")
-
-    def store_funnel():
-        return {
-            tuple(r)
-            for r in funnel_from_store(
-                merged_store_read(spark, store)
-            ).collect()
-        }
-
-    def batch_funnel(d, tag):
-        cum = str(tmp_path / f"cum_{tag}")
-        d.write.mode("overwrite").parquet(f"{cum}/documents.parquet")
-        return {tuple(r) for r in q_curation_funnel(spark, cum).collect()}
-
-    wave1.write.mode("append").parquet(inp)
-    assert run_streaming_funnel(spark, inp, store, ckpt).awaitTermination(180)
-    assert store_funnel() == batch_funnel(wave1, "w1")
-
-    wave2.write.mode("append").parquet(inp)
-    assert run_streaming_funnel(spark, inp, store, ckpt).awaitTermination(180)
-    assert store_funnel() == batch_funnel(docs, "all")
 
 
 def test_knn_shapley_efficiency_axiom(spark, sf_dir):

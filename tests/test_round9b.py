@@ -473,46 +473,6 @@ def test_dp_accounting_monotone_in_releases(spark, sf_dir):
         assert abs(r["eps"] - want) < 1e-5
 
 
-def test_streaming_dp_ledger_incremental_equals_batch(spark, tmp_path):
-    """X696: the additive release-count store read through the shared
-    accountant must equal the batch q_dp_accounting on docs-so-far."""
-    from kafka_stream_spark.plans.round9b import dp_accountant_df
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import (
-        dp_ledger_from_store,
-        merged_store_read,
-        run_streaming_dp_ledger,
-    )
-
-    docs = load(spark, "/root/testdata/sf0.001", "documents")
-    w1 = docs.filter(F.col("doc_id") % 2 == 0)
-    w2 = docs.filter(F.col("doc_id") % 2 == 1)
-    inp, store, ckpt = (
-        str(tmp_path / "in"),
-        str(tmp_path / "dp"),
-        str(tmp_path / "ckpt"),
-    )
-
-    def store_eps():
-        return {
-            tuple(r)
-            for r in dp_ledger_from_store(
-                merged_store_read(spark, store)
-            ).collect()
-        }
-
-    def batch_eps(d):
-        rel = d.groupBy("source").agg(F.count("*").cast("long").alias("t"))
-        return {tuple(r) for r in dp_accountant_df(rel).collect()}
-
-    w1.write.mode("append").parquet(inp)
-    assert run_streaming_dp_ledger(spark, inp, store, ckpt).awaitTermination(180)
-    assert store_eps() == batch_eps(w1)
-    w2.write.mode("append").parquet(inp)
-    assert run_streaming_dp_ledger(spark, inp, store, ckpt).awaitTermination(180)
-    assert store_eps() == batch_eps(docs)
-
-
 def test_sinkhorn_identity_is_minimal(spark, sf_dir):
     """OT distance of a distribution to itself under Sinkhorn scaling
     approaches the entropic floor: every per-source distance must be

@@ -74,57 +74,6 @@ def test_bon_monotone_in_n_and_bounded(spark, sf_dir):
         assert stats[et]["lo"] - 1e-6 <= d[max(d)] <= stats[et]["hi"] + 1e-6
 
 
-def test_streaming_embedding_drift_incremental_equals_batch(spark, tmp_path):
-    """X707: the additive drift-cell store read through the shared PSI
-    arithmetic must equal the batch q_embedding_drift on vectors-so-far
-    after every wave."""
-    from kafka_stream_spark.plans.round9c import (
-        embedding_bin_counts,
-        embedding_drift_from_counts,
-    )
-    from kafka_stream_spark.streaming.pipeline import (
-        embedding_drift_from_store,
-        merged_store_read,
-        run_streaming_embedding_drift,
-    )
-
-    emb = load(spark, "/root/testdata/sf0.001", "embeddings")
-    w1 = emb.filter(F.col("vec_id") % 4 < 2)
-    w2 = emb.filter(F.col("vec_id") % 4 >= 2)
-    inp, store, ckpt = (
-        str(tmp_path / "in"),
-        str(tmp_path / "drift"),
-        str(tmp_path / "ckpt"),
-    )
-
-    def store_psi():
-        return {
-            tuple(r)
-            for r in embedding_drift_from_store(
-                merged_store_read(spark, store)
-            ).collect()
-        }
-
-    def batch_psi(d):
-        return {
-            tuple(r)
-            for r in embedding_drift_from_counts(
-                embedding_bin_counts(d)
-            ).collect()
-        }
-
-    w1.write.mode("append").parquet(inp)
-    assert run_streaming_embedding_drift(spark, inp, store, ckpt).awaitTermination(
-        180
-    )
-    assert store_psi() == batch_psi(w1)
-    w2.write.mode("append").parquet(inp)
-    assert run_streaming_embedding_drift(spark, inp, store, ckpt).awaitTermination(
-        180
-    )
-    assert store_psi() == batch_psi(emb)
-
-
 def test_rasch_difficulty_anticorrelates_with_success(spark, sf_dir):
     """Rasch identification: difficulties are sum-zero-centered and
     ordered OPPOSITE to empirical success (harder item ⇔ lower p),

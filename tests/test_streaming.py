@@ -441,132 +441,6 @@ def test_streaming_corpus_build_incremental_equals_batch(spark, tmp_path):
     assert stored_cont(335) is True  # retro-recheck flipped it
 
 
-def test_streaming_mixture_counts_incremental_equals_batch(spark, tmp_path):
-    """The streaming (source, lang) count store, read through the shared
-    weight arithmetic, must equal the batch q_mixture_weights on
-    documents-so-far after every wave."""
-    from kafka_stream_spark.plans.llm_ext import q_mixture_weights
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import (
-        mixture_weights_from_counts,
-        run_streaming_mixture_counts,
-    )
-
-    docs = load(spark, "/root/testdata/sf0.01", "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    wave1 = docs.filter(F.col("doc_id") % 2 == 0)
-    wave2 = docs.filter(F.col("doc_id") % 2 == 1)
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "counts")
-    ckpt = str(tmp_path / "ckpt")
-
-    def store_weights():
-        return {
-            tuple(r)
-            for r in mixture_weights_from_counts(
-                spark.read.parquet(out)
-            ).collect()
-        }
-
-    def batch_weights(d):
-        cum = str(tmp_path / f"cum_{d.count()}")
-        d.write.mode("overwrite").parquet(f"{cum}/documents.parquet")
-        return {tuple(r) for r in q_mixture_weights(spark, cum).collect()}
-
-    wave1.write.mode("append").parquet(inp)
-    assert run_streaming_mixture_counts(spark, inp, out, ckpt).awaitTermination(180)
-    assert store_weights() == batch_weights(wave1)
-
-    wave2.write.mode("append").parquet(inp)
-    assert run_streaming_mixture_counts(spark, inp, out, ckpt).awaitTermination(180)
-    assert store_weights() == batch_weights(docs)
-
-
-def test_streaming_process_map_incremental_equals_batch(spark, tmp_path):
-    """The streaming DFG edge store, read through the shared
-    dfg_from_partials arithmetic, must equal the batch q_process_map
-    on events-so-far after every wave (waves split by user so sessions
-    never straddle micro-batches)."""
-    from kafka_stream_spark.plans.round4t import (
-        dfg_from_partials,
-        q_process_map,
-    )
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import (
-        run_streaming_process_map,
-    )
-
-    events = load(spark, "/root/testdata/sf0.001", "events")
-    wave1 = events.filter(F.col("user_id") % 2 == 0)
-    wave2 = events.filter(F.col("user_id") % 2 == 1)
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "edges")
-    ckpt = str(tmp_path / "ckpt")
-
-    def store_map():
-        return {
-            tuple(r)
-            for r in dfg_from_partials(merged_store_read(spark, out)).collect()
-        }
-
-    def batch_map(d, tag):
-        cum = str(tmp_path / f"cum_{tag}")
-        d.write.mode("overwrite").parquet(f"{cum}/events.parquet")
-        return {tuple(r) for r in q_process_map(spark, cum).collect()}
-
-    wave1.write.mode("append").parquet(inp)
-    assert run_streaming_process_map(spark, inp, out, ckpt).awaitTermination(180)
-    assert store_map() == batch_map(wave1, "w1")
-
-    wave2.write.mode("append").parquet(inp)
-    assert run_streaming_process_map(spark, inp, out, ckpt).awaitTermination(180)
-    assert store_map() == batch_map(events, "all")
-
-
-def test_streaming_kmv_incremental_equals_batch(spark, tmp_path):
-    """The streaming KMV store's estimates must EXACTLY equal the batch
-    sketch on rows-so-far after every wave — keep-k-smallest is closed
-    under union, so the merge is lossless for the estimate."""
-    from kafka_stream_spark.plans.round4t import (
-        kmv_estimates,
-        kmv_hashes,
-        kmv_keep,
-    )
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import run_streaming_kmv
-
-    li = load(spark, "/root/testdata/sf0.001", "lineitem")
-    wave1 = li.filter(F.col("l_orderkey") % 2 == 0)
-    wave2 = li.filter(F.col("l_orderkey") % 2 == 1)
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "sketch")
-    ckpt = str(tmp_path / "ckpt")
-
-    def store_est():
-        return {
-            tuple(r)
-            for r in kmv_estimates(merged_store_read(spark, out)).collect()
-        }
-
-    def batch_est(d):
-        return {
-            tuple(r)
-            for r in kmv_estimates(kmv_keep(kmv_hashes(d))).collect()
-        }
-
-    wave1.write.mode("append").parquet(inp)
-    assert run_streaming_kmv(spark, inp, out, ckpt).awaitTermination(180)
-    assert store_est() == batch_est(wave1)
-
-    wave2.write.mode("append").parquet(inp)
-    assert run_streaming_kmv(spark, inp, out, ckpt).awaitTermination(180)
-    assert store_est() == batch_est(li)
-
-
 def test_streaming_semantic_dedup_incremental_equals_batch(spark, tmp_path, sf_dir):
     """The streaming SemDeDup store (broadcast codebook assignment +
     cluster-bounded verify against the accumulating member store) must
@@ -628,64 +502,6 @@ def test_streaming_semantic_dedup_incremental_equals_batch(spark, tmp_path, sf_d
         assert got == want, f"wave ending at {upto}: {len(got)} vs {len(want)}"
         assert len(got) > seen
         seen = len(got)
-
-
-def test_streaming_heavy_hitters_incremental_equals_batch(spark, tmp_path, sf_dir):
-    """The mergeable count store must reproduce batch q_heavy_hitters
-    (top-3 tokens per language) on rows-so-far after every wave; ranks
-    are a view over the store, never persisted state."""
-    from pyspark.sql import Window
-
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import (
-        run_streaming_heavy_hitters,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    waves = [
-        d.filter(F.col("doc_id") % 3 == i) for i in range(3)
-    ]
-    inp = str(tmp_path / "in")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-
-    def top3_from_store():
-        w = Window.partitionBy("lang").orderBy(
-            F.col("cnt").desc(), F.col("token")
-        )
-        return {
-            (r["lang"], r["token"], r["cnt"], r["rk"])
-            for r in merged_store_read(spark, store)
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= 3)
-            .collect()
-        }
-
-    def batch_top3(df):
-        from kafka_stream_spark.functions import text
-
-        w = Window.partitionBy("lang").orderBy(
-            F.col("cnt").desc(), F.col("token")
-        )
-        return {
-            (r["lang"], r["token"], r["cnt"], r["rk"])
-            for r in df.select(
-                "lang", F.explode(text.tokens(F.col("text"))).alias("token")
-            )
-            .groupBy("lang", "token")
-            .agg(F.count("*").alias("cnt"))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= 3)
-            .collect()
-        }
-
-    so_far = None
-    for wave in waves:
-        wave.write.mode("append").parquet(inp)
-        so_far = wave if so_far is None else so_far.unionByName(wave)
-        q = run_streaming_heavy_hitters(spark, inp, store, ckpt)
-        assert q.awaitTermination(240)
-        assert top3_from_store() == batch_top3(so_far)
 
 
 def test_streaming_late_router_splits_exactly(spark, tmp_path):
@@ -898,11 +714,11 @@ def test_streaming_store_replay_idempotent(spark, tmp_path, sf_dir):
     """Simulated foreachBatch at-least-once replay (restart between the
     store write and the checkpoint commit): invoking a store's batch
     function a second time with the SAME batch_id must leave the store
-    and the result log byte-identical — additive stores must not
-    double-count, append stores must not double-append."""
+    and the result log byte-identical — append stores must not
+    double-append. (The additive stores' replay is pinned per spec in
+    tests/test_store_specs.py.)"""
     from kafka_stream_spark.sources.tables import load
     from kafka_stream_spark.streaming.pipeline import (
-        heavy_hitters_batch_fn,
         near_dedup_batch_fn,
         semantic_dedup_batch_fn,
     )
@@ -920,21 +736,6 @@ def test_streaming_store_replay_idempotent(spark, tmp_path, sf_dir):
             repr(sorted(r.asDict().items()))
             for r in spark.read.parquet(path).collect()
         )
-
-    # additive (read-modify-write) store: heavy hitters
-    def snap_merged(path):
-        return sorted(
-            repr(sorted(r.asDict().items()))
-            for r in merged_store_read(spark, path).collect()
-        )
-
-    hh_store = str(tmp_path / "hh")
-    hh = heavy_hitters_batch_fn(hh_store)
-    hh(w1, 0)
-    hh(w2, 1)
-    before = snap_merged(hh_store)
-    hh(w2, 1)  # replay of the last batch
-    assert snap_merged(hh_store) == before
 
     # append-style store: MinHash near-dedup signatures + results
     nd_store = str(tmp_path / "nd_store")
@@ -1049,77 +850,6 @@ def test_streaming_semantic_dedup_routed_incremental_equals_batch(
     fn(waves[-1], 2)
     assert snap(store) == before_store
     assert snap(out) == before_out
-
-
-def test_streaming_lm_counts_incremental_equals_batch(spark, tmp_path):
-    """The Stupid-Backoff count store (bigram + two-sided unigram
-    counts, merged by addition) must reproduce the batch
-    q_stupid_backoff per-source scores on documents-so-far after every
-    wave, through the shared read-side scoring arithmetic — and
-    replaying a batch must not double-count."""
-    from kafka_stream_spark.plans.round6 import q_stupid_backoff
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import (
-        lm_counts_batch_fn,
-        lm_score_with_counts,
-        run_streaming_lm_counts,
-    )
-
-    docs = load(spark, "/root/testdata/sf0.01", "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    wave1 = docs.filter(F.col("doc_id") % 2 == 0)
-    wave2 = docs.filter(F.col("doc_id") % 2 == 1)
-
-    inp = str(tmp_path / "in")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-
-    def store_scores(seen):
-        bg = merged_store_read(spark, f"{store}/bigrams")
-        uni = merged_store_read(spark, f"{store}/unigrams")
-        return {
-            tuple(r)
-            for r in lm_score_with_counts(seen, bg, uni).collect()
-        }
-
-    def batch_scores(d, tag):
-        cum = str(tmp_path / f"cum_{tag}")
-        d.write.mode("overwrite").parquet(f"{cum}/documents.parquet")
-        return {tuple(r) for r in q_stupid_backoff(spark, cum).collect()}
-
-    wave1.write.mode("append").parquet(inp)
-    assert run_streaming_lm_counts(spark, inp, store, ckpt).awaitTermination(240)
-    assert store_scores(wave1) == batch_scores(wave1, "w1")
-
-    wave2.write.mode("append").parquet(inp)
-    assert run_streaming_lm_counts(spark, inp, store, ckpt).awaitTermination(240)
-    assert store_scores(docs) == batch_scores(docs, "all")
-
-    # replay: re-apply wave2 under its committed batch_id
-    def snap(path):
-        return sorted(
-            repr(sorted(r.asDict().items()))
-            for r in merged_store_read(spark, path).collect()
-        )
-
-    before_b = snap(f"{store}/bigrams")
-    before_u = snap(f"{store}/unigrams")
-    lm_counts_batch_fn(store)(wave2, 1)
-    assert snap(f"{store}/bigrams") == before_b
-    assert snap(f"{store}/unigrams") == before_u
-
-    # partial-crash completion: wipe the unigram store as if the crash
-    # hit between the two sub-store commits, then replay — the bigram
-    # guard must NOT mask the unigram merge (it must be rebuilt)
-    import shutil
-
-    shutil.rmtree(f"{store}/unigrams")
-    lm_counts_batch_fn(store)(wave2, 1)
-    # bigrams untouched (still guarded), unigrams re-merged from wave2
-    assert snap(f"{store}/bigrams") == before_b
-    rebuilt = merged_store_read(spark, f"{store}/unigrams")
-    assert rebuilt is not None and rebuilt.count() > 0
 
 
 def test_streaming_sequence_pack_capacity_and_replay(spark, tmp_path):
@@ -1242,99 +972,6 @@ def test_merged_store_commit_point_semantics(spark, tmp_path):
         for r in merged_store_read(spark, store, before=1).collect()
     }
     assert asof == {("a", 1), ("b", 2)}
-
-
-def test_streaming_grpo_moments_incremental_equals_batch(spark, tmp_path):
-    """The streaming GRPO moments store, read through the shared
-    advantage arithmetic, must equal the batch q_grpo_advantage on
-    events-so-far after every wave."""
-    from kafka_stream_spark.plans.round8b import q_grpo_advantage
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import (
-        grpo_from_moments,
-        run_streaming_grpo_moments,
-    )
-
-    events = load(spark, "/root/testdata/sf0.001", "events")
-    wave1 = events.filter(F.col("event_id") % 2 == 0)
-    wave2 = events.filter(F.col("event_id") % 2 == 1)
-
-    inp = str(tmp_path / "in")
-    store = str(tmp_path / "moments")
-    ckpt = str(tmp_path / "ckpt")
-
-    def store_adv():
-        return {
-            tuple(r)
-            for r in grpo_from_moments(
-                spark.read.parquet(inp), merged_store_read(spark, store)
-            ).collect()
-        }
-
-    def batch_adv(d, tag):
-        cum = str(tmp_path / f"cum_{tag}")
-        d.write.mode("overwrite").parquet(f"{cum}/events.parquet")
-        return {tuple(r) for r in q_grpo_advantage(spark, cum).collect()}
-
-    wave1.write.mode("append").parquet(inp)
-    assert run_streaming_grpo_moments(spark, inp, store, ckpt).awaitTermination(
-        180
-    )
-    assert store_adv() == batch_adv(wave1, "w1")
-
-    wave2.write.mode("append").parquet(inp)
-    assert run_streaming_grpo_moments(spark, inp, store, ckpt).awaitTermination(
-        180
-    )
-    assert store_adv() == batch_adv(events, "all")
-
-
-def test_streaming_best_of_n_incremental_equals_batch(spark, tmp_path):
-    """The rank-merge top-2 store + additive integer bar store, read
-    through the shared curation arithmetic, must equal the batch
-    q_best_of_n on events-so-far after every wave — the non-additive
-    (order-semilattice) flavor of the merged-store discipline."""
-    from kafka_stream_spark.plans.round8b import q_best_of_n
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import (
-        best_of_n_from_store,
-        run_streaming_best_of_n,
-    )
-
-    events = load(spark, "/root/testdata/sf0.001", "events")
-    wave1 = events.filter(F.col("event_id") % 2 == 0)
-    wave2 = events.filter(F.col("event_id") % 2 == 1)
-
-    inp = str(tmp_path / "in")
-    top2 = str(tmp_path / "top2")
-    bar = str(tmp_path / "bar")
-    ckpt = str(tmp_path / "ckpt")
-
-    def store_sel():
-        return {
-            tuple(r)
-            for r in best_of_n_from_store(
-                merged_store_read(spark, top2),
-                merged_store_read(spark, bar),
-            ).collect()
-        }
-
-    def batch_sel(d, tag):
-        cum = str(tmp_path / f"cum_{tag}")
-        d.write.mode("overwrite").parquet(f"{cum}/events.parquet")
-        return {tuple(r) for r in q_best_of_n(spark, cum).collect()}
-
-    wave1.write.mode("append").parquet(inp)
-    assert run_streaming_best_of_n(
-        spark, inp, top2, bar, ckpt
-    ).awaitTermination(180)
-    assert store_sel() == batch_sel(wave1, "w1")
-
-    wave2.write.mode("append").parquet(inp)
-    assert run_streaming_best_of_n(
-        spark, inp, top2, bar, ckpt
-    ).awaitTermination(180)
-    assert store_sel() == batch_sel(events, "all")
 
 
 def test_elo_store_crash_resume(spark, tmp_path):
@@ -1482,55 +1119,3 @@ def test_streaming_sprt_incremental_equals_batch_and_crash(spark, tmp_path):
     assert snap() == s2_good
     assert store_out() == batch_out(events, "all2")
 
-
-def test_streaming_cms_incremental_equals_batch(spark, tmp_path):
-    """X735: the streamed count-min cells must equal the batch-built
-    sketch over the union of waves after every wave (additive store —
-    exactly-once from associativity), and a replayed committed batch
-    must be a no-op."""
-    from kafka_stream_spark.sources.tables import load
-    from kafka_stream_spark.streaming.pipeline import (
-        cms_partial,
-        merged_store_read,
-        run_streaming_cms,
-    )
-
-    docs = load(spark, "/root/testdata/sf0.001", "documents")
-    wave1 = docs.filter(F.col("doc_id") % 2 == 0)
-    wave2 = docs.filter(F.col("doc_id") % 2 == 1)
-
-    inp = str(tmp_path / "in")
-    store = str(tmp_path / "cms")
-    ckpt = str(tmp_path / "ckpt")
-
-    def store_cells():
-        return {
-            (r["j"], r["cell"]): r["cc"]
-            for r in merged_store_read(spark, store).collect()
-        }
-
-    def batch_cells(d):
-        return {
-            (r["j"], r["cell"]): r["cc"] for r in cms_partial(d).collect()
-        }
-
-    wave1.write.mode("append").parquet(inp)
-    assert run_streaming_cms(spark, inp, store, ckpt).awaitTermination(180)
-    assert store_cells() == batch_cells(wave1)
-
-    wave2.write.mode("append").parquet(inp)
-    assert run_streaming_cms(spark, inp, store, ckpt).awaitTermination(180)
-    assert store_cells() == batch_cells(docs)
-
-    # replay of a committed batch id: guarded no-op
-    from kafka_stream_spark.streaming.pipeline import (
-        additive_combine,
-        merged_store_apply,
-    )
-
-    before = store_cells()
-    ran = merged_store_apply(
-        cms_partial(wave2), store, 0, additive_combine(["j", "cell"], ["cc"])
-    )
-    assert not ran
-    assert store_cells() == before
